@@ -138,7 +138,7 @@ object LedgerStoreProbeBench {
       // one may already be absorbed (a prior invocation's end state) —
       // rebuild rather than snapshot a polluted root
       val pristine = s"$root.pristine"
-      if (!graft.fs.Fs.exists(s"$pristine/_CURRENT") &&
+      if (CurationLedgerStore.currentVersion(pristine).isEmpty &&
           CurationLedgerStore.currentVersion(root).nonEmpty)
         graft.fs.Fs.deleteRecursive(root)
       val buildSec =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.fs.Fs
+import graft.store.VersionedRoot
 
 /** Versioned ANN index store — the durable, atomically-swappable home
   * of the embedding family's FULL index state, closing the drift loop
@@ -14,7 +15,7 @@ import graft.fs.Fs
   * adjacency (t131), all swapped together so a reader never sees a
   * centroid set paired with another version's buckets.
   *
-  * Layout (the [[graft.sinks.ParquetMergeSink]] idiom — versioned dirs,
+  * Layout (a [[graft.store.VersionedRoot]] — versioned dirs,
   * committed-only listing, atomic `_CURRENT` pointer; single-writer
   * discipline per store root, as the reference's FIFO groups enforce
   * per table, cf. /root/reference/second_lambda_function.py:44-88):
@@ -125,10 +126,7 @@ object AnnIndexStore {
   /** Recluster decision: what [[reclusterIfDrifted]] saw and did. */
   final case class Decision(driftPpm: Long, reclustered: Boolean, version: Long)
 
-  private def ptr(root: String): String = Fs.child(root, "_CURRENT")
-
-  private def paramsPath(versionDir: String): String =
-    Fs.child(versionDir, "_PARAMS")
+  import VersionedRoot.{commit, nextVersion, requireCurrent, versionDir}
 
   private def driftBasePath(versionDir: String): String =
     Fs.child(versionDir, "_DRIFTBASE")
@@ -185,17 +183,6 @@ object AnnIndexStore {
     m.iterator.collect { case (c, (n, s)) if n > 0 => (c, n, s) }.toSeq.sortBy(_._1)
   }
 
-  private def renderParams(p: Params): String =
-    Seq("nCells" -> p.nCells, "cellTarget" -> p.cellTarget,
-      "iters" -> p.iters, "numBuckets" -> p.numBuckets, "m" -> p.m,
-      "efConstruction" -> p.efConstruction,
-      "maxRecordsPerFile" -> p.maxRecordsPerFile,
-      "multiAssign" -> p.multiAssign, "subCells" -> p.subCells,
-      "subTrainCap" -> p.subTrainCap, "pqM" -> p.pqM,
-      "pqKsub" -> p.pqKsub, "idBuckets" -> p.idBuckets,
-      "maxFlatCells" -> p.maxFlatCells)
-      .map { case (k, v) => s"$k=$v" }.mkString("\n")
-
   /** The CURRENT version's build/maintenance parameters, from the
     * `_PARAMS` sidecar every [[build]]/[[appendDelta]]/[[compact]]
     * lands — the store REMEMBERS how it was built, so maintenance
@@ -204,10 +191,7 @@ object AnnIndexStore {
     * dfHeadSize-refreeze lesson from the dedup store, applied here).
     * None for stores created before the sidecar existed. */
   def params(root: String): Option[Params] =
-    currentPath(root).map(paramsPath).filter(Fs.exists).map { pp =>
-      val kv = Fs.readString(pp).split("\n").iterator
-        .map(_.trim).filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
+    VersionedRoot.currentParams(root).map { kv =>
       Params(kv("nCells").toInt, kv("cellTarget").toLong, kv("iters").toInt,
         kv("numBuckets").toInt, kv("m").toInt, kv("efConstruction").toInt,
         kv("maxRecordsPerFile").toLong, kv("multiAssign").toInt,
@@ -223,8 +207,7 @@ object AnnIndexStore {
       // distinguish "no store at all" from "legacy store without the
       // sidecar" — the former is the caller's real problem and the
       // sidecar message would send them chasing the wrong cause
-      if (currentPath(root).isEmpty)
-        throw new IllegalStateException(s"no committed version under $root")
+      requireCurrent(root)
       throw new IllegalStateException(
         s"$op: store $root has no _PARAMS sidecar (built before params " +
           "persistence) — pass Params explicitly")
@@ -232,34 +215,21 @@ object AnnIndexStore {
 
   /** Committed versions, ascending (a version counts only once its
     * `_SUCCESS` marker exists — an in-flight build is invisible). */
-  def versions(root: String): Seq[Long] =
-    if (!Fs.exists(root)) Seq.empty
-    else Fs.list(root).map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") && s.drop(1).nonEmpty &&
-          s.drop(1).forall(_.isDigit) &&
-          Fs.exists(Fs.child(Fs.child(root, s), "_SUCCESS")) => s.drop(1).toLong }
-      .sorted
+  def versions(root: String): Seq[Long] = VersionedRoot.versions(root)
 
-  def currentVersion(root: String): Option[Long] =
-    if (Fs.exists(ptr(root))) Some(Fs.readString(ptr(root)).trim.drop(1).toLong) else None
+  def currentVersion(root: String): Option[Long] = VersionedRoot.currentVersion(root)
 
-  def currentPath(root: String): Option[String] =
-    currentVersion(root).map(v => Fs.child(root, s"v$v"))
-
-  private def vPath(root: String, v: Long) = Fs.child(root, s"v$v")
+  def currentPath(root: String): Option[String] = VersionedRoot.currentPath(root)
 
   /** The current centroid matrix — k rows of dim doubles, driver-side
     * control state (same class as a BPE merge table). */
   def centroids(spark: SparkSession, root: String): Array[(Int, Array[Double])] =
-    Similarity.centroidsOf(spark.read.parquet(
-      Fs.child(currentPath(root).getOrElse(
-        throw new IllegalStateException(s"no committed version under $root")), "centroids")))
+    Similarity.centroidsOf(spark.read.parquet(Fs.child(requireCurrent(root), "centroids")))
 
   /** The current assignment frame (id, vec, cell) — the corpus as the
     * index stores it; full (unpruned) view. */
   def assigned(spark: SparkSession, root: String): DataFrame =
-    graft.sources.PrunedIndex.read(spark, Fs.child(currentPath(root).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root")), "assigned"))
+    graft.sources.PrunedIndex.read(spark, Fs.child(requireCurrent(root), "assigned"))
 
   private def writeVersion(spark: SparkSession, root: String, v: Long,
                            cents: Array[(Int, Array[Double])],
@@ -270,7 +240,7 @@ object AnnIndexStore {
                            vecsById: Option[DataFrame] = None,
                            driftBase: Option[Seq[(Int, Long, Long)]] = None): Long = {
     import spark.implicits._
-    val dir = vPath(root, v)
+    val dir = versionDir(root, v)
     // the version's components are independent frames landing under
     // distinct subdirs — commit markers stay strictly last, so the
     // atomic-swap contract is untouched; overlapping the writes turns
@@ -310,12 +280,10 @@ object AnnIndexStore {
       edges.select(col("cell"), col("src"), col("dst"), col("pos")),
       Fs.child(dir, "graph"), Seq("cell"), p.numBuckets, p.maxRecordsPerFile))
     graft.util.Par.runUnit(writes.result())
-    Fs.writeStringAtomic(paramsPath(dir), renderParams(p))
+    VersionedRoot.writeParams(dir, p)
     driftBase.foreach(db =>
       Fs.writeStringAtomic(driftBasePath(dir), renderDriftBase(db)))
-    Fs.writeStringAtomic(Fs.child(dir, "_SUCCESS"), "")
-    Fs.writeStringAtomic(ptr(root), s"v$v")
-    v
+    commit(root, v)
   }
 
   private def pqBooksPath(versionDir: String): String =
@@ -451,7 +419,7 @@ object AnnIndexStore {
     // otherwise re-derive from the full corpus on every check (the
     // census-head/rank-column lesson applied to the drift monitor)
     val driftBase = collectCellStatsRaw(assignedCk, idCol, vecCol, cents)
-    val v = writeVersion(spark, root, versions(root).lastOption.getOrElse(0L) + 1,
+    val v = writeVersion(spark, root, nextVersion(root),
       cents, assignedCk, edges, idCol, vecCol, p, subCents, pq._1, vecsById,
       Some(driftBase))
     // the build report: multiAssign's storage factor is the recall
@@ -488,8 +456,7 @@ object AnnIndexStore {
   def appendDelta(spark: SparkSession, root: String, delta: DataFrame,
                   idCol: String, vecCol: String, p: Params): Long = {
     import spark.implicits._
-    val cur = currentPath(root).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val cur = requireCurrent(root)
     val cents = centroids(spark, root)
     // hierarchical stores route the delta through the frozen two-level
     // state: coarse argmin, then ONLY the delta's coarse cells'
@@ -551,14 +518,8 @@ object AnnIndexStore {
     val (_, recomputedEdges) = GraphAnn.recomputedGraphEdgesForDelta(spark,
       Fs.child(cur, "graph"), oldTouched, deltaAssignedCk, idCol, vecCol,
       p.m, p.efConstruction)
-    // allocate past BOTH the last committed version and _CURRENT: after
-    // a crash between a writer's _SUCCESS land and its pointer swap,
-    // currentVersion+1 alone would rewrite that committed (marked) dir
-    // in place — a second crash mid-rewrite would then leave a
-    // "committed" version holding mixed content from two writes
-    val v = math.max(versions(root).lastOption.getOrElse(0L),
-      currentVersion(root).get) + 1
-    val dir = vPath(root, v)
+    val v = nextVersion(root)
+    val dir = versionDir(root, v)
     // WRITE I/O is delta-bounded, not O(index): only the touched cells'
     // buckets land new files under the new version dir; untouched
     // buckets' existing files are stitched into the new manifests by
@@ -648,10 +609,8 @@ object AnnIndexStore {
       }
     }
     graft.util.Par.runUnit(tasks.result())
-    Fs.writeStringAtomic(paramsPath(dir), renderParams(p))
-    Fs.writeStringAtomic(Fs.child(dir, "_SUCCESS"), "")
-    Fs.writeStringAtomic(ptr(root), s"v$v")
-    v
+    VersionedRoot.writeParams(dir, p)
+    commit(root, v)
   }
 
   /** [[appendDelta]] under the store's OWN persisted parameters — the
@@ -663,19 +622,10 @@ object AnnIndexStore {
     appendDelta(spark, root, delta, idCol, vecCol,
       storedParams(root, "appendDelta"))
 
-  /** Absolute file entries the given versions' component manifests
-    * reference — the retention dependency set [[vacuum]] honors. */
-  private def referencedEntries(root: String, vs: Seq[Long]): Set[String] =
-    vs.flatMap { v =>
-      Seq("assigned", "graph", "subcents", "codes", "vecsbyid", "idcells")
-        .flatMap { comp =>
-        val mp = Fs.child(Fs.child(vPath(root, v), comp), "_PRUNE_MANIFEST")
-        if (!Fs.exists(mp)) Nil
-        else Fs.readString(mp).split("\n").iterator.filter(_.nonEmpty)
-          .map(l => l.substring(l.indexOf('\t') + 1))
-          .filter(e => e.startsWith("/") || e.contains("://")).toSeq
-      }
-    }.toSet
+  /** Every PrunedIndex component a version dir can hold — the manifest
+    * scan set for [[chainDepth]] and [[vacuum]]. */
+  private val AllComponents: Seq[String] =
+    Seq("assigned", "graph", "subcents", "codes", "vecsbyid", "idcells")
 
   /** Re-land the CURRENT version as a SELF-CONTAINED new version (all
     * buckets' files local — no stitched references into older version
@@ -686,8 +636,7 @@ object AnnIndexStore {
     * (weekly against daily deltas, say). */
   def compact(spark: SparkSession, root: String,
               idCol: String, vecCol: String, p: Params): Long = {
-    val cur = currentPath(root).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val cur = requireCurrent(root)
     val edges = graft.sources.PrunedIndex.read(spark, Fs.child(cur, "graph"))
     val subCents =
       if (Fs.exists(subCentsPath(cur)))
@@ -702,8 +651,7 @@ object AnnIndexStore {
       if (Fs.exists(vecsByIdPath(cur)))
         Some(graft.sources.PrunedIndex.read(spark, vecsByIdPath(cur)))
       else None
-    writeVersion(spark, root,
-      math.max(versions(root).lastOption.getOrElse(0L), currentVersion(root).get) + 1,
+    writeVersion(spark, root, nextVersion(root),
       centroids(spark, root), assigned(spark, root), edges, idCol, vecCol, p,
       subCents, pq, vecsById,
       // compaction changes layout, never content — the drift baseline
@@ -719,23 +667,11 @@ object AnnIndexStore {
 
   /** Stitched reference-chain depth of the CURRENT version: 1 + the
     * number of OTHER version dirs its component manifests still
-    * reference ([[NearDupIndexStore.chainDepth]]'s contract). Depth 1
+    * reference ([[VersionedRoot.chainDepth]]). Depth 1
     * = self-contained (fresh build or just compacted); each
     * [[appendDelta]] can extend the chain by one. Manifest reads only
     * — no data I/O. */
-  def chainDepth(root: String): Int = {
-    val curV = currentVersion(root).getOrElse(return 0)
-    // qualify BOTH sides of the prefix test (the sweepUnreferenced
-    // idiom): a scheme-qualified or relative caller root would
-    // otherwise match no absolutized manifest entry, silently report
-    // depth 1, and starve maybeMaintain forever
-    val qRoot = Fs.qualified(root)
-    val referenced = referencedEntries(root, Seq(curV))
-      .map(Fs.qualified)
-      .filter(_.startsWith(qRoot + "/"))
-      .map(_.stripPrefix(qRoot + "/").takeWhile(_ != '/'))
-    1 + (referenced - s"v$curV").size
-  }
+  def chainDepth(root: String): Int = VersionedRoot.chainDepth(root, AllComponents)
 
   /** Self-triggering maintenance — [[NearDupIndexStore.maybeMaintain]]
     * for the ANN store: [[compact]] when the stitched reference chain
@@ -764,46 +700,13 @@ object AnnIndexStore {
     maybeMaintain(spark, root, idCol, vecCol,
       storedParams(root, "maybeMaintain"), maxChainDepth)
 
-  /** Retention: drop committed versions beyond the newest `keep`
-    * (always sparing the current pointer's), but NEVER a version dir
-    * whose files a retained version's manifest still references
-    * (delta-stitched chains) — those are sparable only after a
-    * [[compact]] folds the current version flat.
-    *
-    * Also sweeps ORPHANED version dirs (the
-    * [[NearDupIndexStore.vacuum]] contract): a crashed build/append
-    * leaves an uncommitted `v<N>` (no `_SUCCESS`) that [[versions]]
-    * hides — without the sweep its files are never garbage-collected.
-    * Single-writer contract: do not run vacuum concurrently with an
-    * in-flight build. Returns the dropped version numbers (orphans
-    * included). */
-  def vacuum(root: String, keep: Int = 1): Seq[Long] = {
-    val all = versions(root)
-    val cur = currentVersion(root)
-    val retained = (all.takeRight(math.max(keep, 1)) ++ cur.toSeq).distinct
-    // qualify BOTH sides of the prefix test (the chainDepth idiom):
-    // manifest entries are absolutized in the writer's root form while
-    // vPath uses the caller's root form — a scheme-qualified or
-    // otherwise differently-spelled root would make every referenced
-    // version dir look unreferenced and DELETE files the current
-    // manifest still stitches in
-    val refs = referencedEntries(root, retained).map(Fs.qualified)
-    val orphans =
-      if (!Fs.exists(root)) Seq.empty[Long]
-      else Fs.list(root).map(_.getPath.getName)
-        .collect { case s if s.startsWith("v") && s.drop(1).nonEmpty &&
-            s.drop(1).forall(_.isDigit) &&
-            !Fs.exists(Fs.child(Fs.child(root, s), "_SUCCESS")) => s.drop(1).toLong }
-        .filterNot(v => cur.contains(v))
-    val dropped = (all.filterNot(retained.contains) ++ orphans).filter { v =>
-      val dir = vPath(root, v)
-      val qDir = Fs.qualified(dir) + "/"
-      val stillReferenced = refs.exists(_.startsWith(qDir))
-      if (!stillReferenced) Fs.deleteRecursive(dir)
-      !stillReferenced
-    }
-    dropped
-  }
+  /** Retention — [[VersionedRoot.vacuum]] over the index components:
+    * drops versions beyond the newest `keep` that no retained manifest
+    * references (a delta-stitched chain is sparable only after a
+    * [[compact]] folds the current version flat), and sweeps stale
+    * orphans of crashed builds/appends. Returns the dropped versions. */
+  def vacuum(root: String, keep: Int = 1): Seq[Long] =
+    VersionedRoot.vacuum(root, AllComponents, keep)
 
   /** Global integer drift of a delta batch vs the stored corpus under
     * the CURRENT centroids: (delta mean d²_ppm · 10⁶) DIV (corpus mean
@@ -828,8 +731,7 @@ object AnnIndexStore {
     // them). The fold reproduces the legacy full-recompute arithmetic
     // bit-for-bit (same per-cell DIV, same global weighted DIV); stores
     // from before the sidecar fall back to the full re-score.
-    val base = readDriftBase(currentPath(root).getOrElse(
-        throw new IllegalStateException(s"no committed version under $root")))
+    val base = readDriftBase(requireCurrent(root))
       .map(m => foldGlobalMean(m.values))
       .getOrElse(globalMean(assigned(spark, root)))
     val dlt = globalMean(delta)
@@ -892,8 +794,7 @@ object AnnIndexStore {
                   idCol: String, vecCol: String, k: Int,
                   nprobe: Int = 8, efSearch: Int = 96,
                   nprobeCoarse: Int = 4): DataFrame = {
-    val cur = currentPath(root).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val cur = requireCurrent(root)
     if (Fs.exists(subCentsPath(cur))) {
       val probes = HierarchicalRouting.routeQueries(spark, subCentsPath(cur),
         centroids(spark, root), queries, idCol, vecCol, nprobeCoarse, nprobe)
@@ -933,8 +834,7 @@ object AnnIndexStore {
                nprobeCoarse: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import graft.functions.VectorFunctions.{cosineWithNorms, dot, norm}
-    val cur = currentPath(root).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val cur = requireCurrent(root)
     require(Fs.exists(codesPath(cur)),
       "store has no PQ codes component — build with Params(pqM > 0)")
     require(refine >= 1, s"refine must be >= 1, got $refine")
@@ -1003,8 +903,7 @@ object AnnIndexStore {
                 idCol: String, vecCol: String, k: Int,
                 minProbe: Int = 4, maxProbe: Int = 8,
                 ratioPpm: Long = 2000000L): DataFrame = {
-    val cur = currentPath(root).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val cur = requireCurrent(root)
     require(!Fs.exists(subCentsPath(cur)),
       "searchIvf routes on the flat centroid matrix — use searchGraph " +
         "for a hierarchical (subCells > 0) store")
@@ -1057,8 +956,7 @@ object AnnIndexStore {
   def semDedupPairsForDelta(spark: SparkSession, root: String, delta: DataFrame,
                             idCol: String, vecCol: String, minCos: Double): DataFrame = {
     import graft.functions.VectorFunctions.norm
-    val cur = currentPath(root).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
+    val cur = requireCurrent(root)
     val cents = centroids(spark, root)
 
     // (delta with primary cells, stored members of those cells kept to

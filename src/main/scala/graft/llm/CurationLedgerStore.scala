@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.fs.Fs
 import graft.sources.PrunedIndex
+import graft.store.VersionedRoot
 
 /** Versioned curation-LEDGER store — the 100 TB deployment form of the
   * full curation pipeline ([[Curation.fullPipelineLedger]]'s five
@@ -85,8 +86,8 @@ import graft.sources.PrunedIndex
   * Components (all [[graft.sources.PrunedIndex]] layouts under
   * `root/v<N>/`, advanced per batch by `writeDelta` replace-by-key or
   * stale-tolerant `appendRows`, untouched buckets stitched by absolute
-  * path — the [[AnnIndexStore]] versioning idiom: one `_SUCCESS`, one
-  * atomic `_CURRENT` swap):
+  * path — a [[graft.store.VersionedRoot]]: one `_SUCCESS`, one atomic
+  * `_CURRENT` swap):
   *
   * {{{
   *   thin/      (id, score, source, n_tokens, clean)  key=id
@@ -133,12 +134,11 @@ object CurationLedgerStore {
   private[llm] final case class Meta(k: Int, nTotal: Long, bounds: Seq[Long],
                                      counts: Map[String, Long])
 
-  private def ptr(root: String): String = Fs.child(root, "_CURRENT")
-  private def vPath(root: String, v: Long): String = Fs.child(root, s"v$v")
+  import VersionedRoot.{commit, nextVersion, requireCurrent, versionDir}
+
   private def neardupRoot(root: String): String = Fs.child(root, "neardup")
   private def gramsPath(root: String): String = Fs.child(root, "grams")
   private def metaPath(d: String): String = Fs.child(d, "_META")
-  private def paramsPath(d: String): String = Fs.child(d, "_PARAMS")
 
   private def thinDir(d: String) = Fs.child(d, "thin")
   private def censusDir(d: String) = Fs.child(d, "census")
@@ -149,53 +149,15 @@ object CurationLedgerStore {
   private def mixDir(d: String) = Fs.child(d, "mixhash")
   private def ledgerDir(d: String) = Fs.child(d, "ledger")
 
-  def versions(root: String): Seq[Long] =
-    if (!Fs.exists(root)) Seq.empty
-    else Fs.list(root).map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") && s.drop(1).nonEmpty &&
-          s.drop(1).forall(_.isDigit) &&
-          Fs.exists(Fs.child(Fs.child(root, s), "_SUCCESS")) => s.drop(1).toLong }
-      .sorted
+  def versions(root: String): Seq[Long] = VersionedRoot.versions(root)
 
-  def currentVersion(root: String): Option[Long] =
-    if (Fs.exists(ptr(root))) Some(Fs.readString(ptr(root)).trim.drop(1).toLong)
-    else None
+  def currentVersion(root: String): Option[Long] = VersionedRoot.currentVersion(root)
 
-  def currentPath(root: String): Option[String] =
-    currentVersion(root).map(v => Fs.child(root, s"v$v"))
-
-  private def current(root: String): String =
-    currentPath(root).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
-
-  private def nextVersion(root: String): Long =
-    (versions(root).lastOption.getOrElse(0L)
-      .max(currentVersion(root).getOrElse(0L))) + 1
-
-  private def commit(root: String, v: Long): Long = {
-    Fs.writeStringAtomic(Fs.child(vPath(root, v), "_SUCCESS"), "")
-    Fs.writeStringAtomic(ptr(root), s"v$v")
-    v
-  }
-
-  private def renderParams(p: Params): String =
-    Seq("idCol" -> p.idCol, "textCol" -> p.textCol, "scoreCol" -> p.scoreCol,
-      "sourceCol" -> p.sourceCol, "shingleN" -> p.shingleN,
-      "jaccardThreshold" -> p.jaccardThreshold, "dfHeadSize" -> p.dfHeadSize,
-      "neardupBuckets" -> p.neardupBuckets, "gramN" -> p.gramN,
-      "minShared" -> p.minShared, "minAvgLogProbPpm" -> p.minAvgLogProbPpm,
-      "targetPpm" -> p.targetPpm, "capacity" -> p.capacity,
-      "packBuckets" -> p.packBuckets, "idBuckets" -> p.idBuckets,
-      "tokBuckets" -> p.tokBuckets, "scoreBandPpm" -> p.scoreBandPpm,
-      "hashBands" -> p.hashBands, "maxRecordsPerFile" -> p.maxRecordsPerFile)
-      .map { case (k, v) => s"$k=$v" }.mkString("\n")
+  def currentPath(root: String): Option[String] = VersionedRoot.currentPath(root)
 
   /** The current version's recorded parameters + column contract. */
   def params(root: String): Option[Params] =
-    currentPath(root).map(paramsPath).filter(Fs.exists).map { pp =>
-      val kv = Fs.readString(pp).split("\n").iterator
-        .map(_.trim).filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
+    VersionedRoot.currentParams(root).map { kv =>
       Params(kv("idCol"), kv("textCol"), kv("scoreCol"), kv("sourceCol"),
         kv("shingleN").toInt, kv("jaccardThreshold").toDouble,
         kv("dfHeadSize").toInt, kv("neardupBuckets").toInt,
@@ -209,8 +171,7 @@ object CurationLedgerStore {
 
   private def storedParams(root: String): Params =
     params(root).getOrElse {
-      if (currentPath(root).isEmpty)
-        throw new IllegalStateException(s"no committed version under $root")
+      requireCurrent(root)
       throw new IllegalStateException(
         s"store $root has no _PARAMS sidecar — rebuild via CurationLedgerStore.build")
     }
@@ -318,7 +279,7 @@ object CurationLedgerStore {
     val nTotal = Option(census.agg(sum(col("n"))).collect()(0).get(0))
       .fold(0L)(_.asInstanceOf[Long])
     val v = nextVersion(root)
-    val d = vPath(root, v)
+    val d = versionDir(root, v)
     // checkpointed: its lineage (a full gram scrub join) fed both the
     // thin component AND the mix-hash component — two scrub replays
     val thinStored = st.allThin
@@ -352,7 +313,7 @@ object CurationLedgerStore {
         mixDir(d), Seq("msource", "hband"), p.idBuckets, p.maxRecordsPerFile),
       () => PrunedIndex.write(ledgerDf, ledgerDir(d), Seq(idCol), p.idBuckets,
         p.maxRecordsPerFile)))
-    Fs.writeStringAtomic(paramsPath(d), renderParams(p))
+    VersionedRoot.writeParams(d, p)
     Fs.writeStringAtomic(metaPath(d),
       renderMeta(Meta(0, nTotal, Seq(0L), counts)))
     commit(root, v)
@@ -363,7 +324,7 @@ object CurationLedgerStore {
     * absorbed so far. Corpus-sized by definition; the per-batch
     * operational output is [[absorbBatch]]'s changed rows. */
   def ledger(spark: SparkSession, root: String): DataFrame =
-    PrunedIndex.read(spark, ledgerDir(current(root)))
+    PrunedIndex.read(spark, ledgerDir(requireCurrent(root)))
 
   /** Absorb one intake batch (REPLACE semantics for re-uploaded ids,
     * one row per id) and return the ledger rows the batch CHANGED —
@@ -375,7 +336,7 @@ object CurationLedgerStore {
   def absorbBatch(spark: SparkSession, root: String, delta: DataFrame): DataFrame = {
     import graft.functions.TextFunctions.tokenCount
     val p = storedParams(root)
-    val cur = current(root)
+    val cur = requireCurrent(root)
     val m = readMeta(cur)
     val (idCol, textCol, scoreCol, sourceCol) =
       (p.idCol, p.textCol, p.scoreCol, p.sourceCol)
@@ -756,7 +717,7 @@ object CurationLedgerStore {
 
     // ---- land the new version (write I/O delta-bounded everywhere) ----
     val v = nextVersion(root)
-    val d = vPath(root, v)
+    val d = versionDir(root, v)
     val mrpf = p.maxRecordsPerFile
     // prevNbrs is BFS hop 1's read (same probe: deltaIds as src), and
     // touchedSrcs ⊆ reach (hop-1 dsts and every delta-pair endpoint are
@@ -804,41 +765,22 @@ object CurationLedgerStore {
         basePath = Some(mixDir(cur)), mrpf),
       () => PrunedIndex.writeDelta(spark, ledgerDir(d), posts,
         posts.select(col(idCol)), basePath = Some(ledgerDir(cur)), mrpf)))
-    Fs.writeStringAtomic(paramsPath(d), renderParams(p))
+    VersionedRoot.writeParams(d, p)
     Fs.writeStringAtomic(metaPath(d),
       renderMeta(Meta(k1, nPost, boundsPost, countsPost)))
     commit(root, v)
     changed
   }
 
+  /** The stitched components — the manifest scan set for [[chainDepth]]
+    * and [[vacuum]]. */
   private val AllComponents: Seq[String] = Seq("thin", "census", "censustok",
     "vocab", "edges", "bands", "mixhash", "ledger")
 
-  private def referencedEntries(root: String, vs: Seq[Long]): Set[String] =
-    vs.flatMap { v =>
-      AllComponents.flatMap { comp =>
-        val mp = Fs.child(Fs.child(vPath(root, v), comp), "_PRUNE_MANIFEST")
-        if (!Fs.exists(mp)) Nil
-        else Fs.readString(mp).split("\n").iterator.filter(_.nonEmpty)
-          .map(l => l.substring(l.indexOf('\t') + 1))
-          .filter(e => e.startsWith("/") || e.contains("://")).toSeq
-      }
-    }.toSet
-
   /** How many version dirs the CURRENT version's stitched manifests
-    * reach into (1 = self-contained) — the structural staleness signal
-    * [[maybeMaintain]] acts on. Both sides of the prefix test are
-    * qualified (the sweepUnreferenced idiom), so a scheme-qualified or
-    * relative caller root cannot silently report depth 1. */
-  def chainDepth(root: String): Int = {
-    val curV = currentVersion(root).getOrElse(return 0)
-    val qRoot = Fs.qualified(root)
-    val referenced = referencedEntries(root, Seq(curV))
-      .map(Fs.qualified)
-      .filter(_.startsWith(qRoot + "/"))
-      .map(_.stripPrefix(qRoot + "/").takeWhile(_ != '/'))
-    1 + (referenced - s"v$curV").size
-  }
+    * reach into ([[VersionedRoot.chainDepth]]; 1 = self-contained) —
+    * the structural staleness signal [[maybeMaintain]] acts on. */
+  def chainDepth(root: String): Int = VersionedRoot.chainDepth(root, AllComponents)
 
   /** Self-triggering maintenance (the [[NearDupIndexStore]]/
     * [[AnnIndexStore]] contract): [[compact]] when the stitched
@@ -852,40 +794,15 @@ object CurationLedgerStore {
     if (chainDepth(root) > maxChainDepth) Some(compact(spark, root))
     else None
 
-  /** Retention: drop committed versions beyond the newest `keep`
-    * (always sparing the current pointer's), but NEVER a version dir
-    * whose files a retained version's manifest still references —
-    * those are sparable only after [[compact]] folds the chain flat.
-    * Also sweeps ORPHANED version dirs (a crashed absorb's uncommitted
-    * `v<N>`). Single-writer contract. Returns the dropped versions.
-    * The near-dup index under `root/neardup` has its own in-place
-    * retention ([[Dedup]]'s refreeze + sweep). */
-  def vacuum(root: String, keep: Int = 1): Seq[Long] = {
-    val all = versions(root)
-    val cur = currentVersion(root)
-    val retained = (all.takeRight(math.max(keep, 1)) ++ cur.toSeq).distinct
-    // qualify BOTH sides of the prefix test (the chainDepth idiom):
-    // manifest entries are absolutized in the writer's root form while
-    // vPath uses the caller's root form — a scheme-qualified or
-    // otherwise differently-spelled root would make every referenced
-    // version dir look unreferenced and DELETE files the current
-    // manifest still stitches in
-    val refs = referencedEntries(root, retained).map(Fs.qualified)
-    val orphans =
-      if (!Fs.exists(root)) Seq.empty[Long]
-      else Fs.list(root).map(_.getPath.getName)
-        .collect { case s if s.startsWith("v") && s.drop(1).nonEmpty &&
-            s.drop(1).forall(_.isDigit) &&
-            !Fs.exists(Fs.child(Fs.child(root, s), "_SUCCESS")) => s.drop(1).toLong }
-        .filterNot(v => cur.contains(v))
-    (all.filterNot(retained.contains) ++ orphans).filter { v =>
-      val dir = vPath(root, v)
-      val qDir = Fs.qualified(dir) + "/"
-      val stillReferenced = refs.exists(_.startsWith(qDir))
-      if (!stillReferenced) Fs.deleteRecursive(dir)
-      !stillReferenced
-    }
-  }
+  /** Retention — [[VersionedRoot.vacuum]] over the ledger components:
+    * drops versions beyond the newest `keep` that no retained manifest
+    * references (sparable only after [[compact]] folds the chain flat),
+    * and sweeps stale orphans of crashed absorbs. Single-writer
+    * contract. Returns the dropped versions. The near-dup index under
+    * `root/neardup` has its own in-place retention ([[Dedup]]'s
+    * refreeze + sweep). */
+  def vacuum(root: String, keep: Int = 1): Seq[Long] =
+    VersionedRoot.vacuum(root, AllComponents, keep)
 
   /** Fold the current version self-contained: replace-by-key layouts
     * rewrite flat, the append-only layouts drop their stale
@@ -904,10 +821,10 @@ object CurationLedgerStore {
     * bookkeeping tightens. */
   def compact(spark: SparkSession, root: String): Long = {
     val p = storedParams(root)
-    val cur = current(root)
+    val cur = requireCurrent(root)
     val m = readMeta(cur)
     val v = nextVersion(root)
-    val d = vPath(root, v)
+    val d = versionDir(root, v)
     val idCol = p.idCol
     val mrpf = p.maxRecordsPerFile
     val thin = PrunedIndex.read(spark, thinDir(cur))
@@ -940,7 +857,7 @@ object CurationLedgerStore {
         mixDir(d), Seq("msource", "hband"), p.idBuckets, mrpf),
       () => PrunedIndex.write(PrunedIndex.read(spark, ledgerDir(cur)),
         ledgerDir(d), Seq(idCol), p.idBuckets, mrpf)))
-    Fs.writeStringAtomic(paramsPath(d), renderParams(p))
+    VersionedRoot.writeParams(d, p)
     // the bound ledger folds to its base: every doc just rescored
     // exactly (stamp 0), so the certified drift since stamp 0 is 0
     Fs.writeStringAtomic(metaPath(d),

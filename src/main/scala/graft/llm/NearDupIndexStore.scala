@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.fs.Fs
 import graft.sources.PrunedIndex
+import graft.store.VersionedRoot
 
 /** Versioned wrapper around the persisted near-dup index
   * ([[Dedup.writeNearDupIndex]] family) — the [[AnnIndexStore]] idiom
@@ -25,51 +26,28 @@ import graft.sources.PrunedIndex
   * any dir a retained manifest still points into).
   *
   * Mirrors the reference's versioned-snapshot storage discipline
-  * (SURVEY.md §2.8's curated store) for the dedup index. */
+  * (SURVEY.md §2.8's curated store) for the dedup index; the layout,
+  * commit and retention are [[VersionedRoot]]'s. */
 object NearDupIndexStore {
 
-  private def ptr(root: String): String = Fs.child(root, "_CURRENT")
-  private def vPath(root: String, v: Long): String = Fs.child(root, s"v$v")
+  import VersionedRoot.{commit, nextVersion, requireCurrent, versionDir}
 
   /** Committed versions, ascending (`_SUCCESS`-gated — an in-flight
     * build is invisible). */
-  def versions(root: String): Seq[Long] =
-    if (!Fs.exists(root)) Seq.empty
-    else Fs.list(root).map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") && s.drop(1).nonEmpty &&
-          s.drop(1).forall(_.isDigit) &&
-          Fs.exists(Fs.child(Fs.child(root, s), "_SUCCESS")) => s.drop(1).toLong }
-      .sorted
+  def versions(root: String): Seq[Long] = VersionedRoot.versions(root)
 
-  def currentVersion(root: String): Option[Long] =
-    if (Fs.exists(ptr(root))) Some(Fs.readString(ptr(root)).trim.drop(1).toLong)
-    else None
+  def currentVersion(root: String): Option[Long] = VersionedRoot.currentVersion(root)
 
-  def currentPath(root: String): Option[String] =
-    currentVersion(root).map(v => vPath(root, v))
-
-  private def current(root: String): String =
-    currentPath(root).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
-
-  private def commit(root: String, v: Long): Long = {
-    Fs.writeStringAtomic(Fs.child(vPath(root, v), "_SUCCESS"), "")
-    Fs.writeStringAtomic(ptr(root), s"v$v")
-    v
-  }
-
-  private def nextVersion(root: String): Long =
-    math.max(versions(root).lastOption.getOrElse(0L),
-      currentVersion(root).getOrElse(0L)) + 1
+  def currentPath(root: String): Option[String] = VersionedRoot.currentPath(root)
 
   /** The winnowing family's components live under a `win/` subdir of
     * each version (their `postings`/`dfcensus` names clash with the
     * containment components' at the version root). */
-  private def winDir(versionDir: String): String = Fs.child(versionDir, "win")
+  private def winDir(vDir: String): String = Fs.child(vDir, "win")
 
   /** The fuzzy-key family's components under `fuzzy/` — same
     * namespacing discipline. */
-  private def fuzzyDir(versionDir: String): String = Fs.child(versionDir, "fuzzy")
+  private def fuzzyDir(vDir: String): String = Fs.child(vDir, "fuzzy")
 
   /** Build the store's first (or next, self-contained) version from a
     * corpus. Returns the committed version number.
@@ -106,7 +84,7 @@ object NearDupIndexStore {
     require(jaccard || winnowing.nonEmpty || fuzzyKey.nonEmpty,
       "a store needs at least one family")
     val v = nextVersion(root)
-    val dir = vPath(root, v)
+    val dir = versionDir(root, v)
     // family builds are independent (distinct component subdirs of one
     // version) EXCEPT minhash, which derives from this version's sets —
     // it stays sequenced after the jaccard/containment write inside its
@@ -146,7 +124,7 @@ object NearDupIndexStore {
     * delta's shingle cache with [[releaseProbeCache]]. */
   def pairsForDelta(spark: SparkSession, root: String, delta: DataFrame,
                     idCol: String, textCol: String): DataFrame =
-    Dedup.jaccardDeltaPairsIndexed(spark, current(root), delta, idCol, textCol)
+    Dedup.jaccardDeltaPairsIndexed(spark, requireCurrent(root), delta, idCol, textCol)
 
   /** Containment pairs of `delta` against the CURRENT version ∪
     * `delta` — [[Dedup.containmentDeltaPairsIndexed]] over the
@@ -156,7 +134,7 @@ object NearDupIndexStore {
                                textCol: String,
                                maxDf: Int = Int.MaxValue,
                                dfHeadSize: Int = 100000): DataFrame =
-    Dedup.containmentDeltaPairsIndexed(spark, current(root), delta,
+    Dedup.containmentDeltaPairsIndexed(spark, requireCurrent(root), delta,
       idCol, textCol, maxDf, dfHeadSize)
 
   /** Winnowing near-copy pairs of `delta` against the CURRENT version
@@ -166,7 +144,7 @@ object NearDupIndexStore {
                              delta: DataFrame, idCol: String,
                              textCol: String, minShared: Int = 3,
                              maxDf: Int = Int.MaxValue): DataFrame =
-    Dedup.winnowingDeltaPairsIndexed(spark, winDir(current(root)), delta,
+    Dedup.winnowingDeltaPairsIndexed(spark, winDir(requireCurrent(root)), delta,
       idCol, textCol, minShared, maxDf)
 
   /** MinHash-LSH near-dup pairs of `delta` against the CURRENT version
@@ -176,7 +154,7 @@ object NearDupIndexStore {
                            delta: DataFrame, idCol: String,
                            textCol: String,
                            threshold: Double = 0.8): DataFrame =
-    Dedup.minHashDeltaPairsIndexed(spark, current(root), delta,
+    Dedup.minHashDeltaPairsIndexed(spark, requireCurrent(root), delta,
       idCol, textCol, threshold)
 
   /** Fuzzy-key Hamming pairs of `delta` against the CURRENT version ∪
@@ -185,7 +163,7 @@ object NearDupIndexStore {
   def fuzzyPairsForDelta(spark: SparkSession, root: String,
                          delta: DataFrame, idCol: String,
                          textCol: String): DataFrame =
-    Dedup.fuzzyKeyDeltaPairsIndexed(spark, fuzzyDir(current(root)), delta,
+    Dedup.fuzzyKeyDeltaPairsIndexed(spark, fuzzyDir(requireCurrent(root)), delta,
       idCol, textCol)
 
   /** Absorb a batch as a NEW committed version (REPLACE semantics for
@@ -198,9 +176,9 @@ object NearDupIndexStore {
     * and readable until [[vacuum]]. */
   def appendDelta(spark: SparkSession, root: String, delta: DataFrame,
                   idCol: String, textCol: String): Long = {
-    val cur = current(root)
+    val cur = requireCurrent(root)
     val v = nextVersion(root)
-    val dir = vPath(root, v)
+    val dir = versionDir(root, v)
     val hasJaccard = Fs.exists(Fs.child(cur, "prefix"))
     val hasContainment = Fs.exists(Fs.child(cur, "postings"))
     val hasBands = Fs.exists(Fs.child(cur, "bands"))
@@ -254,7 +232,7 @@ object NearDupIndexStore {
     * retention story. */
   def compact(spark: SparkSession, root: String,
               refreeze: Boolean = false): Long = {
-    val cur = current(root)
+    val cur = requireCurrent(root)
     // bucket count from whichever component exists (a winnowing- or
     // fuzzy-only store has no prefix layout)
     val numBuckets = Seq("prefix", "sets", "postings", "win/byid",
@@ -264,7 +242,7 @@ object NearDupIndexStore {
       .getOrElse(throw new IllegalStateException(
         s"no PrunedIndex component under $cur"))
     val v = nextVersion(root)
-    val dir = vPath(root, v)
+    val dir = versionDir(root, v)
     import org.apache.spark.sql.functions.col
     // re-land a component flat under the new version, preserving the
     // stored key columns and schema
@@ -338,31 +316,10 @@ object NearDupIndexStore {
       "win/byid", "win/postings", "win/dfcensus",
       "fuzzy/segs", "fuzzy/byid")
 
-  /** Reference-chain depth of the CURRENT version: 1 + the number of
-    * OTHER version dirs its component manifests still stitch files
-    * from. Manifest entries absolutize on every append (no history
-    * walk), so one manifest scan sees the whole chain. A freshly built
-    * or compacted version reports 1. */
-  def chainDepth(root: String): Int = {
-    val cur = current(root)
-    // qualified prefix compare on both sides (the AnnIndexStore fix):
-    // a scheme-qualified or relative caller root must still match the
-    // absolutized manifest entries, or the depth under-reports and
-    // maybeMaintain never compacts
-    val qRoot = Fs.qualified(root)
-    val referenced = AllComponents.flatMap { comp =>
-      val mp = Fs.child(Fs.child(cur, comp), "_PRUNE_MANIFEST")
-      if (!Fs.exists(mp)) Nil
-      else Fs.readString(mp).split("\n").iterator.filter(_.nonEmpty)
-        .map(l => l.substring(l.indexOf('\t') + 1))
-        .filter(e => e.startsWith("/") || e.contains("://"))
-        .map(Fs.qualified)
-        .filter(_.startsWith(qRoot + "/"))
-        .map(_.stripPrefix(qRoot + "/").takeWhile(_ != '/'))
-        .toSeq
-    }.toSet
-    1 + (referenced - new java.io.File(cur).getName).size
-  }
+  /** Reference-chain depth of the CURRENT version:
+    * [[VersionedRoot.chainDepth]] over every family's components. A
+    * freshly built or compacted version reports 1. */
+  def chainDepth(root: String): Int = VersionedRoot.chainDepth(root, AllComponents)
 
   /** How far the frozen df head has drifted: current doc count ÷ the
     * count the head was frozen over (recorded in the near-dup meta at
@@ -370,7 +327,7 @@ object NearDupIndexStore {
     * with a legacy meta. The count reads parquet FOOTERS only (Spark's
     * metadata-only count), so the check is not an index scan. */
   def headStaleness(spark: SparkSession, root: String): Option[Double] = {
-    val cur = current(root)
+    val cur = requireCurrent(root)
     if (!Fs.exists(Dedup.nearDupMetaPath(cur)) ||
         !Fs.exists(Fs.child(cur, "sets"))) None
     else Dedup.readFrozenDocs(cur).filter(_ > 0L).map { frozen =>
@@ -400,68 +357,16 @@ object NearDupIndexStore {
     else None
   }
 
-  /** Retention: drop committed versions beyond the newest `keep`
-    * (always sparing the current pointer's), but NEVER a version dir
-    * whose files a retained version's manifest still references
-    * (delta-stitched chains — sparable only after [[compact]]). All
-    * families' manifests are scanned — containment and winnowing
-    * components stitch across versions exactly like prefix/sets do.
-    *
-    * Also sweeps ORPHANED version dirs: a crashed build/appendDelta
-    * leaves an uncommitted `v<N>` (no `_SUCCESS`) that [[versions]]
-    * hides and [[nextVersion]] would reuse — without this sweep its
-    * stale files would never be garbage-collected (the retry writes a
-    * fresh manifest that does not reference them). An orphan is only
-    * swept once its newest file is older than `orphanGraceMs`, so an
-    * accidentally concurrent vacuum cannot race a LIVE writer's
-    * in-flight version (the single-writer contract still holds for
-    * builds vs vacuum of committed versions). Returns the dropped
-    * version numbers (orphans included). */
-  def vacuum(root: String, keep: Int = 1,
-             orphanGraceMs: Long = 3600000L): Seq[Long] = {
-    val all = versions(root)
-    val cur = currentVersion(root)
-    val retained = (all.takeRight(math.max(keep, 1)) ++ cur.toSeq).distinct
-    val refs: Set[String] = retained.flatMap { v =>
-      AllComponents.flatMap { comp =>
-        val mp = Fs.child(Fs.child(vPath(root, v), comp), "_PRUNE_MANIFEST")
-        if (!Fs.exists(mp)) Nil
-        else Fs.readString(mp).split("\n").iterator.filter(_.nonEmpty)
-          .map(l => l.substring(l.indexOf('\t') + 1))
-          .filter(e => e.startsWith("/") || e.contains("://"))
-          // qualify (the chainDepth idiom): manifest entries carry the
-          // writer's root spelling; the prefix test below must not
-          // depend on the caller's
-          .map(Fs.qualified).toSeq
-      }
-    }.toSet
-    val cutoffMs = System.currentTimeMillis() - math.max(orphanGraceMs, 0L)
-    def newestMtime(dir: String): Long = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try s.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(p => p.toFile.lastModified()).max.orElse(0L)
-      finally s.close()
-    }
-    val orphans =
-      if (!Fs.exists(root)) Seq.empty[Long]
-      else Fs.list(root).map(_.getPath.getName)
-        .collect { case s if s.startsWith("v") && s.drop(1).nonEmpty &&
-            s.drop(1).forall(_.isDigit) &&
-            !Fs.exists(Fs.child(Fs.child(root, s), "_SUCCESS")) => s.drop(1).toLong }
-        .filterNot(v => cur.contains(v))
-        .filter(v => newestMtime(vPath(root, v)) <= cutoffMs)
-    val dropped = all.filterNot(retained.contains) ++ orphans
-    dropped.filter { v =>
-      val dir = vPath(root, v)
-      val qDir = Fs.qualified(dir) + "/"
-      val stillReferenced = refs.exists(_.startsWith(qDir))
-      if (!stillReferenced) Fs.deleteRecursive(dir)
-      !stillReferenced
-    }
-  }
+  /** Retention — [[VersionedRoot.vacuum]] over every family's
+    * components (containment and winnowing stitch across versions
+    * exactly like prefix/sets do): drops versions beyond the newest
+    * `keep` that no retained manifest references, and sweeps stale
+    * orphans of crashed builds/appends. Returns the dropped versions. */
+  def vacuum(root: String, keep: Int = 1): Seq[Long] =
+    VersionedRoot.vacuum(root, AllComponents, keep)
 
   /** Release the delta shingle cache a [[pairsForDelta]] call pinned. */
   def releaseProbeCache(root: String, delta: DataFrame,
                         idCol: String, textCol: String): Unit =
-    Dedup.releaseIndexedProbeCache(current(root), delta, idCol, textCol)
+    Dedup.releaseIndexedProbeCache(requireCurrent(root), delta, idCol, textCol)
 }

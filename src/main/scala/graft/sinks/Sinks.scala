@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.StructType
 import graft.fs.Fs
 import graft.model.{Identifiers, JdbcConfig}
 import graft.operators.Relational
+import graft.store.VersionedRoot
 
 /** Sinks: the curated-store writers (SURVEY.md §2.8).
   *
@@ -23,132 +24,48 @@ import graft.operators.Relational
   */
 object ParquetMergeSink {
 
-  /** Table root = `<warehouse>/<table>`; versioned write dirs with a
-    * `_CURRENT` pointer file give atomic swap without a transaction log
-    * (single-writer-per-table discipline, as the reference's FIFO groups
-    * enforce — SURVEY.md §2.9). Paths are scheme-aware (`file://`,
-    * `hdfs://`, `s3a://`) via [[graft.fs.Fs]]. */
-  def currentPath(warehouse: String, table: String): Option[String] = {
-    val ptr = Fs.child(Fs.child(warehouse, table), "_CURRENT")
-    if (Fs.exists(ptr)) Some(Fs.child(Fs.child(warehouse, table), Fs.readString(ptr).trim))
-    else None
-  }
+  /** Table root = `<warehouse>/<table>`, laid out as a
+    * [[VersionedRoot]]: versioned write dirs with a `_CURRENT` pointer
+    * give atomic swap without a transaction log (single-writer-per-table
+    * discipline, as the reference's FIFO groups enforce — SURVEY.md
+    * §2.9). Paths are scheme-aware (`file://`, `hdfs://`, `s3a://`) via
+    * [[graft.fs.Fs]]. */
+  def currentPath(warehouse: String, table: String): Option[String] =
+    VersionedRoot.currentPath(Fs.child(warehouse, table))
 
   def readCurrent(spark: SparkSession, warehouse: String, table: String): Option[DataFrame] =
     currentPath(warehouse, table).map(spark.read.parquet(_))
 
   /** All COMMITTED retained versions of a table, ascending (time
-    * travel). A version counts only once its `_SUCCESS` job-commit
-    * marker exists: an in-flight [[merge]]'s half-written dir — or a
-    * crashed writer's debris — is invisible to [[readVersion]], so time
-    * travel can never resolve a snapshot that is still being written
-    * (the reader-side half of the all-or-nothing contract; the deleter
-    * side is [[vacuum]]'s rename-then-delete). */
-  def versions(warehouse: String, table: String): Seq[Long] = {
-    val root = Fs.child(warehouse, table)
-    Fs.list(root)
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("v") && s.drop(1).nonEmpty && s.drop(1).forall(_.isDigit)
-          && Fs.exists(Fs.child(Fs.child(root, s), "_SUCCESS")) => s.drop(1).toLong }
-      .sorted
-  }
+    * travel). A version counts only once its `_SUCCESS` marker exists:
+    * an in-flight [[merge]]'s half-written dir — or a crashed writer's
+    * debris — is invisible to [[readVersion]], so time travel can never
+    * resolve a snapshot that is still being written (the reader-side
+    * half of the all-or-nothing contract; the deleter side is
+    * [[vacuum]]'s rename-then-delete). */
+  def versions(warehouse: String, table: String): Seq[Long] =
+    VersionedRoot.versions(Fs.child(warehouse, table))
 
   /** Read a table as of a given version (the latest retained version
     * ≤ `asOf`) — every merge keeps its full snapshot dir, so any past
     * state is one read away until `vacuum`. */
   def readVersion(spark: SparkSession, warehouse: String, table: String, asOf: Long): Option[DataFrame] =
     versions(warehouse, table).filter(_ <= asOf).lastOption
-      .map(v => spark.read.parquet(Fs.child(Fs.child(warehouse, table), s"v$v")))
+      .map(v => spark.read.parquet(VersionedRoot.versionDir(Fs.child(warehouse, table), v)))
 
-  /** Drop all but the newest `keep` versions (never the current one).
-    *
-    * Reader safety (pinned by VacuumReaderPropertySpec): each dropped
-    * version is first RENAMED to a hidden `.vacuum-v<N>` name — one
-    * atomic metadata op on local filesystems and HDFS — and only then
-    * deleted file by file. A concurrent [[readVersion]] therefore sees
-    * each version all-or-nothing: resolve before the rename and the
-    * complete file set is still reachable under the old name (a scan
-    * that loses the race mid-read fails WHOLE — Spark errors on a
-    * listed file that vanished — it cannot silently return a subset,
-    * because no moment exists when the visible path holds only some of
-    * the version's files); resolve after it and [[versions]] no longer
-    * lists the version, so the read falls back to the newest RETAINED
-    * version ≤ asOf, which is [[readVersion]]'s documented contract.
-    * Retention contract for long scans is the lakehouse-standard one:
-    * size `keep` (and the vacuum cadence) so a reader's pinned version
-    * stays inside the newest-`keep` window for the duration of its
-    * scan; readers needing stronger pins should copy the snapshot out.
-    * On object stores without atomic rename the hidden-name step is
-    * advisory (same listing race as any non-transactional store) —
-    * the FIFO-group single-writer discipline is the cross-process
-    * guard there, as for [[merge]]. */
-  def vacuum(warehouse: String, table: String, keep: Int = 1,
-             debrisGraceMs: Long = 24L * 3600 * 1000): Unit = {
-    val cur = currentPath(warehouse, table)
-      .map(p => new org.apache.hadoop.fs.Path(p).getName)
-    val all = versions(warehouse, table)
-    val drop = all.dropRight(math.max(keep, 1))
-      .filterNot(v => cur.contains(s"v$v"))
-    drop.foreach { v =>
-      val dir = Fs.child(Fs.child(warehouse, table), s"v$v")
-      val hidden = Fs.child(Fs.child(warehouse, table), s".vacuum-v$v")
-      // a crashed earlier vacuum may have left the hidden dir behind;
-      // clear it so the rename can land, then delete out of view
-      if (Fs.exists(hidden)) Fs.deleteRecursive(hidden)
-      if (Fs.rename(dir, hidden)) Fs.deleteRecursive(hidden)
-      else Fs.deleteRecursive(dir) // rename-less FS: best-effort direct delete
-    }
-    // Debris sweep: [[versions]] lists only _SUCCESS-committed dirs, so
-    // a crashed WRITER's uncommitted v* directory (and a crashed
-    // vacuum's .vacuum-* remnant) is invisible to the retention window
-    // above and would otherwise accumulate forever. Sweep them once
-    // they are older than the grace period — an in-flight writer's dir
-    // is younger than any sane grace, and writers re-land their version
-    // from scratch on retry, so deleting stale debris can never lose
-    // committed data (committed dirs have _SUCCESS and are handled
-    // above, never here).
-    val committed = all.map(v => s"v$v").toSet
-    val now = System.currentTimeMillis()
-    val root = Fs.child(warehouse, table)
-    Fs.list(root).foreach { st =>
-      val name = st.getPath.getName
-      val isStaleVersionDebris = st.isDirectory &&
-        name.startsWith("v") && name.drop(1).nonEmpty && name.drop(1).forall(_.isDigit) &&
-        !committed.contains(name) && !cur.contains(name)
-      val isVacuumRemnant = st.isDirectory && name.startsWith(".vacuum-")
-      // age by the NEWEST mtime anywhere in the tree, not the top-level
-      // dir's: a dir's mtime is set at creation and does not advance
-      // while a writer lands files in nested bucket subdirectories, so
-      // a single write (or compaction) running longer than the grace
-      // period would otherwise have its in-flight dir swept from under it
-      if ((isStaleVersionDebris || isVacuumRemnant) &&
-          now - treeMaxMtime(st) > debrisGraceMs)
-        Fs.deleteRecursive(st.getPath.toString)
-    }
-  }
-
-  /** Newest modification time across a directory tree (the dir's own
-    * mtime for an empty one) — the only staleness signal that keeps
-    * advancing while a long write is still landing nested files.
-    *
-    * A child vanishing mid-walk (a concurrent writer committing its
-    * _temporary dir, or another vacuum racing this one) IS activity:
-    * report "fresh as of now" instead of throwing, so a torn listing
-    * can neither fail the vacuum (it must never throw — the
-    * VacuumReaderPropertySpec contract) nor judge a live dir stale.
-    * Hadoop's local FS surfaces the race as FileNotFoundException or a
-    * bare IOException ("Invalid directory or I/O error") depending on
-    * which syscall loses, so the guard is IOException-wide — an
-    * unreadable subtree defers the sweep to the next vacuum, which is
-    * always safe (debris deletion is best-effort by contract). */
-  private def treeMaxMtime(st: org.apache.hadoop.fs.FileStatus): Long =
-    try {
-      val children =
-        if (st.isDirectory) Fs.list(st.getPath.toString).map(treeMaxMtime) else Nil
-      (st.getModificationTime +: children).max
-    } catch {
-      case _: java.io.IOException => System.currentTimeMillis()
-    }
+  /** Drop all but the newest `keep` versions (never the current one) and
+    * sweep stale crashed-writer debris — [[VersionedRoot.vacuum]]; a
+    * table's versions are self-contained snapshots, so no manifest
+    * pins an older one. Reader safety (pinned by
+    * VacuumReaderPropertySpec): a concurrent [[readVersion]] sees each
+    * version all-or-nothing, falling back to the newest RETAINED
+    * version ≤ asOf once one is dropped. Retention contract for long
+    * scans is the lakehouse-standard one: size `keep` (and the vacuum
+    * cadence) so a reader's pinned version stays inside the
+    * newest-`keep` window for the duration of its scan; readers needing
+    * stronger pins should copy the snapshot out. */
+  def vacuum(warehouse: String, table: String, keep: Int = 1): Unit =
+    VersionedRoot.vacuum(Fs.child(warehouse, table), Nil, keep): Unit
 
   // Per-table writer serialization — the engine-side analog of the
   // reference's per-table SQS FIFO groups
@@ -205,7 +122,7 @@ object ParquetMergeSink {
                 incoming: DataFrame, keys: Seq[String],
                 policy: Relational.SchemaPolicy = Relational.SchemaPolicy.Strict): (Long, Long) =
     withTableLock(warehouse, table) {
-      val v = versions(warehouse, table).lastOption.getOrElse(0L) + 1
+      val v = VersionedRoot.nextVersion(Fs.child(warehouse, table))
       (v, applyMerge(spark, warehouse, table, incoming, keys, v, policy))
     }
 
@@ -262,19 +179,15 @@ object ParquetMergeSink {
     * version` always means "this batch's effect is already in". */
   private def alreadyApplied(spark: SparkSession, warehouse: String,
                              table: String, version: Long): Option[Long] =
-    currentPath(warehouse, table)
-      .filter { p =>
-        val name = new org.apache.hadoop.fs.Path(p).getName
-        name.startsWith("v") && name.drop(1).toLongOption.exists(_ >= version)
-      }
-      .map(p => spark.read.parquet(p).count())
+    VersionedRoot.currentVersion(Fs.child(warehouse, table)).filter(_ >= version)
+      .map(v => spark.read.parquet(VersionedRoot.versionDir(Fs.child(warehouse, table), v)).count())
 
   private def writeVersion(spark: SparkSession, warehouse: String, table: String,
                            merged: DataFrame, version: Long): Long = {
-    val dir = s"v$version"
-    val target = Fs.child(Fs.child(warehouse, table), dir)
+    val root = Fs.child(warehouse, table)
+    val target = VersionedRoot.versionDir(root, version)
     merged.write.mode(SaveMode.Overwrite).parquet(target)
-    Fs.writeStringAtomic(Fs.child(Fs.child(warehouse, table), "_CURRENT"), dir)
+    VersionedRoot.commit(root, version)
     spark.read.parquet(target).count()
   }
 }

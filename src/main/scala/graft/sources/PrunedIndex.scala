@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.fs.Fs
 
@@ -53,6 +54,7 @@ object PrunedIndex {
 
   private def metaPath(path: String): String = Fs.child(path, "_PRUNE_META")
   private def manifestPath(path: String): String = Fs.child(path, "_PRUNE_MANIFEST")
+  private def schemaPath(path: String): String = Fs.child(path, "_PRUNE_SCHEMA")
 
   /** Parsed `_PRUNE_MANIFEST` (bucket → relative file paths), cached
     * per (session, path) and validated against the `_PRUNE_META`
@@ -187,18 +189,35 @@ object PrunedIndex {
           }
           .map(f => s"$bucket\t${d.getPath.getName}/${f.getPath.getName}")
       }
-    // manifest lands before meta: meta (the version/validation stamp)
-    // only ever points at a complete manifest; the third line is the
-    // monotonic version token readers compare BY VALUE (mtime
-    // granularity is filesystem-dependent — see manifestFor)
+    publish(path, lines, keyCols, numBuckets, newVersionToken(), df.schema)
+  }
+
+  /** Land a layout's sidecars. The manifest lands before the meta: meta
+    * (the version/validation stamp) only ever points at a complete
+    * manifest; its third line is the monotonic version token readers
+    * compare BY VALUE (mtime granularity is filesystem-dependent — see
+    * manifestFor). A layout that holds no data file (every write so far
+    * was empty) also records its schema in `_PRUNE_SCHEMA`, since
+    * there is no parquet footer to infer it from. */
+  private def publish(path: String, lines: Seq[String], keyCols: Seq[String],
+                      numBuckets: Int, token: String, schema: StructType): Unit = {
+    if (lines.isEmpty) Fs.writeStringAtomic(schemaPath(path), schema.json)
     Fs.writeStringAtomic(manifestPath(path), lines.mkString("\n"))
-    Fs.writeStringAtomic(metaPath(path),
-      s"${keyCols.mkString(",")}\n$numBuckets\n${newVersionToken()}")
+    Fs.writeStringAtomic(metaPath(path), s"${keyCols.mkString(",")}\n$numBuckets\n$token")
     // drop every session's cached state for this path (same-JVM
     // rebuild/compaction swaps are seen immediately)
     manifestCache.filterInPlace((k, _) => k._2 != path)
     baseCache.filterInPlace((k, _) => k._2 != path)
   }
+
+  /** The view of a layout whose manifest lists no file: an empty frame
+    * with the schema recorded at write time. Layouts from before the
+    * schema sidecar fall back to the directory listing. */
+  private def emptyView(spark: SparkSession, path: String): DataFrame =
+    if (Fs.exists(schemaPath(path)))
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        DataType.fromJson(Fs.readString(schemaPath(path))).asInstanceOf[StructType])
+    else listedBase(spark, path)
 
   /** (key columns, bucket count) recorded at write time. A pruned
     * probe cannot run without them (the hash domain would be a guess),
@@ -217,8 +236,20 @@ object PrunedIndex {
     * untouched buckets' files in by ABSOLUTE path (possibly under a
     * different index dir — the prior store version), detected by a
     * leading `/` or a URI scheme. */
+  private def isAbsolute(e: String): Boolean = e.startsWith("/") || e.contains("://")
+
   private def resolveEntry(path: String, e: String): String =
-    if (e.startsWith("/") || e.contains("://")) e else Fs.child(path, e)
+    if (isAbsolute(e)) e else Fs.child(path, e)
+
+  /** The ABSOLUTE entries of the layout's manifest — the files it
+    * stitches in from other index dirs (empty for a self-contained
+    * layout or a missing manifest). Reads the sidecar directly, no
+    * session needed: the retention scan of [[graft.store.VersionedRoot]]. */
+  private[graft] def absoluteEntries(path: String): Seq[String] =
+    if (!Fs.exists(manifestPath(path))) Nil
+    else Fs.readString(manifestPath(path)).split("\n").iterator
+      .filter(_.nonEmpty).map(l => l.substring(l.indexOf('\t') + 1))
+      .filter(isAbsolute).toSeq
 
   /** Read a manifest-selected entry set. All-relative entries (every
     * [[write]]-produced layout) read under a `basePath` so the bucket
@@ -230,7 +261,7 @@ object PrunedIndex {
     * file's bucket, and the bucket column carries no data). */
   private def readEntries(spark: SparkSession, path: String,
                           entries: Seq[String]): DataFrame =
-    if (entries.forall(e => !(e.startsWith("/") || e.contains("://"))))
+    if (!entries.exists(isAbsolute))
       spark.read.option("basePath", path)
         .parquet(entries.map(Fs.child(path, _)): _*)
     else spark.read.parquet(entries.map(resolveEntry(path, _)): _*)
@@ -243,7 +274,8 @@ object PrunedIndex {
     (manifestFor(spark, path) match {
       case Some(m) if m.nonEmpty =>
         readEntries(spark, path, m.valuesIterator.flatten.toSeq)
-      case _ => listedBase(spark, path)
+      case Some(_) => emptyView(spark, path)
+      case None => listedBase(spark, path)
     }).drop(BucketCol)
 
   /** Pruned view for a probe: only the files of the buckets that
@@ -282,7 +314,8 @@ object PrunedIndex {
               s"no readable data file under $path to derive the stored schema"))
           readEntries(spark, path, Seq(one)).limit(0)
         }
-      case _ => listedBase(spark, path)
+      case Some(_) => emptyView(spark, path)
+      case None => listedBase(spark, path)
     }
     // using-column joins reorder output (key columns first); re-select
     // the stored data-column order so the pruned view is schema-identical
@@ -408,11 +441,7 @@ object PrunedIndex {
     val kept = old.iterator.collect { case (b, fs) if !touched(b) =>
       fs.map(e => s"$b\t${resolveEntry(base, e)}")
     }.flatten.toSeq
-    Fs.writeStringAtomic(manifestPath(path), (kept ++ newLines).mkString("\n"))
-    Fs.writeStringAtomic(metaPath(path),
-      s"${keyCols.mkString(",")}\n$numBuckets\n$token")
-    manifestCache.filterInPlace((k, _) => k._2 != path)
-    baseCache.filterInPlace((k, _) => k._2 != path)
+    publish(path, kept ++ newLines, keyCols, numBuckets, token, full.schema)
   }
 
   /** APPEND-only delta: land `rows` as new files in their key buckets
@@ -466,11 +495,7 @@ object PrunedIndex {
     val kept = old.iterator.flatMap { case (b, fs) =>
       fs.map(e => s"$b\t${resolveEntry(base, e)}")
     }.toSeq
-    Fs.writeStringAtomic(manifestPath(path), (kept ++ newLines).mkString("\n"))
-    Fs.writeStringAtomic(metaPath(path),
-      s"${keyCols.mkString(",")}\n$numBuckets\n$token")
-    manifestCache.filterInPlace((k, _) => k._2 != path)
-    baseCache.filterInPlace((k, _) => k._2 != path)
+    publish(path, kept ++ newLines, keyCols, numBuckets, token, rows.schema)
   }
 
   /** Garbage-collect data files under `path` that the CURRENT manifest

@@ -251,11 +251,15 @@ class AnnIndexStoreSpec extends AnyFunSuite {
     assert(AnnIndexStore.vacuum(root, keep = 1) == Seq(1L, 2L))
     assert(AnnIndexStore.versions(root) == Seq(3L) && storeRows() == fresh)
     // orphan sweep: a crashed build's uncommitted dir (no _SUCCESS) is
-    // invisible to versions() but vacuum removes it
+    // invisible to versions(); a FRESH one may be a live writer's
+    // in-flight version and is spared, a stale one is removed
     graft.fs.Fs.mkdirs(graft.fs.Fs.child(root, "v9/assigned"))
     graft.fs.Fs.writeStringAtomic(
       graft.fs.Fs.child(root, "v9/assigned/stale-file"), "debris")
     assert(AnnIndexStore.versions(root) == Seq(3L))
+    assert(AnnIndexStore.vacuum(root, keep = 2).isEmpty)
+    assert(graft.fs.Fs.exists(graft.fs.Fs.child(root, "v9")))
+    TreeAge.backdate(graft.fs.Fs.child(root, "v9"))
     assert(AnnIndexStore.vacuum(root, keep = 2).toSet == Set(9L))
     assert(!graft.fs.Fs.exists(graft.fs.Fs.child(root, "v9")))
     assert(storeRows() == fresh)

@@ -167,6 +167,31 @@ class CurationLedgerStoreSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("a corpus with no near-dup pair: empty edge component survives absorb + compact") {
+    val base = Synthetic.docs(spark, 0L until 40L)
+    val bench = Synthetic.docs(spark, 1000L until 1004L)
+    // new docs plus re-uploads of three stored ids
+    val delta = Synthetic.docs(spark, 40L until 55L)
+      .unionByName(Synthetic.docs(spark, Seq(3L, 7L, 11L), revision = 1))
+    val clean = applyDelta(base, delta)
+    val root = java.nio.file.Files.createTempDirectory("graft_curstore_ne").toString
+    def edges() = graft.sources.PrunedIndex.read(spark,
+      s"${CurationLedgerStore.currentPath(root).get}/edges")
+
+    CurationLedgerStore.build(spark, base, bench, "text", root, storeParams)
+    assert(edges().count() == 0L, "fixture: the build must land an empty edge component")
+    CurationLedgerStore.absorbBatch(spark, root, delta).collect()
+    val twin = rows(twinLedger(clean, bench))
+    assert(rows(CurationLedgerStore.ledger(spark, root)) == twin && twin.nonEmpty,
+      "absorb over an empty edge component != rebuild twin")
+    CurationLedgerStore.compact(spark, root)
+    assert(edges().count() == 0L && edges().columns.toSeq == Seq("src", "dst"))
+    assert(rows(CurationLedgerStore.ledger(spark, root)) == twin,
+      "compaction over an empty edge component changed the ledger")
+    graft.llm.Dedup.releaseShingleSetCache(clean, "doc_id", "text")
+    spark.catalog.clearCache()
+  }
+
   test("streaming twin: emissions telescope to the rebuild-twin ledger, across a RESTART") {
     import org.apache.spark.sql.expressions.Window
     val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -398,3 +398,189 @@ class VacuumReaderPropertySpec extends Properties("graft.vacuumreader") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(4)
 }
+
+/** Crash consistency of the four versioned stores, all laid out by
+  * [[graft.store.VersionedRoot]] — one property per store, same checks.
+  *
+  * A writer can die anywhere before its pointer swap. That leaves
+  * either a version dir holding any SUBSET of its components (they land
+  * concurrently) and no `_SUCCESS`, or the whole version with its
+  * `_SUCCESS` but `_CURRENT` still on the previous version. Each case
+  * copies a store that has committed one write, cuts that write back to
+  * a random-subset crash state, and checks that readers still see the
+  * previous version and that the retried write commits the same answer;
+  * then does the same for the marker-but-no-pointer state. It then runs
+  * a vacuum while a reader scans the previous version (every completed
+  * scan must return all of it), and checks that a fresh orphan `v<N>`
+  * is spared and a stale one swept under a `file:`-qualified root. */
+class StoreCrashPropertySpec extends Properties("graft.storecrash") {
+  private lazy val spark = GraftSpark.spark
+
+  import java.nio.file.{Files, Path, Paths}
+  import graft.fs.Fs
+  import graft.sources.PrunedIndex
+  import graft.store.VersionedRoot
+
+  /** One store: `build` lands v1, `write` is the next write (run once
+    * for the template, then as each retry), `readAt` reads one version
+    * dir's rows, `vacuum` is the store's own `vacuum(root)`. */
+  private final class Store(val build: String => Unit, val write: String => Unit,
+                            val readAt: String => Set[String],
+                            val vacuum: String => Unit)
+
+  /** A store root after build + one committed write, with the answers
+    * before and after the write and the write's top-level entries. */
+  private final class Template(val root: String, val before: Set[String],
+                               val after: Set[String], val entries: Seq[String])
+
+  private def template(s: Store): Template = {
+    val root = Files.createTempDirectory("graft_crash_tpl").resolve("s").toString
+    s.build(root)
+    val before = s.readAt(VersionedRoot.requireCurrent(root))
+    s.write(root)
+    val cur = VersionedRoot.requireCurrent(root)
+    val entries = Fs.list(cur).map(_.getPath.getName)
+      .filterNot(n => n == "_SUCCESS" || n.startsWith("."))
+    new Template(root, before, s.readAt(cur), entries)
+  }
+
+  private def copyTree(src: String): String = {
+    val dst = Files.createTempDirectory("graft_crash").resolve("s")
+    val from = Paths.get(src)
+    val walk = Files.walk(from)
+    try walk.forEach(p => Files.copy(p, dst.resolve(from.relativize(p))): Unit)
+    finally walk.close()
+    dst.toString
+  }
+
+  /** Remove one entry of a version dir with its Hadoop `.crc` sidecar. */
+  private def remove(dir: Path, name: String): Unit =
+    Seq(name, s".$name.crc").map(dir.resolve).filter(Files.exists(_))
+      .foreach(p => Fs.deleteRecursive(p.toString))
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.collect().map(_.toString).toSet
+
+  /** Every scan of `held` that completes while `vacuum` runs must
+    * return `want` whole; a scan may fail whole (its files were dropped
+    * under it). Returns the violations. */
+  private def vacuumRacingReader(s: Store, root: String, held: String,
+                                 want: Set[String]): Seq[String] = {
+    val bad = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    if (s.readAt(held) != want) bad.add("held version unreadable before the vacuum")
+    @volatile var done = false
+    val reader = new Thread(() => {
+      while (!done)
+        try { if (s.readAt(held) != want) bad.add("a completed scan returned a partial version") }
+        catch { case _: Throwable => () }
+    })
+    reader.start()
+    try s.vacuum(root) catch { case e: Throwable => bad.add(s"vacuum threw: $e") }
+    done = true
+    reader.join(120000)
+    bad.toArray.map(_.toString).toSeq
+  }
+
+  private def crashProperty(s: Store): Prop = {
+    lazy val t = template(s)
+    Prop.forAllNoShrink(Gen.choose(0L, Long.MaxValue)) { bits =>
+      val root = copyTree(t.root)
+      val v = VersionedRoot.currentVersion(root).get
+      val held = VersionedRoot.versionDir(root, v - 1)
+      val failures = Seq.newBuilder[String]
+      def check(ok: Boolean, what: String): Unit = if (!ok) failures += what
+      def onPrevious(committed: Seq[Long], state: String): Unit = {
+        check(VersionedRoot.currentVersion(root).contains(v - 1), s"$state: pointer moved")
+        check(VersionedRoot.versions(root) == committed, s"$state: versions ${VersionedRoot.versions(root)}")
+        check(s.readAt(VersionedRoot.requireCurrent(root)) == t.before, s"$state: reader left v${v - 1}")
+      }
+      def retried(want: Long, state: String): Unit = {
+        s.write(root)
+        check(VersionedRoot.currentVersion(root).contains(want), s"$state: retry committed ${VersionedRoot.currentVersion(root)}")
+        check(s.readAt(VersionedRoot.requireCurrent(root)) == t.after, s"$state: retry answer differs")
+      }
+      // abort after a random subset of the component writes
+      val dir = Paths.get(VersionedRoot.versionDir(root, v))
+      t.entries.zipWithIndex.filter { case (_, i) => (bits >> (i % 63) & 1L) == 0L }
+        .foreach { case (e, _) => remove(dir, e) }
+      remove(dir, "_SUCCESS")
+      VersionedRoot.commit(root, v - 1)
+      onPrevious((1L until v).toSeq, "component abort")
+      retried(v, "component abort")
+      // abort between _SUCCESS and the _CURRENT swap
+      VersionedRoot.commit(root, v - 1)
+      onPrevious((1L to v).toSeq, "marker abort")
+      retried(v + 1, "marker abort")
+      vacuumRacingReader(s, root, held, t.before).foreach(failures += _)
+      check(s.readAt(VersionedRoot.requireCurrent(root)) == t.after, "vacuum broke the current version")
+      // orphans, under a scheme-qualified root spelling
+      val orphan = VersionedRoot.versionDir(root, 99)
+      Fs.writeStringAtomic(Fs.child(orphan, "part-0"), "debris")
+      s.vacuum("file:" + root)
+      check(Fs.exists(orphan), "fresh orphan swept")
+      if (Fs.exists(orphan)) TreeAge.backdate(orphan)
+      s.vacuum("file:" + root)
+      check(!Fs.exists(orphan), "stale orphan spared")
+      val found = failures.result()
+      Prop(found.isEmpty) :| found.mkString("; ")
+    }
+  }
+
+  property("ParquetMergeSink") = {
+    import graft.sinks.ParquetMergeSink
+    def parts(root: String) = (Paths.get(root).getParent.toString, Paths.get(root).getFileName.toString)
+    def merge(root: String, keys: Range, v: Long): Unit = {
+      import spark.implicits._
+      val (wh, t) = parts(root)
+      ParquetMergeSink.mergeNext(spark, wh, t, keys.map(k => (k, v)).toDF("k", "v"), Seq("k")): Unit
+    }
+    crashProperty(new Store(merge(_, 0 until 5, 1L), merge(_, 3 until 7, 2L),
+      dir => rows(spark.read.parquet(dir)),
+      root => { val (wh, t) = parts(root); ParquetMergeSink.vacuum(wh, t) }))
+  }
+
+  property("NearDupIndexStore") = {
+    import graft.llm.NearDupIndexStore
+    import spark.implicits._
+    def text(i: Int): String = (0 until 12).map(j => s"s${i}z$j").mkString(" ")
+    crashProperty(new Store(
+      root => NearDupIndexStore.build(spark, (0 until 20).map(i => (i.toLong, text(i)))
+        .toDF("doc_id", "text"), "doc_id", "text", root, numBuckets = 4): Unit,
+      root => NearDupIndexStore.appendDelta(spark, root,
+        Seq((100L, text(7)), (101L, text(41)), (5L, text(5) + " revised"))
+          .toDF("doc_id", "text"), "doc_id", "text"): Unit,
+      dir => rows(PrunedIndex.read(spark, Fs.child(dir, "sets"))),
+      NearDupIndexStore.vacuum(_): Unit))
+  }
+
+  property("AnnIndexStore") = {
+    import graft.llm.AnnIndexStore
+    val p = AnnIndexStore.Params(nCells = 4, iters = 2, numBuckets = 4, m = 4,
+      efConstruction = 12, multiAssign = 1)
+    crashProperty(new Store(
+      root => AnnIndexStore.build(spark, Synthetic.embeddings(spark, 0L until 120L),
+        "vec_id", "embedding", root, p): Unit,
+      root => AnnIndexStore.appendDelta(spark, root,
+        Synthetic.embeddings(spark, 120L until 130L), "vec_id", "embedding", p): Unit,
+      dir => rows(PrunedIndex.read(spark, Fs.child(dir, "assigned"))),
+      AnnIndexStore.vacuum(_): Unit))
+  }
+
+  property("CurationLedgerStore") = {
+    import graft.llm.CurationLedgerStore
+    val p = CurationLedgerStore.Params(idCol = "doc_id", textCol = "text",
+      scoreCol = "n_chars", sourceCol = "source", neardupBuckets = 8,
+      idBuckets = 4, tokBuckets = 4, packBuckets = 4, hashBands = 64)
+    crashProperty(new Store(
+      root => CurationLedgerStore.build(spark, Synthetic.docs(spark, 0L until 60L),
+        Synthetic.docs(spark, 1000L until 1004L), "text", root, p): Unit,
+      root => CurationLedgerStore.absorbBatch(spark, root,
+        Synthetic.docs(spark, 60L until 80L)
+          .unionByName(Synthetic.docs(spark, Seq(5L, 9L), revision = 1))).collect(): Unit,
+      dir => rows(PrunedIndex.read(spark, Fs.child(dir, "ledger"))),
+      CurationLedgerStore.vacuum(_): Unit))
+  }
+
+  override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
+    p.withMinSuccessfulTests(3)
+}

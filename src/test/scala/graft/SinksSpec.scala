@@ -92,9 +92,8 @@ class SinksSpec extends AnyFunSuite {
     val staleV = root.resolve("v99"); Files.createDirectories(staleV)
     Files.writeString(staleV.resolve("part-0.parquet"), "debris")
     val staleHidden = root.resolve(".vacuum-v98"); Files.createDirectories(staleHidden)
-    staleV.toFile.setLastModified(System.currentTimeMillis() - 100000)
-    staleV.resolve("part-0.parquet").toFile.setLastModified(System.currentTimeMillis() - 100000)
-    staleHidden.toFile.setLastModified(System.currentTimeMillis() - 100000)
+    TreeAge.backdate(staleV.toString)
+    TreeAge.backdate(staleHidden.toString)
     // an IN-FLIGHT writer's fresh uncommitted dir must survive the sweep
     val fresh = root.resolve("v100"); Files.createDirectories(fresh)
     // and so must a LONG-RUNNING writer's dir whose top-level mtime is
@@ -103,9 +102,10 @@ class SinksSpec extends AnyFunSuite {
     val slow = root.resolve("v101")
     Files.createDirectories(slow.resolve("part_bucket=0"))
     Files.writeString(slow.resolve("part_bucket=0").resolve("part-0.parquet"), "in-flight")
-    slow.toFile.setLastModified(System.currentTimeMillis() - 100000)
-    slow.resolve("part_bucket=0").toFile.setLastModified(System.currentTimeMillis() - 100000)
-    ParquetMergeSink.vacuum(wh, "t", keep = 1, debrisGraceMs = 50000)
+    slow.toFile.setLastModified(System.currentTimeMillis() - TreeAge.PastGraceMs)
+    slow.resolve("part_bucket=0").toFile.setLastModified(
+      System.currentTimeMillis() - TreeAge.PastGraceMs)
+    ParquetMergeSink.vacuum(wh, "t", keep = 1)
     assert(!Files.exists(staleV), "stale uncommitted v-dir must be swept")
     assert(!Files.exists(staleHidden), "stale .vacuum-* remnant must be swept")
     assert(Files.exists(fresh), "fresh (possibly in-flight) dir must be spared")
