@@ -2267,11 +2267,11 @@ object SparkEntry {
     * true corpus applies verbatim; zero stale residue after the replace
     * is driver-hash-checked. */
   /** Fixture: the indexed curation state (four thin frames + the
-    * persisted near-dup index) built over the pre-delta corpus. The
-    * timed path's in-place index append is replace-by-key idempotent
-    * and the probe is order-independent with it, so re-running the
-    * batch against the already-advanced index yields the identical
-    * ledger (the replay contract CurationSpec pins). */
+    * near-dup index store) built over the pre-delta corpus. Each timed
+    * run commits one more store version with the batch appended; the
+    * probe is order-independent with that append, so re-running the
+    * batch against the already-advanced store yields the identical
+    * ledger (the contract CurationSpec pins). */
   private def t141Fixture(s: SparkSession, dir: String): Unit = {
     val d = t(s, dir, "documents")
     val old = d.withColumn("text",
@@ -2311,8 +2311,7 @@ object SparkEntry {
     * TWO daily batches then flow through probe→append — the second
     * batch probes a STITCHED version (v2 references v1's untouched
     * bucket files by absolute path; write I/O was delta-bounded) behind
-    * one atomic `_CURRENT` swap per batch (no torn prefix/sets view,
-    * t140's in-place crash window closed).
+    * one atomic `_CURRENT` swap per batch (no torn prefix/sets view).
     *
     * OPERATIONAL path only (r17 bench hygiene): the output is the two
     * batches' probe pairs — exactly the pairs touching a batch id

@@ -544,7 +544,7 @@ object AnnIndexStore {
       val empty = graft.sources.PrunedIndex.read(spark, subCentsPath(cur)).limit(0)
       graft.sources.PrunedIndex.writeDelta(spark, subCentsPath(dir),
         empty, empty.select(col("coarse")),
-        basePath = Some(subCentsPath(cur)))
+        basePath = subCentsPath(cur))
     }
     if (Fs.exists(codesPath(cur))) tasks += { () =>
       // codes advance like the assignment: the delta encodes under the
@@ -559,7 +559,7 @@ object AnnIndexStore {
       graft.sources.PrunedIndex.writeDelta(spark, codesPath(dir),
         keptCodes.select(col(idCol), col("codes"), col("cell"))
           .unionByName(deltaCodeRows.select(col(idCol), col("codes"), col("cell"))),
-        touchedCells, basePath = Some(codesPath(cur)), p.maxRecordsPerFile)
+        touchedCells, basePath = codesPath(cur), p.maxRecordsPerFile)
       spark.read.parquet(pqBooksPath(cur)).coalesce(1)
         .write.mode("overwrite").parquet(pqBooksPath(dir))
     }
@@ -569,26 +569,26 @@ object AnnIndexStore {
       // replace-by-key), every other bucket stitches forward
       graft.sources.PrunedIndex.writeDelta(spark, vecsByIdPath(dir),
         delta.select(col(idCol), col(vecCol)), deltaIds,
-        basePath = Some(vecsByIdPath(cur)), p.maxRecordsPerFile)
+        basePath = vecsByIdPath(cur), p.maxRecordsPerFile)
     }
     if (hasIdCells) tasks += { () =>
       // the cell map advances the same way: one (id, cell) row per
       // delta assignment row, replace-by-key on the delta's ids
       graft.sources.PrunedIndex.writeDelta(spark, idCellsPath(dir),
         deltaAssignedCk.select(col(idCol), col("cell")), deltaIds,
-        basePath = Some(idCellsPath(cur)), p.maxRecordsPerFile)
+        basePath = idCellsPath(cur), p.maxRecordsPerFile)
     }
     tasks += { () =>
       val touchedCols = Seq(col(idCol), col(vecCol), col("cell")) ++
         (if (touchedAssigned.columns.contains("rank")) Seq(col("rank")) else Nil)
       graft.sources.PrunedIndex.writeDelta(spark, Fs.child(dir, "assigned"),
         touchedAssigned.select(touchedCols: _*),
-        touchedCells, basePath = Some(Fs.child(cur, "assigned")), p.maxRecordsPerFile)
+        touchedCells, basePath = Fs.child(cur, "assigned"), p.maxRecordsPerFile)
     }
     tasks += (() =>
       graft.sources.PrunedIndex.writeDelta(spark, Fs.child(dir, "graph"),
         recomputedEdges.select(col("cell"), col("src"), col("dst"), col("pos")),
-        touchedCells, basePath = Some(Fs.child(cur, "graph")), p.maxRecordsPerFile))
+        touchedCells, basePath = Fs.child(cur, "graph"), p.maxRecordsPerFile))
     // advance the drift baseline from the batch's OWN stats — per-cell
     // (n, Σ d2_ppm) are pure sums, so old + delta rows − replaced ids'
     // old rows equals a full recompute over the post-append assignment

@@ -435,23 +435,23 @@ object Curation {
     post.except(prev)
 
   /** [[State]] with the shingle side living in a PERSISTED near-dup
-    * index ([[Dedup.writeNearDupIndex]]'s root) instead of an in-frame
+    * index ([[NearDupIndexStore]]) instead of an in-frame
     * projection — the 100 TB deployment shape: the four remaining
     * frames are THIN (no array columns), and per-batch pair
     * maintenance probes the index delta-bounded END TO END
     * ([[Dedup.jaccardDeltaPairsIndexed]] — no per-batch df
     * re-aggregation, corpus re-explosion, or full-index shuffle, the
     * costs [[mergeState]]'s jaccardDeltaPairs still pays at corpus
-    * scale). The index root carries its own durable layout (PrunedIndex
-    * manifests + the frozen df head); the frames parquet-round-trip
-    * like [[State]]'s. */
+    * scale). The index root is a [[NearDupIndexStore]] (each batch
+    * commits a new version); the frames parquet-round-trip like
+    * [[State]]'s. */
   final case class IndexedState(thin: DataFrame, pairs: DataFrame,
                                 cleanIds: DataFrame, census: DataFrame,
                                 gramIndex: DataFrame)
 
-  /** Derive the [[IndexedState]] + write the near-dup index for a
-    * corpus — [[buildState]]'s one-time batch cost plus the index
-    * build. Parameters must match the ledger call's. */
+  /** Derive the [[IndexedState]] + build the near-dup index store at
+    * `indexRoot` for a corpus — [[buildState]]'s one-time batch cost
+    * plus the index build. Parameters must match the ledger call's. */
   def buildStateIndexed(spark: org.apache.spark.sql.SparkSession,
                         docs: DataFrame, idCol: String, textCol: String,
                         scoreCol: String, sourceCol: String,
@@ -460,7 +460,7 @@ object Curation {
                         shingleN: Int = 3, jaccardThreshold: Double = 0.8,
                         gramN: Int = 8, minShared: Int = 2,
                         numBuckets: Int = 64): IndexedState = {
-    Dedup.writeNearDupIndex(spark, docs, idCol, textCol, indexRoot,
+    NearDupIndexStore.build(spark, docs, idCol, textCol, indexRoot,
       shingleN, jaccardThreshold, numBuckets = numBuckets)
     val idx = Decontaminate.benchGramIndex(bench, benchTextCol, gramN)
     IndexedState(
@@ -478,15 +478,16 @@ object Curation {
     * for the delta's pairs (delta-bounded; the probe is
     * order-independent with the append — stale/self rows are
     * anti-joined on the stored side), APPENDS the delta into the index
-    * ([[Dedup.appendNearDupIndexDelta]] — delta-bounded write I/O,
-    * REPLACE semantics for re-uploads), and returns the post-batch thin
+    * as a new store version ([[NearDupIndexStore.appendDelta]] —
+    * delta-bounded write I/O, REPLACE semantics for re-uploads), and
+    * returns the post-batch thin
     * frames under [[mergeState]]'s replace contract:
     * mergeStateIndexed(state, delta) frames == buildStateIndexed on the
     * post-replace corpus (pinned in CurationSpec). The returned pairs
     * are materialized (localCheckpoint) before the append lands; the
     * delta's shingle plan stays persisted for the ledger's verify reads
-    * — release it via [[Dedup.releaseIndexedProbeCache]] when the batch
-    * is done ([[fullPipelineLedgerDeltaIndexed]] does this itself). */
+    * — release it via [[NearDupIndexStore.releaseProbeCache]] when the
+    * batch is done ([[fullPipelineLedgerDeltaIndexed]] does this itself). */
   def mergeStateIndexed(spark: org.apache.spark.sql.SparkSession,
                         state: IndexedState, indexRoot: String,
                         delta: DataFrame,
@@ -508,9 +509,9 @@ object Curation {
     val deltaIds = delta.select(col(idCol)).distinct()
     def fresh(df: DataFrame, key: String): DataFrame =
       df.join(broadcast(deltaIds.toDF(key)), Seq(key), "left_anti")
-    val deltaPairs = Dedup.jaccardDeltaPairsIndexed(spark, indexRoot,
+    val deltaPairs = NearDupIndexStore.pairsForDelta(spark, indexRoot,
       delta, idCol, textCol).ckpt()
-    Dedup.appendNearDupIndexDelta(spark, indexRoot, delta, idCol, textCol)
+    NearDupIndexStore.appendDelta(spark, indexRoot, delta, idCol, textCol)
     (IndexedState(
       thin = fresh(state.thin, idCol).unionByName(
         delta.select(col(idCol), col(scoreCol),
@@ -529,7 +530,7 @@ object Curation {
   /** [[fullPipelineLedgerDelta]] over the INDEXED state — identical
     * stage semantics and ledger (t128's oracle applies verbatim), with
     * stage 1's pair maintenance delta-bounded end to end via the
-    * persisted near-dup index. Also advances the index on disk
+    * persisted near-dup index. Also commits the next index version
     * (the [[mergeStateIndexed]] append). */
   def fullPipelineLedgerDeltaIndexed(spark: org.apache.spark.sql.SparkSession,
                               state: IndexedState, indexRoot: String,
@@ -545,7 +546,7 @@ object Curation {
     ledgerFromFrames(merged.thin, merged.pairs, merged.cleanIds, merged.census,
       idCol, scoreCol, sourceCol, minAvgLogProbPpm, targetPpm, capacity, nBuckets,
       afterSurvivors = () =>
-        Dedup.releaseIndexedProbeCache(indexRoot, delta, idCol, textCol))
+        NearDupIndexStore.releaseProbeCache(indexRoot, delta, idCol, textCol))
   }
 
   /** [[ledgerChangedRows]] with its INPUTS bounded to a candidate id
@@ -784,7 +785,7 @@ object Curation {
     * bands exist for (quota flips and LM flips on untouched docs).
     * `prevSourceCounts` is the #sources-row frame the previous batch
     * persisted ([[qualitySourceCounts]]). Also advances the near-dup
-    * index on disk (the [[mergeStateIndexed]] append). */
+    * index store by one version (the [[mergeStateIndexed]] append). */
   def fullPipelineLedgerDeltaIndexedChanged(
       spark: org.apache.spark.sql.SparkSession,
       state: IndexedState, indexRoot: String, delta: DataFrame,
@@ -800,7 +801,7 @@ object Curation {
       merged.census, idCol, scoreCol, sourceCol, minAvgLogProbPpm, targetPpm,
       capacity, nBuckets,
       afterSurvivors = () =>
-        Dedup.releaseIndexedProbeCache(indexRoot, delta, idCol, textCol))
+        NearDupIndexStore.releaseProbeCache(indexRoot, delta, idCol, textCol))
     val post = ledgerFromStages(st, idCol)
     // Adaptive diff: the candidate machinery pays off when churn is
     // SMALL next to the corpus (the 100 TB steady state — a daily batch

@@ -98,10 +98,9 @@ import graft.store.VersionedRoot
   *   bands/     (band, id, score_ppm, stamp) append   key=band
   *   mixhash/   (msource, hband, id)         append   key=(msource,hband)
   *   ledger/    (id, n_tokens, verdict)               key=id
+  *   neardup/   prefix/ sets/ dfhead/ _NEARDUP_META   the near-dup index
   *   _META / _PARAMS / _SUCCESS;  root/_CURRENT
-  *   root/neardup/  — the persisted near-dup index (its own
-  *                    replay-idempotent append contract)
-  *   root/grams/    — the frozen benchmark gram index
+  *   root/grams/    — the frozen benchmark gram index (written once)
   * }}}
   *
   * Determinism: every stage is the batch pipeline's own arithmetic
@@ -136,7 +135,6 @@ object CurationLedgerStore {
 
   import VersionedRoot.{commit, nextVersion, requireCurrent, versionDir}
 
-  private def neardupRoot(root: String): String = Fs.child(root, "neardup")
   private def gramsPath(root: String): String = Fs.child(root, "grams")
   private def metaPath(d: String): String = Fs.child(d, "_META")
 
@@ -148,6 +146,7 @@ object CurationLedgerStore {
   private def bandsDir(d: String) = Fs.child(d, "bands")
   private def mixDir(d: String) = Fs.child(d, "mixhash")
   private def ledgerDir(d: String) = Fs.child(d, "ledger")
+  private def neardupDir(d: String) = Fs.child(d, "neardup")
 
   def versions(root: String): Seq[Long] = VersionedRoot.versions(root)
 
@@ -251,6 +250,8 @@ object CurationLedgerStore {
     val grams = Decontaminate.benchGramIndex(bench, benchTextCol, p.gramN)
     grams.write.mode("overwrite").parquet(gramsPath(root))
     val gramsStored = spark.read.parquet(gramsPath(root))
+    val v = nextVersion(root)
+    val d = versionDir(root, v)
     // three independent corpus passes (near-dup index build, unigram
     // census, pair generation), overlapped (guide §2.6). The index
     // build and the pair generator share the persisted shingle-set
@@ -258,7 +259,7 @@ object CurationLedgerStore {
     // answers identical either way.
     val built = graft.util.Par.run(Seq[() => DataFrame](
       () => { Dedup.writeNearDupIndex(spark, docs, idCol, textCol,
-        neardupRoot(root), p.shingleN, p.jaccardThreshold, p.dfHeadSize,
+        neardupDir(d), p.shingleN, p.jaccardThreshold, p.dfHeadSize,
         p.neardupBuckets); null },
       () => TextAnalysis.unigramCensus(docs, idCol, textCol)
         .ckpt(),
@@ -278,8 +279,6 @@ object CurationLedgerStore {
     val vocab = census.groupBy(col("tok")).agg(sum(col("n")).as("c"))
     val nTotal = Option(census.agg(sum(col("n"))).collect()(0).get(0))
       .fold(0L)(_.asInstanceOf[Long])
-    val v = nextVersion(root)
-    val d = versionDir(root, v)
     // checkpointed: its lineage (a full gram scrub join) fed both the
     // thin component AND the mix-hash component — two scrub replays
     val thinStored = st.allThin
@@ -343,14 +342,16 @@ object CurationLedgerStore {
     val deltaIds = delta.select(col(idCol)).distinct().ckpt()
     if (deltaIds.isEmpty)
       return PrunedIndex.read(spark, ledgerDir(cur)).limit(0)
+    val v = nextVersion(root)
+    val d = versionDir(root, v)
 
     // ---- independent per-batch derivations, overlapped (guide §2.6):
     //      the prev-census point lookup, the delta census, the delta
     //      thin row (scrub + token count) and the near-dup probe+advance
     //      share no data dependency — each was a sequential eager
-    //      checkpoint job before; within the near-dup task the ordering
-    //      probe-materialize → index-advance is preserved ----
-    val nd = neardupRoot(root)
+    //      checkpoint job before; within the near-dup task the probe
+    //      materializes before the index advances into the new version ----
+    val nd = neardupDir(cur)
     val gramsStored = spark.read.parquet(gramsPath(root))
     val parts = graft.util.Par.run(Seq[() => DataFrame](
       // pre-update point lookup (the PREV version's truth; the thin
@@ -371,11 +372,13 @@ object CurationLedgerStore {
             coalesce(col("clean"), lit(false)).as("clean"))
           .ckpt()
       },
-      // near-dup pair churn: probe (materialized) then advance the index
+      // near-dup pair churn: probe (materialized) then land the advanced
+      // index in the new version
       () => {
         val dp = Dedup.jaccardDeltaPairsIndexed(spark, nd, delta,
           idCol, textCol).ckpt()
-        Dedup.appendNearDupIndexDelta(spark, nd, delta, idCol, textCol)
+        Dedup.appendNearDupIndexDeltaInto(spark, nd, neardupDir(d), delta,
+          idCol, textCol)
         Dedup.releaseIndexedProbeCache(nd, delta, idCol, textCol)
         dp
       }))
@@ -716,8 +719,6 @@ object CurationLedgerStore {
     var changed: DataFrame = null
 
     // ---- land the new version (write I/O delta-bounded everywhere) ----
-    val v = nextVersion(root)
-    val d = versionDir(root, v)
     val mrpf = p.maxRecordsPerFile
     // prevNbrs is BFS hop 1's read (same probe: deltaIds as src), and
     // touchedSrcs ⊆ reach (hop-1 dsts and every delta-pair endpoint are
@@ -741,30 +742,30 @@ object CurationLedgerStore {
     graft.util.Par.runUnit(Seq(
       () => { changed = posts.except(prevRowsAll).ckpt() },
       () => PrunedIndex.writeDelta(spark, thinDir(d), deltaThin, deltaIds,
-        basePath = Some(thinDir(cur)), mrpf),
+        basePath = thinDir(cur), mrpf),
       () => PrunedIndex.writeDelta(spark, censusDir(d), deltaCensus,
         deltaIds.select(col(idCol).as("id")),
-        basePath = Some(censusDir(cur)), mrpf),
+        basePath = censusDir(cur), mrpf),
       () => PrunedIndex.appendRows(spark, censusTokDir(d),
         deltaCensus.select(col("tok"), col("id"), col("n")),
-        basePath = Some(censusTokDir(cur)), mrpf),
+        basePath = censusTokDir(cur), mrpf),
       () => PrunedIndex.writeDelta(spark, vocabDir(d),
         cRows.filter(col("cpost") > 0L).select(col("tok"), col("cpost").as("c")),
-        touchedToks, basePath = Some(vocabDir(cur)), mrpf),
+        touchedToks, basePath = vocabDir(cur), mrpf),
       () => PrunedIndex.writeDelta(spark, edgesDir(d), newEdgeRows, touchedSrcs,
-        basePath = Some(edgesDir(cur)), mrpf),
+        basePath = edgesDir(cur), mrpf),
       // every candidate was rescored exactly — re-stamp them so the band
       // stays sparse (stale generations are the compaction's business)
       () => PrunedIndex.appendRows(spark, bandsDir(d),
         candScores.select(bandOf(col("score_ppm"), w).as("band"),
           col(idCol).as("id"), col("score_ppm"), lit(k1).as("stamp")),
-        basePath = Some(bandsDir(cur)), mrpf),
+        basePath = bandsDir(cur), mrpf),
       () => PrunedIndex.appendRows(spark, mixDir(d),
         deltaThin.select(col(sourceCol).as("msource"),
           hbandOf(col(idCol), p.hashBands).as("hband"), col(idCol).as("id")),
-        basePath = Some(mixDir(cur)), mrpf),
+        basePath = mixDir(cur), mrpf),
       () => PrunedIndex.writeDelta(spark, ledgerDir(d), posts,
-        posts.select(col(idCol)), basePath = Some(ledgerDir(cur)), mrpf)))
+        posts.select(col(idCol)), basePath = ledgerDir(cur), mrpf)))
     VersionedRoot.writeParams(d, p)
     Fs.writeStringAtomic(metaPath(d),
       renderMeta(Meta(k1, nPost, boundsPost, countsPost)))
@@ -775,7 +776,8 @@ object CurationLedgerStore {
   /** The stitched components — the manifest scan set for [[chainDepth]]
     * and [[vacuum]]. */
   private val AllComponents: Seq[String] = Seq("thin", "census", "censustok",
-    "vocab", "edges", "bands", "mixhash", "ledger")
+    "vocab", "edges", "bands", "mixhash", "ledger", "neardup/prefix",
+    "neardup/sets")
 
   /** How many version dirs the CURRENT version's stitched manifests
     * reach into ([[VersionedRoot.chainDepth]]; 1 = self-contained) —
@@ -798,9 +800,9 @@ object CurationLedgerStore {
     * drops versions beyond the newest `keep` that no retained manifest
     * references (sparable only after [[compact]] folds the chain flat),
     * and sweeps stale orphans of crashed absorbs. Single-writer
-    * contract. Returns the dropped versions. The near-dup index under
-    * `root/neardup` has its own in-place retention ([[Dedup]]'s
-    * refreeze + sweep). */
+    * contract. Returns the dropped versions. The near-dup index is a
+    * component of each version, so it is retained and dropped with
+    * them; only the write-once `root/grams` lives outside. */
   def vacuum(root: String, keep: Int = 1): Seq[Long] =
     VersionedRoot.vacuum(root, AllComponents, keep)
 
@@ -817,7 +819,8 @@ object CurationLedgerStore {
     * (r19 ADVICE). The candidate-band invariant is preserved: after an
     * exact full rescore, |true − stored| = 0 for every doc, so
     * B = [0] certifies it. Answers never change — ledger, thin,
-    * census, vocabulary, edges carry verbatim; only the lazy-rescoring
+    * census, vocabulary, edges and the near-dup index (same frozen
+    * head) carry verbatim; only the lazy-rescoring
     * bookkeeping tightens. */
   def compact(spark: SparkSession, root: String): Long = {
     val p = storedParams(root)
@@ -856,7 +859,8 @@ object CurationLedgerStore {
           hbandOf(col(idCol), p.hashBands).as("hband"), col(idCol).as("id")),
         mixDir(d), Seq("msource", "hband"), p.idBuckets, mrpf),
       () => PrunedIndex.write(PrunedIndex.read(spark, ledgerDir(cur)),
-        ledgerDir(d), Seq(idCol), p.idBuckets, mrpf)))
+        ledgerDir(d), Seq(idCol), p.idBuckets, mrpf),
+      () => Dedup.compactIndexInto(spark, neardupDir(cur), neardupDir(d))))
     VersionedRoot.writeParams(d, p)
     // the bound ledger folds to its base: every doc just rescored
     // exactly (stamp 0), so the certified drift since stamp 0 is 0

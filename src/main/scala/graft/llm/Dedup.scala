@@ -518,7 +518,7 @@ object Dedup {
   }
 
   /** The persisted head size (line 3), defaulting for legacy roots. */
-  private[llm] def readNearDupHeadSize(root: String): Int = {
+  private def readNearDupHeadSize(root: String): Int = {
     val ls = graft.fs.Fs.readString(nearDupMetaPath(root)).split("\n")
     if (ls.length >= 3 && ls(2).trim.nonEmpty) ls(2).trim.toInt else 100000
   }
@@ -529,12 +529,12 @@ object Dedup {
     if (ls.length >= 4 && ls(3).trim.nonEmpty) Some(ls(3).trim.toLong) else None
   }
 
-  private[llm] def readFrozenHead(spark: org.apache.spark.sql.SparkSession,
+  private def readFrozenHead(spark: org.apache.spark.sql.SparkSession,
                              root: String): Map[String, Long] =
     spark.read.parquet(graft.fs.Fs.child(root, "dfhead"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
-  private[llm] def writeFrozenHead(spark: org.apache.spark.sql.SparkSession,
+  private def writeFrozenHead(spark: org.apache.spark.sql.SparkSession,
                               root: String, head: Map[String, Long]): Unit = {
     import spark.implicits._
     head.toSeq.toDF("shingle", "df").coalesce(1)
@@ -551,8 +551,8 @@ object Dedup {
   /** Build the persisted near-dup index for `docs` (one corpus version):
     * shingle sets land keyed by id (verification side), their prefix
     * rows keyed by shingle (candidate side), and the df head freezes
-    * the prefix order. Write-once; maintain with
-    * [[appendNearDupIndexDelta]]; probe with
+    * the prefix order. Write-once; a [[NearDupIndexStore]] version
+    * advances it with [[appendNearDupIndexDeltaInto]]; probe with
     * [[jaccardDeltaPairsIndexed]]. */
   def writeNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                         docs: DataFrame, idCol: String, textCol: String,
@@ -587,7 +587,7 @@ object Dedup {
     * verification reads only the candidate partner ids' buckets of the
     * sets index. Re-uploaded ids count only their delta revision (stale
     * stored rows anti-joined on both reads), so probing before or after
-    * [[appendNearDupIndexDelta]] gives the same answer. The delta's
+    * the append of the same batch gives the same answer. The delta's
     * shingle-set plan is persisted for the call — release with
     * [[releaseShingleSetCache]](delta, idCol, textCol, n). */
   def jaccardDeltaPairsIndexed(spark: org.apache.spark.sql.SparkSession,
@@ -627,41 +627,6 @@ object Dedup {
         .unionByName(deltaSets), threshold)
   }
 
-  /** Absorb `delta` into the persisted near-dup index (REPLACE
-    * semantics for re-uploaded ids, delta-bounded write I/O): the sets
-    * index replace-by-key upserts the delta's rows; the prefix index
-    * rewrites ONLY the buckets of (the delta's prefix shingles ∪ the
-    * replaced ids' OLD prefix shingles — the displaced rows must leave
-    * their buckets even when the new text shares none of them), via
-    * [[graft.sources.PrunedIndex.writeDelta]]'s stitched manifests.
-    * After the call, [[jaccardDeltaPairsIndexed]] for a LATER batch
-    * equals a probe against a from-scratch [[writeNearDupIndex]] over
-    * the post-delta corpus at the SAME frozen head (pinned in
-    * DedupSpec); the head itself stays frozen — [[refreezeNearDupIndex]]
-    * re-derives it when candidate counts drift.
-    *
-    * Crash contract: the two layout swaps (prefix, then sets) are each
-    * atomic but not jointly — a crash between them leaves a view whose
-    * prefix index is ahead of its sets index (candidates for the
-    * half-landed delta surface but fail verification: missing partner
-    * sets only DROP rows, never corrupt them). Recovery is the
-    * reference's replay story: re-run the batch — the call is
-    * IDEMPOTENT (replace-by-key on both layouts; re-landed rows equal
-    * themselves; pinned in DedupSpec). */
-  def appendNearDupIndexDelta(spark: org.apache.spark.sql.SparkSession,
-                              root: String, delta: DataFrame,
-                              idCol: String, textCol: String): Unit =
-    appendNearDupIndexDeltaInto(spark, root, root, delta, idCol, textCol)
-
-  /** [[appendNearDupIndexDelta]] landing in a DIFFERENT root: reads
-    * come from `from`, the touched buckets' new files land under `into`
-    * and untouched buckets stitch `from`'s files by absolute path
-    * ([[graft.sources.PrunedIndex.writeDelta]]'s `basePath` form) —
-    * `from` is never modified. The versioned-store building block
-    * ([[NearDupIndexStore.appendDelta]]): both layouts plus the frozen
-    * head and meta land under one new version dir, which the store then
-    * commits with a single atomic pointer swap — closing the in-place
-    * form's torn-view window between the two layout swaps. */
   /** The per-batch probe frames every shingle-family appender needs:
     * the delta's shingle sets, its distinct ids, and the re-uploaded
     * ids' OLD stored sets. [[NearDupIndexStore.appendDelta]] computes
@@ -683,6 +648,23 @@ object Dedup {
     DeltaProbe(sets, ids, replacedOld)
   }
 
+  /** Absorb `delta` into the near-dup index at `from`, landing the
+    * advanced index under `into` (REPLACE semantics for re-uploaded
+    * ids, delta-bounded write I/O): the sets index replace-by-key
+    * upserts the delta's rows; the prefix index rewrites ONLY the
+    * buckets of (the delta's prefix shingles ∪ the replaced ids' OLD
+    * prefix shingles — the displaced rows must leave their buckets even
+    * when the new text shares none of them). Touched buckets' new files
+    * land under `into`, untouched buckets stitch `from`'s files by
+    * absolute path ([[graft.sources.PrunedIndex.writeDelta]]), and the
+    * frozen head and meta are copied — `from` is never modified. After
+    * the call, [[jaccardDeltaPairsIndexed]] against `into` equals a
+    * probe against a from-scratch [[writeNearDupIndex]] over the
+    * post-delta corpus at the SAME frozen head (pinned in DedupSpec);
+    * a refreezing [[NearDupIndexStore.compact]] re-derives the head.
+    * The store building block: every family lands under one new
+    * version dir, which [[NearDupIndexStore.appendDelta]] commits with
+    * a single atomic pointer swap. */
   private[llm] def appendNearDupIndexDeltaInto(
       spark: org.apache.spark.sql.SparkSession,
       from: String, into: String, delta: DataFrame,
@@ -705,31 +687,26 @@ object Dedup {
     val keptOld = graft.sources.PrunedIndex.readPruned(spark,
         graft.fs.Fs.child(from, "prefix"), probeShingles)
       .join(broadcast(deltaIds), Seq("id"), "left_anti")
-    val base = (c: String) =>
-      if (into == from) None else Some(graft.fs.Fs.child(from, c))
-    // the two layout swaps are independent (distinct dirs; deltaSets /
+    // the two layout writes are independent (distinct dirs; deltaSets /
     // probeShingles are eager checkpoints, keptOld a bucket-pruned read
-    // of the immutable `from`) — overlap them (guide §2.6). The crash
-    // contract above already documents the torn BETWEEN-layout view as
-    // the replay-first case; overlapping changes which layout can land
-    // first, not the recovery story (replay is replace-by-key
-    // idempotent on both).
+    // of the immutable `from`) — overlap them (guide §2.6)
     graft.util.Par.runUnit(Seq(
       () => graft.sources.PrunedIndex.writeDelta(spark,
         graft.fs.Fs.child(into, "prefix"),
         keptOld.select(col("shingle"), col("id"), col("sz"))
           .unionByName(prefixRowsOf(deltaSets, threshold, dfHead)),
-        probeShingles, basePath = base("prefix")),
+        probeShingles, graft.fs.Fs.child(from, "prefix")),
       () => graft.sources.PrunedIndex.writeDelta(spark,
         graft.fs.Fs.child(into, "sets"), deltaSets, deltaIds,
-        basePath = base("sets"))))
-    if (into != from) {
-      writeFrozenHead(spark, into, dfHead)
-      // raw copy — preserves the optional dfHeadSize/frozenDocs lines
-      graft.fs.Fs.writeStringAtomic(nearDupMetaPath(into),
-        graft.fs.Fs.readString(nearDupMetaPath(from)))
-    }
+        graft.fs.Fs.child(from, "sets"))))
+    writeFrozenHead(spark, into, dfHead)
+    copyMeta(nearDupMetaPath(from), nearDupMetaPath(into))
   }
+
+  /** Raw copy of a family's meta sidecar — preserves optional lines
+    * (the near-dup meta's dfHeadSize/frozenDocs). */
+  private def copyMeta(from: String, into: String): Unit =
+    graft.fs.Fs.writeStringAtomic(into, graft.fs.Fs.readString(from))
 
   // ---------------------------------------------------------------------
   // Containment over the persisted index: [[containmentDeltaPairs]]'s
@@ -808,12 +785,12 @@ object Dedup {
   private[llm] def ctHeadMetaPath(root: String): String =
     graft.fs.Fs.child(root, "_CTHEAD_META")
 
-  private[llm] def hasCtHead(root: String): Boolean =
+  private def hasCtHead(root: String): Boolean =
     graft.fs.Fs.exists(ctHeadMetaPath(root))
 
   /** (headK, complete): the K the head was maintained at, and whether
     * it holds EVERY df ≥ 2 census shingle (census fits under K). */
-  private[llm] def readCtHeadMeta(root: String): (Int, Boolean) = {
+  private def readCtHeadMeta(root: String): (Int, Boolean) = {
     val ls = graft.fs.Fs.readString(ctHeadMetaPath(root)).split("\n")
     (ls(0).trim.toInt, ls(1).trim == "1")
   }
@@ -823,15 +800,15 @@ object Dedup {
     * incremental top-K under this comparator equals the full scan's. */
   private def ctHeadOrd(e: (String, Long)): (Long, String) = (-e._2, e._1)
 
-  private[llm] def readCtHeadRows(spark: org.apache.spark.sql.SparkSession,
-                                  root: String): Seq[(String, Long)] =
+  private def readCtHeadRows(spark: org.apache.spark.sql.SparkSession,
+                             root: String): Seq[(String, Long)] =
     spark.read.parquet(graft.fs.Fs.child(root, "cthead"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
       .sortBy(ctHeadOrd)
 
-  private[llm] def writeCtHead(spark: org.apache.spark.sql.SparkSession,
-                               root: String, rows: Seq[(String, Long)],
-                               headK: Int, complete: Boolean): Unit = {
+  private def writeCtHead(spark: org.apache.spark.sql.SparkSession,
+                          root: String, rows: Seq[(String, Long)],
+                          headK: Int, complete: Boolean): Unit = {
     import spark.implicits._
     rows.toDF("shingle", "df").coalesce(1)
       .write.mode("overwrite").parquet(graft.fs.Fs.child(root, "cthead"))
@@ -1002,36 +979,16 @@ object Dedup {
     verifyContainment(candidates, partnerSets.unionByName(deltaSets), threshold)
   }
 
-  /** Absorb `delta` into the unified index: the near-dup components
-    * via [[appendNearDupIndexDelta]] plus the postings (REPLACE rows
-    * for touched shingle keys) and the census — all delta-bounded
-    * writeDelta passes.
-    *
-    * Crash contract — replay-idempotent in EVERY window: the census
-    * rows landed for the touched keys are DERIVED from the same
-    * post-replacement postings frames being written ((kept stored
-    * postings ∪ delta postings) counted per shingle), never by
-    * incrementally adjusting the stored census. An adjustment anchored
-    * to the stored census double-applies on replay when a crash lands
-    * the census but not the sets index (the r16-ADVICE window: the
-    * replay reads an already-adjusted census while the replaced-old
-    * subtraction side still reads pre-delta sets rows); the derived
-    * form recomputes the identical value from pre- or post-crash state
-    * alike, because the kept side anti-joins the delta ids regardless
-    * of which layouts landed. Pinned in DedupSpec, including a
-    * simulated postings+census-landed / prefix+sets-not-landed crash
-    * state. */
-  def appendContainmentIndexDelta(spark: org.apache.spark.sql.SparkSession,
-                                  root: String, delta: DataFrame,
-                                  idCol: String, textCol: String): Unit =
-    appendContainmentIndexDeltaInto(spark, root, root, delta, idCol, textCol)
-
-  /** [[appendContainmentIndexDelta]] landing in a DIFFERENT root —
-    * the [[appendNearDupIndexDeltaInto]] cross-root form for the
-    * containment components: reads come from `from`, touched buckets'
-    * new files land under `into`, untouched buckets stitch `from`'s
-    * files by absolute path. The versioned-store building block: all
-    * FIVE unified-index components land under one new version dir
+  /** [[appendNearDupIndexDeltaInto]] for the unified index: the
+    * near-dup components plus the postings (REPLACE rows for touched
+    * shingle keys), the census and the census head, all delta-bounded
+    * writeDelta passes from `from` into `into`. The census rows landed
+    * for the touched keys are DERIVED from the post-replacement
+    * postings frame being written ((kept stored postings ∪ delta
+    * postings) counted per shingle), never by adjusting the stored
+    * census, so they equal a from-scratch build's (pinned in
+    * DedupSpec). The versioned-store building block: all FIVE
+    * unified-index components land under one new version dir
     * ([[NearDupIndexStore.appendDelta]]), committed with a single
     * atomic pointer swap. */
   private[llm] def appendContainmentIndexDeltaInto(
@@ -1058,15 +1015,13 @@ object Dedup {
     // materialized BEFORE the postings swap: the census derives from
     // this frame, not from a lazy re-read of the index mid-landing
     val newRows = keptPostings.unionByName(dPost).ckpt()
-    val base = (c: String) =>
-      if (into == from) None else Some(graft.fs.Fs.child(from, c))
     graft.sources.PrunedIndex.writeDelta(spark,
       graft.fs.Fs.child(into, "postings"), newRows, touchedKeys,
-      basePath = base("postings"))
+      graft.fs.Fs.child(from, "postings"))
     graft.sources.PrunedIndex.writeDelta(spark,
       graft.fs.Fs.child(into, "dfcensus"),
       newRows.groupBy(col("shingle")).agg(count(lit(1)).as("df")),
-      touchedKeys, basePath = base("dfcensus"))
+      touchedKeys, graft.fs.Fs.child(from, "dfcensus"))
     // census-head maintenance: stored head ∪ touched keys' post-delta
     // counts, re-sorted driver-side — O(head + touched); a full census
     // re-scan happens only when the floor is crossed (mass deletion) or
@@ -1111,11 +1066,11 @@ object Dedup {
   /** Re-derive the frozen df head and the prefix layout from the STORED
     * sets — the candidate-count maintenance action (the
     * [[graft.llm.AnnIndexStore.reclusterIfDrifted]] analog). No text is
-    * read or shingled; the sets index is the only input. Atomic per
-    * component (full [[graft.sources.PrunedIndex.write]] manifest
-    * swaps); also compacts any accumulated prefix delta files flat. */
-  def refreezeNearDupIndex(spark: org.apache.spark.sql.SparkSession,
-                           root: String, dfHeadSize: Int = -1): Unit = {
+    * read or shingled; the sets index is the only input. Runs on the
+    * fresh version dir of a refreezing [[NearDupIndexStore.compact]]
+    * (see [[compactIndexInto]]). */
+  private[llm] def refreezeNearDupIndex(spark: org.apache.spark.sql.SparkSession,
+                                        root: String, dfHeadSize: Int = -1): Unit = {
     val (n, threshold) = readNearDupMeta(root)
     // the build-time head size persists in the meta (r17 advice: a
     // refreeze must not silently reset a non-default head size); an
@@ -1137,6 +1092,57 @@ object Dedup {
     graft.fs.Fs.writeStringAtomic(nearDupMetaPath(root),
       s"$n\n$threshold\n$headK\n${sets.count()}")
     sets.unpersist(false): Unit
+  }
+
+  /** Every [[graft.sources.PrunedIndex]] component a near-dup index
+    * dir can hold, relative to it: the near-dup pair (`prefix`,
+    * `sets`), containment's `postings`/`dfcensus`, minhash's `bands`,
+    * and the winnowing and fuzzy-key families under their `win/` and
+    * `fuzzy/` subdirs (their component names clash with containment's).
+    * The manifest scan set for reference-aware retention. */
+  private[llm] val IndexComponents: Seq[String] =
+    Seq("prefix", "sets", "postings", "dfcensus", "bands",
+      "win/byid", "win/postings", "win/dfcensus",
+      "fuzzy/segs", "fuzzy/byid")
+
+  /** Re-land the index at `from` self-contained under `into`: every
+    * present component rewritten flat (no stitched references, same key
+    * columns and bucket count), the plain-parquet heads and the family
+    * metas copied — probes against `into` equal probes against `from`.
+    * `refreeze = true` re-derives the frozen df head and the prefix
+    * layout from the folded sets instead of copying them
+    * ([[refreezeNearDupIndex]]): the frozen order is a candidate-count
+    * heuristic, never a correctness input, so a refreeze changes probe
+    * COST, not probe answers. The one fold behind both
+    * [[NearDupIndexStore.compact]] and [[CurationLedgerStore.compact]]. */
+  private[llm] def compactIndexInto(spark: org.apache.spark.sql.SparkSession,
+                                    from: String, into: String,
+                                    refreeze: Boolean = false): Unit = {
+    import graft.fs.Fs
+    import graft.sources.PrunedIndex
+    val hasJaccard = Fs.exists(Fs.child(from, "sets"))
+    val refreezing = refreeze && hasJaccard
+    // a refreeze re-lands the prefix layout and the frozen head itself —
+    // folding them here would be a wasted O(index) write
+    IndexComponents.filterNot(c => refreezing && c == "prefix")
+      .map(c => (Fs.child(from, c), Fs.child(into, c))).filter(c => Fs.exists(c._1))
+      .foreach { case (src, dst) =>
+        val (keyCols, numBuckets) = PrunedIndex.meta(src)
+        PrunedIndex.write(PrunedIndex.read(spark, src), dst, keyCols, numBuckets)
+      }
+    if (hasCtHead(from)) {
+      val (headK, headComplete) = readCtHeadMeta(from)
+      writeCtHead(spark, into, readCtHeadRows(spark, from), headK, headComplete)
+    }
+    if (hasJaccard && !refreezing)
+      writeFrozenHead(spark, into, readFrozenHead(spark, from))
+    Seq[String => String](nearDupMetaPath, minHashMetaPath,
+        r => winnowMetaPath(Fs.child(r, "win")), r => fuzzyMetaPath(Fs.child(r, "fuzzy")))
+      .map(m => (m(from), m(into))).filter(m => Fs.exists(m._1))
+      .foreach { case (src, dst) => copyMeta(src, dst) }
+    // after the folds: head + prefix re-derive from the folded sets
+    // (the containment head is EXACT maintained state, never stale)
+    if (refreezing) refreezeNearDupIndex(spark, into)
   }
 
   /** Exact-Jaccard verification of candidate (a_id, b_id) pairs.
@@ -1340,10 +1346,10 @@ object Dedup {
   // root's existing component — no text ever re-read).
   // ---------------------------------------------------------------------
 
-  private[llm] def minHashMetaPath(root: String): String =
+  private def minHashMetaPath(root: String): String =
     graft.fs.Fs.child(root, "_MINHASH_META")
 
-  private[llm] def readMinHashMeta(root: String): (Int, Int) = {
+  private def readMinHashMeta(root: String): (Int, Int) = {
     val ls = graft.fs.Fs.readString(minHashMetaPath(root)).split("\n")
     (ls(0).trim.toInt, ls(1).trim.toInt)
   }
@@ -1357,7 +1363,7 @@ object Dedup {
   /** Extend a [[writeNearDupIndex]] root with the banded MinHash
     * component (signatures derived from the stored sets — the text is
     * NOT re-read). Probe with [[minHashDeltaPairsIndexed]]; maintain
-    * with [[appendMinHashIndexDelta]]. */
+    * with [[appendMinHashIndexDeltaInto]]. */
   def writeMinHashIndex(spark: org.apache.spark.sql.SparkSession,
                         root: String, numHashes: Int = 64, bands: Int = 16,
                         numBuckets: Int = 64): Unit = {
@@ -1374,7 +1380,7 @@ object Dedup {
     * candidate join, and exact verification against bucket-pruned
     * partner sets. Re-uploaded ids count only their delta revision
     * (stale band and set rows anti-joined), so probing before or after
-    * [[appendMinHashIndexDelta]] gives the same answer. Release the
+    * the append of the same batch gives the same answer. Release the
     * delta's shingle cache with [[releaseIndexedProbeCache]]. */
   def minHashDeltaPairsIndexed(spark: org.apache.spark.sql.SparkSession,
                                root: String, delta: DataFrame,
@@ -1412,22 +1418,13 @@ object Dedup {
     verifyJaccard(candidates, partnerSets.unionByName(deltaSets), threshold)
   }
 
-  /** Absorb `delta` into the persisted band component (REPLACE
-    * semantics; delta-bounded write I/O; replay-idempotent — the kept
-    * side anti-joins delta ids regardless of which layouts landed).
+  /** Absorb `delta` into the band component at `from`, landing it
+    * under `into` (REPLACE semantics; delta-bounded write I/O;
+    * cross-root stitching as in [[appendNearDupIndexDeltaInto]]).
     * Touched keys include the re-uploaded ids' OLD band keys, derived
-    * from the stored sets (no text re-read), so displaced rows leave
-    * their buckets even when the new revision shares none of them.
-    * Call BEFORE [[appendNearDupIndexDelta]] absorbs the same batch
-    * into the sets (the old-revision read anchors to `from`'s sets) —
-    * [[NearDupIndexStore.appendDelta]] sequences this correctly. */
-  def appendMinHashIndexDelta(spark: org.apache.spark.sql.SparkSession,
-                              root: String, delta: DataFrame,
-                              idCol: String, textCol: String): Unit =
-    appendMinHashIndexDeltaInto(spark, root, root, delta, idCol, textCol)
-
-  /** [[appendMinHashIndexDelta]] landing in a DIFFERENT root — the
-    * versioned-store building block (cross-root stitching). */
+    * from `from`'s stored sets (no text re-read), so displaced rows
+    * leave their buckets even when the new revision shares none of
+    * them. */
   private[llm] def appendMinHashIndexDeltaInto(
       spark: org.apache.spark.sql.SparkSession,
       from: String, into: String, delta: DataFrame,
@@ -1455,10 +1452,8 @@ object Dedup {
       graft.fs.Fs.child(into, "bands"),
       kept.select(col("id"), col("band"), col("bkey"))
         .unionByName(deltaKeys.select(col("id"), col("band"), col("bkey"))),
-      touchedKeys,
-      basePath = if (into == from) None else Some(graft.fs.Fs.child(from, "bands")))
-    if (into != from)
-      graft.fs.Fs.writeStringAtomic(minHashMetaPath(into), s"$numHashes\n$bands")
+      touchedKeys, graft.fs.Fs.child(from, "bands"))
+    copyMeta(minHashMetaPath(from), minHashMetaPath(into))
   }
 
   /** 64-bit SimHash of the whitespace-token multiset — one narrow scan
@@ -1933,7 +1928,7 @@ object Dedup {
   // DEFINE the index); the cosine threshold stays a per-probe argument.
   // ---------------------------------------------------------------------
 
-  private[llm] def elshMetaPath(root: String): String =
+  private def elshMetaPath(root: String): String =
     graft.fs.Fs.child(root, "_ELSH_META")
 
   private[llm] def readElshMeta(root: String): (Int, Int, Long) = {
@@ -1969,8 +1964,8 @@ object Dedup {
   }
 
   /** Build the persisted embedding-LSH index for `embs` (one corpus
-    * version). Probe with [[embeddingLshDeltaPairsIndexed]]; maintain
-    * with [[appendEmbeddingLshIndexDelta]]. */
+    * version). Probe with [[embeddingLshDeltaPairsIndexed]]; advance
+    * to a new root with [[appendEmbeddingLshIndexDelta]]. */
   def writeEmbeddingLshIndex(spark: org.apache.spark.sql.SparkSession,
                              embs: DataFrame, idCol: String, vecCol: String,
                              root: String, numBits: Int = 32,
@@ -2061,33 +2056,34 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("cos").as("cos_sim"))
   }
 
-  /** Absorb `delta` into the persisted embedding-LSH index (REPLACE
-    * semantics for re-uploaded ids, delta-bounded write I/O,
-    * replay-idempotent — the kept side anti-joins delta ids in every
-    * crash window). */
+  /** Absorb `delta` into the embedding-LSH index at `from`, landing
+    * the advanced index under `into` (REPLACE semantics for re-uploaded
+    * ids, delta-bounded write I/O; untouched buckets stitch `from`'s
+    * files by absolute path and `from` is never modified — the
+    * [[appendNearDupIndexDeltaInto]] contract). */
   def appendEmbeddingLshIndexDelta(spark: org.apache.spark.sql.SparkSession,
-                                   root: String, delta: DataFrame,
+                                   from: String, into: String, delta: DataFrame,
                                    idCol: String, vecCol: String): Unit = {
-    val (numBits, bandBits, seed) = readElshMeta(root)
+    val (numBits, bandBits, seed) = readElshMeta(from)
     val dSk = signSketched(delta, idCol, vecCol, numBits, seed).ckpt()
     val dBands = elshBandRows(dSk, numBits, bandBits).ckpt()
     val deltaIds = dSk.select(col("id")).distinct()
     val replacedOld = graft.sources.PrunedIndex.readPruned(spark,
-      graft.fs.Fs.child(root, "byid"), deltaIds)
+      graft.fs.Fs.child(from, "byid"), deltaIds)
     val touchedKeys = dBands.select(col("band"), col("bkey"))
       .unionByName(replacedOld.select(col("band"), col("bkey")))
       .distinct().ckpt()
     val kept = graft.sources.PrunedIndex.readPruned(spark,
-        graft.fs.Fs.child(root, "bands"), touchedKeys)
+        graft.fs.Fs.child(from, "bands"), touchedKeys)
       .join(broadcast(deltaIds), Seq("id"), "left_anti")
       .select(col("id"), col("band"), col("bkey"), col("sk"))
-    graft.sources.PrunedIndex.writeDelta(spark,
-      graft.fs.Fs.child(root, "bands"), kept.unionByName(dBands), touchedKeys)
-    graft.sources.PrunedIndex.writeDelta(spark,
-      graft.fs.Fs.child(root, "byid"), dBands, deltaIds)
-    graft.sources.PrunedIndex.writeDelta(spark,
-      graft.fs.Fs.child(root, "byvec"),
-      dSk.select(col("id"), col("v").as("vec")), deltaIds)
+    def land(c: String, rows: DataFrame, probe: DataFrame): Unit =
+      graft.sources.PrunedIndex.writeDelta(spark, graft.fs.Fs.child(into, c),
+        rows, probe, graft.fs.Fs.child(from, c))
+    land("bands", kept.unionByName(dBands), touchedKeys)
+    land("byid", dBands, deltaIds)
+    land("byvec", dSk.select(col("id"), col("v").as("vec")), deltaIds)
+    copyMeta(elshMetaPath(from), elshMetaPath(into))
   }
 
   /** Connected components over an undirected pair graph — the group
@@ -2450,17 +2446,18 @@ object Dedup {
   // exactly those fingerprints (pinned in SketchSpec).
   // ---------------------------------------------------------------------
 
-  private[llm] def winnowMetaPath(root: String): String =
+  private def winnowMetaPath(root: String): String =
     graft.fs.Fs.child(root, "_WINNOW_META")
 
-  private[llm] def readWinnowMeta(root: String): (Int, Int) = {
+  private def readWinnowMeta(root: String): (Int, Int) = {
     val ls = graft.fs.Fs.readString(winnowMetaPath(root)).split("\n")
     (ls(0).trim.toInt, ls(1).trim.toInt)
   }
 
   /** Build the persisted winnowing index for `docs` (one corpus
-    * version). Write-once; maintain with [[appendWinnowingIndexDelta]];
-    * probe with [[winnowingDeltaPairsIndexed]]. */
+    * version). Write-once; maintain with
+    * [[appendWinnowingIndexDeltaInto]]; probe with
+    * [[winnowingDeltaPairsIndexed]]. */
   def writeWinnowingIndex(spark: org.apache.spark.sql.SparkSession,
                           docs: DataFrame, idCol: String, textCol: String,
                           root: String, k: Int = 12, w: Int = 8,
@@ -2486,11 +2483,9 @@ object Dedup {
     * post-delta df for each probed fingerprint derives from three
     * delta-bounded frames: the stored census (pruned), the delta's own
     * counts, and the replaced ids' old-revision rows (pruned `byid`
-    * read) — the adjustment self-cancels when probing AFTER
-    * [[appendWinnowingIndexDelta]] absorbed the same batch, so probe
-    * order is immaterial, matching the other indexed probes. (The torn
-    * in-place window — census landed, `byid` not — is the documented
-    * replay-first case, closed by the versioned store.) */
+    * read) — the adjustment self-cancels when probing AFTER the
+    * append of the same batch, so probe order is immaterial, matching
+    * the other indexed probes. */
   def winnowingDeltaPairsIndexed(spark: org.apache.spark.sql.SparkSession,
                                  root: String, delta: DataFrame,
                                  idCol: String, textCol: String,
@@ -2540,20 +2535,12 @@ object Dedup {
       .filter(col("shared_fps") >= minShared)
   }
 
-  /** Absorb `delta` into the persisted winnowing index (REPLACE
-    * semantics for re-uploaded ids, delta-bounded write I/O,
-    * replay-idempotent in every crash window — the census derives from
-    * the post-replacement postings frame being landed, the
-    * [[appendContainmentIndexDelta]] contract). */
-  def appendWinnowingIndexDelta(spark: org.apache.spark.sql.SparkSession,
-                                root: String, delta: DataFrame,
-                                idCol: String, textCol: String): Unit =
-    appendWinnowingIndexDeltaInto(spark, root, root, delta, idCol, textCol)
-
-  /** [[appendWinnowingIndexDelta]] landing in a DIFFERENT root — the
-    * versioned-store building block: reads from `from`, touched
-    * buckets land under `into`, untouched buckets stitch `from`'s
-    * files by absolute path. */
+  /** Absorb `delta` into the winnowing index at `from`, landing it
+    * under `into` (REPLACE semantics for re-uploaded ids, delta-bounded
+    * write I/O, cross-root stitching as in
+    * [[appendNearDupIndexDeltaInto]]). The census derives from the
+    * post-replacement postings frame being landed, the
+    * [[appendContainmentIndexDeltaInto]] contract. */
   private[llm] def appendWinnowingIndexDeltaInto(
       spark: org.apache.spark.sql.SparkSession,
       from: String, into: String, delta: DataFrame,
@@ -2572,27 +2559,18 @@ object Dedup {
       .select(col("fp"), col("id"))
     val newRows = keptPostings
       .unionByName(deltaFps.select(col("fp"), col("id"))).ckpt()
-    val base = (c: String) =>
-      if (into == from) None else Some(graft.fs.Fs.child(from, c))
-    // the three component swaps are independent (distinct dirs; every
+    // the three component writes are independent (distinct dirs; every
     // shared input — newRows, deltaFps, touchedKeys, deltaIds — is an
-    // eager checkpoint above), so they overlap (guide §2.6); the
-    // in-place crash contract is unchanged: each swap stays atomic, a
-    // torn BETWEEN-component view was already the documented
-    // replay-first case, and replay is replace-by-key idempotent
+    // eager checkpoint above), so they overlap (guide §2.6)
+    def land(c: String, rows: DataFrame, probe: DataFrame): () => Unit = () =>
+      graft.sources.PrunedIndex.writeDelta(spark, graft.fs.Fs.child(into, c),
+        rows, probe, graft.fs.Fs.child(from, c))
     graft.util.Par.runUnit(Seq(
-      () => graft.sources.PrunedIndex.writeDelta(spark,
-        graft.fs.Fs.child(into, "postings"), newRows, touchedKeys,
-        basePath = base("postings")),
-      () => graft.sources.PrunedIndex.writeDelta(spark,
-        graft.fs.Fs.child(into, "dfcensus"),
-        newRows.groupBy(col("fp")).agg(count(lit(1)).as("df")),
-        touchedKeys, basePath = base("dfcensus")),
-      () => graft.sources.PrunedIndex.writeDelta(spark,
-        graft.fs.Fs.child(into, "byid"), deltaFps, deltaIds,
-        basePath = base("byid"))))
-    if (into != from)
-      graft.fs.Fs.writeStringAtomic(winnowMetaPath(into), s"$k\n$w")
+      land("postings", newRows, touchedKeys),
+      land("dfcensus", newRows.groupBy(col("fp")).agg(count(lit(1)).as("df")),
+        touchedKeys),
+      land("byid", deltaFps, deltaIds)))
+    copyMeta(winnowMetaPath(from), winnowMetaPath(into))
   }
 
   /** Cross-document repeated-substring spans (the substring-level dedup
@@ -2833,17 +2811,17 @@ object Dedup {
   // ids' byid buckets. No text ever rides: keys live in the index.
   // ---------------------------------------------------------------------
 
-  private[llm] def fuzzyMetaPath(root: String): String =
+  private def fuzzyMetaPath(root: String): String =
     graft.fs.Fs.child(root, "_FUZZY_META")
 
-  private[llm] def readFuzzyMeta(root: String): (Int, Int) = {
+  private def readFuzzyMeta(root: String): (Int, Int) = {
     val ls = graft.fs.Fs.readString(fuzzyMetaPath(root)).split("\n")
     (ls(0).trim.toInt, ls(1).trim.toInt)
   }
 
   /** Build the persisted fuzzy-key index for `docs` (one corpus
     * version). Probe with [[fuzzyKeyDeltaPairsIndexed]]; maintain with
-    * [[appendFuzzyKeyIndexDelta]]. */
+    * [[appendFuzzyKeyIndexDeltaInto]]. */
   def writeFuzzyKeyIndex(spark: org.apache.spark.sql.SparkSession,
                          docs: DataFrame, idCol: String, textCol: String,
                          root: String, keyLen: Int = 64, maxDist: Int = 3,
@@ -2891,16 +2869,9 @@ object Dedup {
     verifyFuzzyCandidates(cross.unionAll(within), keyLen, maxDist)
   }
 
-  /** Absorb `delta` into the persisted fuzzy-key index (REPLACE
-    * semantics, delta-bounded write I/O, replay-idempotent — the kept
-    * side anti-joins delta ids in every crash window). */
-  def appendFuzzyKeyIndexDelta(spark: org.apache.spark.sql.SparkSession,
-                               root: String, delta: DataFrame,
-                               idCol: String, textCol: String): Unit =
-    appendFuzzyKeyIndexDeltaInto(spark, root, root, delta, idCol, textCol)
-
-  /** [[appendFuzzyKeyIndexDelta]] landing in a DIFFERENT root — the
-    * versioned-store building block (cross-root stitching). */
+  /** Absorb `delta` into the fuzzy-key index at `from`, landing it
+    * under `into` (REPLACE semantics, delta-bounded write I/O,
+    * cross-root stitching as in [[appendNearDupIndexDeltaInto]]). */
   private[llm] def appendFuzzyKeyIndexDeltaInto(
       spark: org.apache.spark.sql.SparkSession,
       from: String, into: String, delta: DataFrame,
@@ -2920,16 +2891,13 @@ object Dedup {
         graft.fs.Fs.child(from, "segs"), touchedKeys)
       .join(broadcast(deltaIds), Seq("id"), "left_anti")
       .select(col("id"), col("key"), col("seg_i"), col("seg"))
-    val base = (c: String) =>
-      if (into == from) None else Some(graft.fs.Fs.child(from, c))
     graft.sources.PrunedIndex.writeDelta(spark,
       graft.fs.Fs.child(into, "segs"), kept.unionByName(dSegs), touchedKeys,
-      basePath = base("segs"))
+      graft.fs.Fs.child(from, "segs"))
     graft.sources.PrunedIndex.writeDelta(spark,
       graft.fs.Fs.child(into, "byid"), dSegs, deltaIds,
-      basePath = base("byid"))
-    if (into != from)
-      graft.fs.Fs.writeStringAtomic(fuzzyMetaPath(into), s"$keyLen\n$maxDist")
+      graft.fs.Fs.child(from, "byid"))
+    copyMeta(fuzzyMetaPath(from), fuzzyMetaPath(into))
   }
 
   /** Collapse repeated lines WITHIN each document, keeping the first

@@ -11,16 +11,14 @@ import graft.store.VersionedRoot
   * applied to the dedup layout: prefix index + sets index + frozen df
   * head land together under ONE version dir (`v<N>/`), committed by a
   * `_SUCCESS` marker and published with a single NIO-atomic `_CURRENT`
-  * pointer swap. This closes the in-place form's only crash window (a
-  * torn view between the two layout swaps,
-  * [[Dedup.appendNearDupIndexDelta]]'s documented replay case): readers
-  * of a store NEVER see a half-landed batch — the pointer flips only
-  * after both layouts, the head and the meta are durable.
+  * pointer swap. Readers of a store NEVER see a half-landed batch —
+  * the pointer flips only after every layout, the head and the meta
+  * are durable — and a version is never edited once committed.
   *
   * Write I/O stays delta-bounded: [[appendDelta]] lands only the
   * touched buckets' files under the new version and stitches the
   * previous version's untouched files by absolute path
-  * ([[graft.sources.PrunedIndex.writeDelta]]'s cross-root form) — so
+  * ([[graft.sources.PrunedIndex.writeDelta]]) — so
   * retention is [[compact]] (fold the current version self-contained)
   * plus [[vacuum]] (reference-aware drop of old version dirs, sparing
   * any dir a retained manifest still points into).
@@ -221,7 +219,7 @@ object NearDupIndexStore {
     *
     * `refreeze = true` additionally re-derives the frozen df head and
     * the prefix layout from the folded sets
-    * ([[Dedup.refreezeNearDupIndex]]) — the periodic maintenance for a
+    * ([[Dedup.compactIndexInto]]) — the periodic maintenance for a
     * store whose df distribution has drifted across many appends. The
     * frozen order is a candidate-count heuristic, never a correctness
     * input (the prefix pigeonhole holds for ANY total order used
@@ -233,93 +231,15 @@ object NearDupIndexStore {
   def compact(spark: SparkSession, root: String,
               refreeze: Boolean = false): Long = {
     val cur = requireCurrent(root)
-    // bucket count from whichever component exists (a winnowing- or
-    // fuzzy-only store has no prefix layout)
-    val numBuckets = Seq("prefix", "sets", "postings", "win/byid",
-        "fuzzy/segs")
-      .map(c => Fs.child(cur, c)).find(Fs.exists)
-      .map(p => PrunedIndex.meta(p)._2)
-      .getOrElse(throw new IllegalStateException(
-        s"no PrunedIndex component under $cur"))
     val v = nextVersion(root)
-    val dir = versionDir(root, v)
-    import org.apache.spark.sql.functions.col
-    // re-land a component flat under the new version, preserving the
-    // stored key columns and schema
-    def fold(comp: String, keyCols: Seq[String]): Unit = {
-      val src = Fs.child(cur, comp)
-      if (Fs.exists(src)) {
-        val df = PrunedIndex.read(spark, src)
-        PrunedIndex.write(df.select(df.columns.map(col).toIndexedSeq: _*),
-          Fs.child(dir, comp), keyCols, numBuckets)
-      }
-    }
-    val hasJaccard = Fs.exists(Fs.child(cur, "sets"))
-    // refreeze re-lands the prefix layout and the frozen head itself —
-    // folding/copying them here would be a wasted O(index) write
-    // (r17 advice)
-    if (!(refreeze && hasJaccard)) fold("prefix", Seq("shingle"))
-    fold("sets", Seq("id"))
-    fold("postings", Seq("shingle"))
-    fold("dfcensus", Seq("shingle"))
-    fold("bands", Seq("band", "bkey"))
-    if (Dedup.hasCtHead(cur)) {
-      val (headK, headComplete) = Dedup.readCtHeadMeta(cur)
-      Dedup.writeCtHead(spark, dir, Dedup.readCtHeadRows(spark, cur),
-        headK, headComplete)
-    }
-    if (hasJaccard && !refreeze)
-      Dedup.writeFrozenHead(spark, dir, Dedup.readFrozenHead(spark, cur))
-    if (Fs.exists(Dedup.nearDupMetaPath(cur)))
-      Fs.writeStringAtomic(Dedup.nearDupMetaPath(dir),
-        Fs.readString(Dedup.nearDupMetaPath(cur)))
-    if (Fs.exists(Dedup.minHashMetaPath(cur))) {
-      val (numHashes, bands) = Dedup.readMinHashMeta(cur)
-      Fs.writeStringAtomic(Dedup.minHashMetaPath(dir), s"$numHashes\n$bands")
-    }
-    if (Fs.exists(winDir(cur))) {
-      def foldWin(comp: String, keyCols: Seq[String]): Unit = {
-        val df = PrunedIndex.read(spark, Fs.child(winDir(cur), comp))
-        PrunedIndex.write(df.select(df.columns.map(col).toIndexedSeq: _*),
-          Fs.child(winDir(dir), comp), keyCols, numBuckets)
-      }
-      foldWin("byid", Seq("id"))
-      foldWin("postings", Seq("fp"))
-      foldWin("dfcensus", Seq("fp"))
-      val (k, w) = Dedup.readWinnowMeta(winDir(cur))
-      Fs.writeStringAtomic(Dedup.winnowMetaPath(winDir(dir)), s"$k\n$w")
-    }
-    if (Fs.exists(fuzzyDir(cur))) {
-      def foldFz(comp: String, keyCols: Seq[String]): Unit = {
-        val df = PrunedIndex.read(spark, Fs.child(fuzzyDir(cur), comp))
-        PrunedIndex.write(df.select(df.columns.map(col).toIndexedSeq: _*),
-          Fs.child(fuzzyDir(dir), comp), keyCols, numBuckets)
-      }
-      foldFz("segs", Seq("seg_i", "seg"))
-      foldFz("byid", Seq("id"))
-      val (keyLen, maxDist) = Dedup.readFuzzyMeta(fuzzyDir(cur))
-      Fs.writeStringAtomic(Dedup.fuzzyMetaPath(fuzzyDir(dir)), s"$keyLen\n$maxDist")
-    }
-    // after the folds: head + prefix re-derive from the folded sets
-    // (winnowing and containment need nothing — the containment head
-    // is EXACT maintained state, never stale)
-    if (refreeze && hasJaccard) Dedup.refreezeNearDupIndex(spark, dir)
+    Dedup.compactIndexInto(spark, cur, versionDir(root, v), refreeze)
     commit(root, v)
   }
-
-  /** Every PrunedIndex component a version dir can hold, as paths
-    * relative to the version dir — the manifest scan set for
-    * reference-aware retention. (`cthead` is not listed: it is a plain
-    * parquet landed whole under every version, never stitched.) */
-  private val AllComponents: Seq[String] =
-    Seq("prefix", "sets", "postings", "dfcensus", "bands",
-      "win/byid", "win/postings", "win/dfcensus",
-      "fuzzy/segs", "fuzzy/byid")
 
   /** Reference-chain depth of the CURRENT version:
     * [[VersionedRoot.chainDepth]] over every family's components. A
     * freshly built or compacted version reports 1. */
-  def chainDepth(root: String): Int = VersionedRoot.chainDepth(root, AllComponents)
+  def chainDepth(root: String): Int = VersionedRoot.chainDepth(root, Dedup.IndexComponents)
 
   /** How far the frozen df head has drifted: current doc count ÷ the
     * count the head was frozen over (recorded in the near-dup meta at
@@ -340,7 +260,7 @@ object NearDupIndexStore {
     * compact when the stitched reference chain exceeds `maxChainDepth`
     * versions, and fold a head refreeze into the same pass when the
     * corpus has grown `headStaleRatio`× past the frozen head's census
-    * (RefreezeBench: 23 % probe-wall payoff at 2× staleness, zero
+    * (NOTES_r18.md: 23 % probe-wall payoff at 2× staleness, zero
     * answer change — the head is a candidate-cost heuristic, never a
     * correctness input). Hysteresis is structural: a compaction resets
     * the chain depth to 1, and a refreeze resets the staleness
@@ -363,7 +283,7 @@ object NearDupIndexStore {
     * `keep` that no retained manifest references, and sweeps stale
     * orphans of crashed builds/appends. Returns the dropped versions. */
   def vacuum(root: String, keep: Int = 1): Seq[Long] =
-    VersionedRoot.vacuum(root, AllComponents, keep)
+    VersionedRoot.vacuum(root, Dedup.IndexComponents, keep)
 
   /** Release the delta shingle cache a [[pairsForDelta]] call pinned. */
   def releaseProbeCache(root: String, delta: DataFrame,

@@ -169,16 +169,29 @@ object PrunedIndex {
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
     require(!df.columns.contains(BucketCol),
       s"input already carries a $BucketCol column")
+    val lines = landBuckets(df, path, keyCols, numBuckets, numBuckets,
+      maxRecordsPerFile, "")
+    publish(path, lines, keyCols, numBuckets, newVersionToken(), df.schema)
+  }
+
+  /** Write `df` under `dir` partitioned by its key buckets, after one
+    * shuffle into `partitions` tasks keyed by bucket (so each bucket
+    * lands in ~one file), and return the manifest lines of the files
+    * written — each entry is `entryPrefix` (`dir` relative to the
+    * layout dir) plus the file's path under `dir`. */
+  private def landBuckets(df: DataFrame, dir: String, keyCols: Seq[String],
+                          numBuckets: Int, partitions: Int,
+                          maxRecordsPerFile: Long, entryPrefix: String): Seq[String] = {
     val writer = df
       .withColumn(BucketCol, pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
-      .repartition(numBuckets, col(BucketCol))
+      .repartition(partitions, col(BucketCol))
       .write.mode("overwrite")
     (if (maxRecordsPerFile > 0L)
        writer.option("maxRecordsPerFile", maxRecordsPerFile)
      else writer)
-      .partitionBy(BucketCol).parquet(path)
+      .partitionBy(BucketCol).parquet(dir)
     val prefix = BucketCol + "="
-    val lines = Fs.list(path)
+    Fs.list(dir)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
       .flatMap { d =>
         val bucket = d.getPath.getName.substring(prefix.length).toInt
@@ -187,9 +200,8 @@ object PrunedIndex {
             val n = f.getPath.getName
             f.isFile && !n.startsWith("_") && !n.startsWith(".")
           }
-          .map(f => s"$bucket\t${d.getPath.getName}/${f.getPath.getName}")
+          .map(f => s"$bucket\t$entryPrefix${d.getPath.getName}/${f.getPath.getName}")
       }
-    publish(path, lines, keyCols, numBuckets, newVersionToken(), df.schema)
   }
 
   /** Land a layout's sidecars. The manifest lands before the meta: meta
@@ -333,14 +345,13 @@ object PrunedIndex {
   }
 
   /** Delta write with REPLACE-by-key semantics and DELTA-BOUNDED write
-    * I/O: the index after the call holds `newKeyRows` for every key in
-    * `probe` and the stored rows for every other key, but only the
-    * TOUCHED buckets (the probe keys' hash buckets) land new files —
-    * untouched buckets' existing files are stitched into the new
-    * manifest untouched, by absolute path. At corpus scale this turns
-    * per-batch index maintenance from an O(index) rewrite into an
-    * O(delta buckets) one; the manifest + version-token swap makes the
-    * flip atomic for readers exactly as [[write]]'s is.
+    * I/O: the layout created at `path` holds `newKeyRows` for every key
+    * in `probe` and `basePath`'s stored rows for every other key, but
+    * only the TOUCHED buckets (the probe keys' hash buckets) land new
+    * files — untouched buckets' files are stitched into the new
+    * manifest by absolute path. At corpus scale this turns per-batch
+    * index maintenance from an O(index) rewrite into an O(delta
+    * buckets) one.
     *
     * `newKeyRows` must contain ONLY rows whose key is in `probe`
     * (checked); `probe` is probe-sized (its bucket set is collected).
@@ -349,29 +360,22 @@ object PrunedIndex {
     * re-landed with the new rows, since a bucket's file set is replaced
     * wholesale.
     *
-    * New files land under a uniquely-named `delta-<token>/` subdir
-    * (never clobbering live files: a crash before the manifest swap
-    * leaves the old view fully intact), so replaced files become
-    * unreferenced garbage — sweep with [[sweepUnreferenced]] or fold
-    * the layout flat again with a full [[write]] (compaction). After
-    * the first delta the directory is no longer a valid plain-parquet
-    * partition tree: the sidecars are REQUIRED (the listing fallback
-    * would double-count), which the staleness contract above already
-    * demands for every [[write]]-maintained layout.
-    *
-    * `basePath`: stitch from a DIFFERENT index dir (e.g. the previous
-    * store version) instead of `path` itself — `path` is then created
-    * fresh, holding only the delta files + a manifest referencing the
-    * base's untouched files. The base is never modified; retention of
-    * its files becomes the caller's contract (see
-    * [[graft.llm.AnnIndexStore]]'s versioned use). */
+    * `basePath` is the previous version of the layout (e.g. the prior
+    * store version's component dir) and is never modified; `path` is a
+    * fresh dir holding only the delta files under a `delta-<token>/`
+    * subdir plus sidecars referencing the base's untouched files.
+    * Retention of the base's files is the caller's contract — the
+    * versioned stores keep every referenced version
+    * ([[graft.store.VersionedRoot.vacuum]]). The stitched layout is no
+    * longer a valid plain-parquet partition tree: its sidecars are
+    * REQUIRED, which the staleness contract above already demands for
+    * every [[write]]-maintained layout. */
   def writeDelta(spark: SparkSession, path: String, newKeyRows: DataFrame,
-                 probe: DataFrame, basePath: Option[String] = None,
+                 probe: DataFrame, basePath: String,
                  maxRecordsPerFile: Long = 0L): Unit = {
-    val base = basePath.getOrElse(path)
-    val (keyCols, numBuckets) = meta(base)
-    val old = manifestFor(spark, base).getOrElse(throw new IllegalStateException(
-      s"writeDelta needs a _PRUNE_MANIFEST at $base — build the index with PrunedIndex.write"))
+    val (keyCols, numBuckets) = meta(basePath)
+    val old = manifestFor(spark, basePath).getOrElse(throw new IllegalStateException(
+      s"writeDelta needs a _PRUNE_MANIFEST at $basePath — build the index with PrunedIndex.write"))
     val probeKeys = probe.select(keyCols.map(col): _*).distinct()
     val touched = probeKeys
       .select(pmod(hash(keyCols.map(col): _*), lit(numBuckets)).as("b"))
@@ -400,12 +404,12 @@ object PrunedIndex {
     val dataCols =
       (touchedEntries.headOption.orElse(old.valuesIterator.flatten.take(1)
           .toSeq.headOption) match {
-        case Some(one) => readEntries(spark, base, Seq(one))
-        case None      => read(spark, base)
+        case Some(one) => readEntries(spark, basePath, Seq(one))
+        case None      => read(spark, basePath)
       }).columns.filterNot(_ == BucketCol).toSeq
     val strangers =
       if (touchedEntries.isEmpty) None
-      else Some(readEntries(spark, base, touchedEntries)
+      else Some(readEntries(spark, basePath, touchedEntries)
         .drop(BucketCol)
         .join(broadcast(probeKeys), keyCols, "left_anti"))
     val full = strangers
@@ -414,32 +418,13 @@ object PrunedIndex {
       .getOrElse(newKeyRows.select(dataCols.map(col): _*))
     val token = newVersionToken()
     val deltaDirName = s"delta-$token"
-    val deltaDir = Fs.child(path, deltaDirName)
-    val writer = full
-      .withColumn(BucketCol, pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
-      .repartition(math.max(touched.size, 1), col(BucketCol))
-      .write.mode("overwrite")
-    (if (maxRecordsPerFile > 0L)
-       writer.option("maxRecordsPerFile", maxRecordsPerFile)
-     else writer)
-      .partitionBy(BucketCol).parquet(deltaDir)
-    val prefix = BucketCol + "="
-    val newLines = Fs.list(deltaDir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .flatMap { d =>
-        val bucket = d.getPath.getName.substring(prefix.length).toInt
-        Fs.list(d.getPath.toString)
-          .filter { f =>
-            val n = f.getPath.getName
-            f.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-          .map(f => s"$bucket\t$deltaDirName/${d.getPath.getName}/${f.getPath.getName}")
-      }
+    val newLines = landBuckets(full, Fs.child(path, deltaDirName), keyCols,
+      numBuckets, math.max(touched.size, 1), maxRecordsPerFile, s"$deltaDirName/")
     // untouched buckets: carry the old entries forward ABSOLUTIZED, so
     // chains of deltas collapse to direct pointers (entry resolution
     // never walks history)
     val kept = old.iterator.collect { case (b, fs) if !touched(b) =>
-      fs.map(e => s"$b\t${resolveEntry(base, e)}")
+      fs.map(e => s"$b\t${resolveEntry(basePath, e)}")
     }.flatten.toSeq
     publish(path, kept ++ newLines, keyCols, numBuckets, token, full.schema)
   }
@@ -457,74 +442,24 @@ object PrunedIndex {
     * reader needs replace-by-key truth; use a full [[write]]
     * (compaction) to fold the stale generations out.
     *
-    * `basePath` stitches from a different index dir exactly as
-    * [[writeDelta]]'s does — `path` is created fresh, referencing the
-    * base's files by absolute path, and the base is never modified. */
+    * `basePath` is the previous version of the layout, exactly as in
+    * [[writeDelta]] — `path` is created fresh, referencing the base's
+    * files by absolute path, and the base is never modified. */
   def appendRows(spark: SparkSession, path: String, rows: DataFrame,
-                 basePath: Option[String] = None,
+                 basePath: String,
                  maxRecordsPerFile: Long = 0L): Unit = {
-    val base = basePath.getOrElse(path)
-    val (keyCols, numBuckets) = meta(base)
-    val old = manifestFor(spark, base).getOrElse(throw new IllegalStateException(
-      s"appendRows needs a _PRUNE_MANIFEST at $base — build the index with PrunedIndex.write"))
+    val (keyCols, numBuckets) = meta(basePath)
+    val old = manifestFor(spark, basePath).getOrElse(throw new IllegalStateException(
+      s"appendRows needs a _PRUNE_MANIFEST at $basePath — build the index with PrunedIndex.write"))
     require(!rows.columns.contains(BucketCol),
       s"input already carries a $BucketCol column")
     val token = newVersionToken()
     val deltaDirName = s"delta-$token"
-    val deltaDir = Fs.child(path, deltaDirName)
-    val writer = rows
-      .withColumn(BucketCol, pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
-      .repartition(math.min(numBuckets, 32), col(BucketCol))
-      .write.mode("overwrite")
-    (if (maxRecordsPerFile > 0L)
-       writer.option("maxRecordsPerFile", maxRecordsPerFile)
-     else writer)
-      .partitionBy(BucketCol).parquet(deltaDir)
-    val prefix = BucketCol + "="
-    val newLines = Fs.list(deltaDir)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .flatMap { d =>
-        val bucket = d.getPath.getName.substring(prefix.length).toInt
-        Fs.list(d.getPath.toString)
-          .filter { f =>
-            val n = f.getPath.getName
-            f.isFile && !n.startsWith("_") && !n.startsWith(".")
-          }
-          .map(f => s"$bucket\t$deltaDirName/${d.getPath.getName}/${f.getPath.getName}")
-      }
+    val newLines = landBuckets(rows, Fs.child(path, deltaDirName), keyCols,
+      numBuckets, math.min(numBuckets, 32), maxRecordsPerFile, s"$deltaDirName/")
     val kept = old.iterator.flatMap { case (b, fs) =>
-      fs.map(e => s"$b\t${resolveEntry(base, e)}")
+      fs.map(e => s"$b\t${resolveEntry(basePath, e)}")
     }.toSeq
     publish(path, kept ++ newLines, keyCols, numBuckets, token, rows.schema)
-  }
-
-  /** Garbage-collect data files under `path` that the CURRENT manifest
-    * no longer references (replaced by a [[writeDelta]]) and that are
-    * older than `graceMs` — the grace spares readers still draining a
-    * plan captured against the previous manifest. Files referenced by
-    * absolute entries living under OTHER roots are out of scope (their
-    * root's own sweep owns them). Returns the deleted count. */
-  def sweepUnreferenced(path: String, graceMs: Long): Long = {
-    if (!Fs.exists(manifestPath(path))) return 0L
-    // compare fully-qualified forms: listStatus returns scheme-qualified
-    // paths while manifest entries resolve scheme-less
-    def qual(p: String): String =
-      Fs.fs(p).makeQualified(new org.apache.hadoop.fs.Path(p)).toString
-    val referenced = Fs.readString(manifestPath(path)).split("\n")
-      .iterator.filter(_.nonEmpty)
-      .map { line => qual(resolveEntry(path, line.substring(line.indexOf('\t') + 1))) }
-      .toSet
-    val now = System.currentTimeMillis()
-    def sweep(dir: String): Long =
-      Fs.list(dir).map { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) sweep(st.getPath.toString)
-        else if (!n.startsWith("_") && !n.startsWith(".") &&
-            !referenced.contains(qual(st.getPath.toString)) &&
-            now - st.getModificationTime > graceMs) {
-          Fs.deleteRecursive(st.getPath.toString); 1L
-        } else 0L
-      }.sum
-    sweep(path)
   }
 }

@@ -76,10 +76,9 @@ object ContainmentStream {
     * family. Per-batch cost drops to the indexed probe's (bucket-pruned
     * postings/census reads, broadcast joins, one thin census scan for
     * the global order) and every component — postings, census, prefix,
-    * sets, head — flips behind ONE atomic `_CURRENT` swap per batch,
-    * closing the torn window the in-place containment append documents.
+    * sets, head — flips behind ONE atomic `_CURRENT` swap per batch.
     * First non-empty batch builds the store; crash replay converges
-    * (order-independent probe, replace-by-key idempotent append). */
+    * (order-independent probe, replace-by-key append). */
   def startIndexed(docsStream: DataFrame, idCol: String, textCol: String,
                    storeRoot: String, checkpoint: String,
                    n: Int = 3, threshold: Double = 0.8,

@@ -167,6 +167,64 @@ class CurationLedgerStoreSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("retention: an absorb writes only inside its new version; after compact + vacuum " +
+      "every data file is referenced by the current version") {
+    import java.nio.file.{Files, Path, Paths}
+    val base = Synthetic.docs(spark, 0L until 40L)
+    val bench = Synthetic.docs(spark, 1000L until 1004L)
+    val root = Files.createTempDirectory("graft_curstore_ret").toString
+    CurationLedgerStore.build(spark, base, bench, "text", root, storeParams)
+    // new docs plus re-uploads, then re-uploads of batch-1 docs and of
+    // build-time docs: every absorb displaces stored rows
+    val batches = Seq(
+      Synthetic.docs(spark, 40L until 50L)
+        .unionByName(Synthetic.docs(spark, Seq(3L, 7L, 11L), revision = 1)),
+      Synthetic.docs(spark, 40L until 45L, revision = 1),
+      Synthetic.docs(spark, Seq(0L, 7L, 20L), revision = 2))
+    // (path, size, mtime) of every file under `dir`, skipping the store
+    // pointer (its atomic swap is the commit itself)
+    def files(dir: String): Set[(String, Long, Long)] = {
+      val s = Files.walk(Paths.get(dir))
+      try s.filter(Files.isRegularFile(_)).toArray.map(_.asInstanceOf[Path])
+        .filterNot(_.getFileName.toString.contains("_CURRENT"))
+        .map(p => (p.toString, Files.size(p), Files.getLastModifiedTime(p).toMillis)).toSet
+      finally s.close()
+    }
+    batches.foreach { b =>
+      val before = files(root)
+      CurationLedgerStore.absorbBatch(spark, root, b).collect()
+      val fresh = CurationLedgerStore.currentPath(root).get + "/"
+      val outside = files(root).filterNot(_._1.startsWith(fresh))
+      assert(outside == before, s"absorb wrote outside $fresh: ${(outside -- before).take(5)}; " +
+        s"removed ${(before -- outside).take(5)}")
+    }
+    CurationLedgerStore.compact(spark, root)
+    CurationLedgerStore.vacuum(root)
+    val cur = CurationLedgerStore.currentPath(root).get
+    // data files: parquet parts, not sidecars (`_…`) or checksums (`.…`)
+    def dataFiles(dir: String): Set[String] =
+      files(dir).map(_._1).filterNot { f =>
+        val n = Paths.get(f).getFileName.toString
+        n.startsWith("_") || n.startsWith(".")
+      }
+    val referenced = {
+      val s = Files.walk(Paths.get(cur))
+      try s.filter(_.getFileName.toString == "_PRUNE_MANIFEST").toArray
+        .map(_.asInstanceOf[Path]).toSet.flatMap { (m: Path) =>
+          graft.fs.Fs.readString(m.toString).split("\n").filter(_.nonEmpty)
+            .map(l => l.substring(l.indexOf('\t') + 1).stripPrefix("file:"))
+            .map(e => m.getParent.resolve(e).normalize.toString)
+        }
+      finally s.close()
+    } ++ dataFiles(s"$cur/neardup/dfhead") // plain parquet, landed whole
+    val unreferenced = dataFiles(root).filterNot(_.startsWith(s"$root/grams/")) -- referenced
+    assert(unreferenced.isEmpty, s"${unreferenced.size} unreferenced data files, e.g. " +
+      unreferenced.toSeq.sorted.take(5).mkString(", "))
+    val corpus = batches.foldLeft(base)(applyDelta)
+    assert(rows(CurationLedgerStore.ledger(spark, root)) == rows(twinLedger(corpus, bench)))
+    spark.catalog.clearCache()
+  }
+
   test("a corpus with no near-dup pair: empty edge component survives absorb + compact") {
     val base = Synthetic.docs(spark, 0L until 40L)
     val bench = Synthetic.docs(spark, 1000L until 1004L)

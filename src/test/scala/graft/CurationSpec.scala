@@ -226,9 +226,9 @@ class CurationSpec extends AnyFunSuite {
     val delta2 = d.filter($"doc_id" % 8 === 2)
     def pset(df: org.apache.spark.sql.DataFrame) =
       df.select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(pset(graft.llm.Dedup.jaccardDeltaPairsIndexed(spark, s"$root/idx",
+    assert(pset(graft.llm.NearDupIndexStore.pairsForDelta(spark, s"$root/idx",
         delta2, "doc_id", "text")) ==
-      pset(graft.llm.Dedup.jaccardDeltaPairsIndexed(spark, s"$root/idx2",
+      pset(graft.llm.NearDupIndexStore.pairsForDelta(spark, s"$root/idx2",
         delta2, "doc_id", "text")))
     // and the indexed delta ledger equals the full rebuild on the true
     // corpus (the t141 driver-checked contract, pinned here too) —
@@ -244,9 +244,9 @@ class CurationSpec extends AnyFunSuite {
       scoreCol = "n_chars", sourceCol = "source", bench = bench, benchTextCol = "text")
     assert(rows(ledger).nonEmpty && rows(ledger) == rows(rebuild))
     Seq(old, d).foreach(graft.llm.Dedup.releaseShingleSetCache(_, "doc_id", "text"))
-    graft.llm.Dedup.releaseIndexedProbeCache(s"$root/idx", delta, "doc_id", "text")
+    graft.llm.NearDupIndexStore.releaseProbeCache(s"$root/idx", delta, "doc_id", "text")
     Seq(s"$root/idx", s"$root/idx2").foreach(r =>
-      graft.llm.Dedup.releaseIndexedProbeCache(r, delta2, "doc_id", "text"))
+      graft.llm.NearDupIndexStore.releaseProbeCache(r, delta2, "doc_id", "text"))
     spark.catalog.clearCache()
   }
 

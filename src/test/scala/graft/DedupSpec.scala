@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.Dedup
+import graft.llm.{Dedup, NearDupIndexStore => Store}
 
 class DedupSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
@@ -358,35 +358,36 @@ class DedupSpec extends AnyFunSuite {
     // batch 1 mixes re-uploads (%8==1, corrected) and new ids (%8==5)
     val delta1 = d.filter(col("doc_id") % 8 === 1 || col("doc_id") % 8 === 5)
     val root = java.nio.file.Files.createTempDirectory("graft_ndidx").toString
-    Dedup.writeNearDupIndex(spark, v0, "doc_id", "text", root, numBuckets = 16)
+    Store.build(spark, v0, "doc_id", "text", root, numBuckets = 16)
     def pset(df: org.apache.spark.sql.DataFrame) =
       df.select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val indexed1 = pset(Dedup.jaccardDeltaPairsIndexed(spark, root, delta1, "doc_id", "text"))
+    def probe(d: org.apache.spark.sql.DataFrame) =
+      pset(Store.pairsForDelta(spark, root, d, "doc_id", "text"))
+    val indexed1 = probe(delta1)
     val v0Index = Dedup.containmentIndex(v0, "doc_id", "text", n = 3)
     val ref1 = pset(Dedup.jaccardDeltaPairs(delta1, "doc_id", "text", v0Index))
     assert(indexed1.nonEmpty && indexed1 == ref1)
 
     // absorb batch 1; a later batch's probe must equal the delta path
     // over the rebuilt post-replace corpus (= the true `documents`)
-    Dedup.appendNearDupIndexDelta(spark, root, delta1, "doc_id", "text")
+    Store.appendDelta(spark, root, delta1, "doc_id", "text")
     val delta2 = d.filter(col("doc_id") % 8 === 2)
-    val indexed2 = pset(Dedup.jaccardDeltaPairsIndexed(spark, root, delta2, "doc_id", "text"))
+    val indexed2 = probe(delta2)
     val dIndex = Dedup.containmentIndex(d, "doc_id", "text", n = 3)
     val ref2 = pset(Dedup.jaccardDeltaPairs(delta2, "doc_id", "text", dIndex))
     assert(indexed2.nonEmpty && indexed2 == ref2)
     // no stale residue: no pair involves a %8==1 id at its draft text's
     // signature — equality with ref2 (computed from true text) is the pin
 
-    // crash-replay idempotency: re-running the SAME append (the
-    // recovery action after a crash between the two layout swaps)
-    // changes nothing a probe can observe
-    Dedup.appendNearDupIndexDelta(spark, root, delta1, "doc_id", "text")
-    assert(pset(Dedup.jaccardDeltaPairsIndexed(spark, root, delta2, "doc_id", "text")) == indexed2)
+    // replay idempotency: re-running the SAME append (the recovery
+    // action after a crashed batch) changes nothing a probe can observe
+    Store.appendDelta(spark, root, delta1, "doc_id", "text")
+    assert(probe(delta2) == indexed2)
 
     // refreeze re-derives the head + prefix layout from the stored sets
     // (different order, same exact pair SET — verification is exact)
-    Dedup.refreezeNearDupIndex(spark, root)
-    assert(pset(Dedup.jaccardDeltaPairsIndexed(spark, root, delta2, "doc_id", "text")) == indexed2)
+    Store.compact(spark, root, refreeze = true)
+    assert(probe(delta2) == indexed2)
 
     Seq(delta1, delta2, v0, d).foreach(Dedup.releaseShingleSetCache(_, "doc_id", "text"))
     Dedup.releaseContainmentDeltaCache(delta1, "doc_id", "text", v0Index, 3)
@@ -407,7 +408,8 @@ class DedupSpec extends AnyFunSuite {
         lit(" containment rev2 trailer")).as("text"))
     val delta = halves.unionByName(revs)
     val root = java.nio.file.Files.createTempDirectory("graft_ctidx").toString
-    Dedup.writeContainmentIndex(spark, corpus, "doc_id", "text", root, numBuckets = 16)
+    Store.build(spark, corpus, "doc_id", "text", root, numBuckets = 16,
+      withContainment = true)
     val corpusIndex = Dedup.containmentIndex(corpus, "doc_id", "text", n = 3)
     def pset(df: org.apache.spark.sql.DataFrame) =
       df.select(col("a_id"), col("b_id"),
@@ -415,18 +417,18 @@ class DedupSpec extends AnyFunSuite {
         .as[(Long, Long, Long)].collect().toSet
     // CAPPED: the indexed path reconstructs the post-delta order and
     // hot set exactly — bit-for-bit the batch algorithm's output
-    val capped = pset(Dedup.containmentDeltaPairsIndexed(spark, root, delta,
+    val capped = pset(Store.containmentPairsForDelta(spark, root, delta,
       "doc_id", "text", maxDf = 16))
     assert(capped.nonEmpty && capped ==
       pset(Dedup.containmentDeltaPairs(delta, "doc_id", "text", corpusIndex,
         maxDf = 16)))
     // UNCAPPED parity too
-    assert(pset(Dedup.containmentDeltaPairsIndexed(spark, root, delta,
+    assert(pset(Store.containmentPairsForDelta(spark, root, delta,
         "doc_id", "text")) ==
       pset(Dedup.containmentDeltaPairs(delta, "doc_id", "text", corpusIndex)))
     // absorb, then a SECOND batch probes the advanced index == the
     // batch path over the rebuilt corpus
-    Dedup.appendContainmentIndexDelta(spark, root, delta, "doc_id", "text")
+    Store.appendDelta(spark, root, delta, "doc_id", "text")
     val merged = corpus.filter(col("doc_id") % 7 =!= 0)
       .unionByName(delta)
     val delta2 = d.filter(col("doc_id") % 10 === 1)
@@ -434,13 +436,13 @@ class DedupSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.expr(
           "substring(text, 1, cast(n_chars div 2 as int))").as("text"))
     val mergedIndex = Dedup.containmentIndex(merged, "doc_id", "text", n = 3)
-    assert(pset(Dedup.containmentDeltaPairsIndexed(spark, root, delta2,
+    assert(pset(Store.containmentPairsForDelta(spark, root, delta2,
         "doc_id", "text", maxDf = 16)) ==
       pset(Dedup.containmentDeltaPairs(delta2, "doc_id", "text", mergedIndex,
         maxDf = 16)))
     Dedup.releaseContainmentDeltaCache(delta, "doc_id", "text", corpusIndex, 3)
     Dedup.releaseContainmentDeltaCache(delta2, "doc_id", "text", mergedIndex, 3)
-    Seq(delta, delta2).foreach(Dedup.releaseIndexedProbeCache(root, _, "doc_id", "text"))
+    Seq(delta, delta2).foreach(Store.releaseProbeCache(root, _, "doc_id", "text"))
     Dedup.releaseShingleSetCache(corpus, "doc_id", "text")
     spark.catalog.clearCache()
   }
@@ -460,10 +462,11 @@ class DedupSpec extends AnyFunSuite {
     val corpus = d.filter(col("doc_id") % 4 =!= 3).select(col("doc_id"), col("text"))
     val root = java.nio.file.Files.createTempDirectory("graft_cthead").toString
     val K = 64
-    Dedup.writeContainmentIndex(spark, corpus, "doc_id", "text", root,
-      dfHeadSize = K, numBuckets = 16)
+    Store.build(spark, corpus, "doc_id", "text", root, dfHeadSize = K,
+      numBuckets = 16, withContainment = true)
+    def cur = Store.currentPath(root).get
     // the head really is truncated at this K (meta line 2 == 0)
-    assert(graft.fs.Fs.readString(s"$root/_CTHEAD_META").split("\n")(1).trim == "0")
+    assert(graft.fs.Fs.readString(s"$cur/_CTHEAD_META").split("\n")(1).trim == "0")
     def pset(df: org.apache.spark.sql.DataFrame) =
       df.select(col("a_id"), col("b_id"),
           floor(col("containment") * 1e6).cast("long"))
@@ -477,20 +480,20 @@ class DedupSpec extends AnyFunSuite {
         org.apache.spark.sql.functions.concat(col("text"),
           lit(" cthead rev2 trailer")).as("text")))
     val corpusIndex = Dedup.containmentIndex(corpus, "doc_id", "text", n = 3)
-    val got = pset(Dedup.containmentDeltaPairsIndexed(spark, root, grow,
+    val got = pset(Store.containmentPairsForDelta(spark, root, grow,
       "doc_id", "text", maxDf = 16, dfHeadSize = K))
     assert(got.nonEmpty && got == pset(Dedup.containmentDeltaPairs(grow,
       "doc_id", "text", corpusIndex, dfHeadSize = K, maxDf = 16)))
     // (b) append: the maintained head == a from-scratch build's head
-    Dedup.appendContainmentIndexDelta(spark, root, grow, "doc_id", "text")
+    Store.appendDelta(spark, root, grow, "doc_id", "text")
     val merged = corpus.filter(col("doc_id") % 8 =!= 0).unionByName(grow)
     val refRoot = java.nio.file.Files.createTempDirectory("graft_ctheadref").toString
     Dedup.writeContainmentIndex(spark, merged, "doc_id", "text", refRoot,
       dfHeadSize = K, numBuckets = 16)
     def headOf(r: String) = spark.read.parquet(s"$r/cthead")
       .as[(String, Long)].collect().toSet
-    assert(headOf(root) == headOf(refRoot) && headOf(root).nonEmpty)
-    assert(graft.fs.Fs.readString(s"$root/_CTHEAD_META") ==
+    assert(headOf(cur) == headOf(refRoot) && headOf(cur).nonEmpty)
+    assert(graft.fs.Fs.readString(s"$cur/_CTHEAD_META") ==
       graft.fs.Fs.readString(s"$refRoot/_CTHEAD_META"))
     // (c) mass deletion: re-upload half the corpus as one-token stubs —
     // enough head shingles demote that the floor bound cannot certify
@@ -499,92 +502,19 @@ class DedupSpec extends AnyFunSuite {
     val kill = merged.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), lit("stub").as("text"))
     val mergedIndex = Dedup.containmentIndex(merged, "doc_id", "text", n = 3)
-    assert(pset(Dedup.containmentDeltaPairsIndexed(spark, root, kill,
+    assert(pset(Store.containmentPairsForDelta(spark, root, kill,
         "doc_id", "text", maxDf = 16, dfHeadSize = K)) ==
       pset(Dedup.containmentDeltaPairs(kill, "doc_id", "text", mergedIndex,
         dfHeadSize = K, maxDf = 16)))
-    Dedup.appendContainmentIndexDelta(spark, root, kill, "doc_id", "text")
+    Store.appendDelta(spark, root, kill, "doc_id", "text")
     val killed = merged.filter(col("doc_id") % 2 =!= 0).unionByName(kill)
     val refRoot2 = java.nio.file.Files.createTempDirectory("graft_ctheadref2").toString
     Dedup.writeContainmentIndex(spark, killed, "doc_id", "text", refRoot2,
       dfHeadSize = K, numBuckets = 16)
-    assert(headOf(root) == headOf(refRoot2))
-    Seq(grow, kill).foreach(Dedup.releaseIndexedProbeCache(root, _, "doc_id", "text"))
+    assert(headOf(cur) == headOf(refRoot2))
+    Seq(grow, kill).foreach(Store.releaseProbeCache(root, _, "doc_id", "text"))
     Dedup.releaseContainmentDeltaCache(grow, "doc_id", "text", corpusIndex, 3)
     Dedup.releaseContainmentDeltaCache(kill, "doc_id", "text", mergedIndex, 3)
-    spark.catalog.clearCache()
-  }
-
-  test("appendContainmentIndexDelta replay converges from the torn census-landed crash window") {
-    // The r16-ADVICE scenario: a crash lands postings+dfcensus but not
-    // prefix+sets; the documented recovery (re-run the batch) must
-    // leave the index byte-equivalent to a crash-free append. The old
-    // incremental census adjustment double-applied here (the replay
-    // read an already-adjusted census while the replaced-old
-    // subtraction still read pre-delta sets rows); the derived census
-    // recomputes the same value from either state.
-    import org.apache.spark.sql.functions.{concat, expr, floor}
-    import graft.fs.Fs
-    // plain-nio copy skipping dot-files: Hadoop's FileUtil.copy drags
-    // `.crc` sidecars along, which go stale when a later atomic write
-    // replaces their data file
-    def copyDir(src: String, dst: String): Unit = {
-      import java.nio.file.{Files, Paths, Path => JPath}
-      val s = Paths.get(src); val t = Paths.get(dst)
-      Files.walk(s).filter(p => !Files.isDirectory(p) &&
-          !p.getFileName.toString.startsWith(".")).forEach { (p: JPath) =>
-        val d = t.resolve(s.relativize(p))
-        Files.createDirectories(d.getParent)
-        Files.copy(p, d): Unit
-      }
-    }
-    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val corpus0 = d.filter(col("doc_id") % 6 =!= 5).select(col("doc_id"), col("text"))
-    // re-uploaded revisions (stored rows must leave the census exactly
-    // once) + new half-prefix quotes (contained)
-    val revs = d.filter(col("doc_id") % 9 === 0 && col("doc_id") % 6 =!= 5)
-      .select(col("doc_id"), concat(col("text"), lit(" torn-window rev2")).as("text"))
-    val halves = d.filter(col("doc_id") % 6 === 5 && col("doc_id") < 240).select(
-      (col("doc_id") + 300000).as("doc_id"),
-      expr("substring(text, 1, cast(n_chars div 2 as int))").as("text"))
-    val delta = revs.unionByName(halves)
-    val base = java.nio.file.Files.createTempDirectory("graft_ctreplay").toString
-    val root = Fs.child(base, "idx"); val twin = Fs.child(base, "twin")
-    Dedup.writeContainmentIndex(spark, corpus0, "doc_id", "text", root, numBuckets = 16)
-    copyDir(root, twin)
-    // stash the near-dup components; append fully; restore the stash →
-    // on-disk state is EXACTLY the crash window (containment components
-    // landed, near-dup components not)
-    val stash = Fs.child(base, "stash")
-    val nearDup = Seq("prefix", "sets", "dfhead")
-    nearDup.foreach(c => copyDir(Fs.child(root, c), Fs.child(stash, c)))
-    Dedup.appendContainmentIndexDelta(spark, root, delta, "doc_id", "text")
-    nearDup.foreach { c =>
-      Fs.deleteRecursive(Fs.child(root, c))
-      copyDir(Fs.child(stash, c), Fs.child(root, c))
-    }
-    // documented recovery: replay the batch; clean twin appends once
-    Dedup.appendContainmentIndexDelta(spark, root, delta, "doc_id", "text")
-    Dedup.appendContainmentIndexDelta(spark, twin, delta, "doc_id", "text")
-    // direct pin of the advisory's corruption: the census VALUES match
-    // the crash-free twin's (a double-applied adjustment diverges here)
-    def censusOf(r: String) = graft.sources.PrunedIndex.read(spark,
-        Fs.child(r, "dfcensus")).select(col("shingle"), col("df"))
-      .as[(String, Long)].collect().toSet
-    assert(censusOf(root) == censusOf(twin))
-    // and the capped probe (df-order- and hot-set-sensitive) agrees
-    val delta2 = d.filter(col("doc_id") % 10 === 7)
-      .select((col("doc_id") + 500000).as("doc_id"),
-        expr("substring(text, 1, cast(n_chars div 2 as int))").as("text"))
-    def pset(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("a_id"), col("b_id"),
-          floor(col("containment") * 1e6).cast("long"))
-        .as[(Long, Long, Long)].collect().toSet
-    val got = pset(Dedup.containmentDeltaPairsIndexed(spark, root, delta2,
-      "doc_id", "text", maxDf = 16))
-    assert(got.nonEmpty && got == pset(Dedup.containmentDeltaPairsIndexed(
-      spark, twin, delta2, "doc_id", "text", maxDf = 16)))
-    Seq(delta, delta2).foreach(Dedup.releaseIndexedProbeCache(root, _, "doc_id", "text"))
     spark.catalog.clearCache()
   }
 
@@ -597,46 +527,44 @@ class DedupSpec extends AnyFunSuite {
     val delta = d.filter(col("doc_id") % 5 === 0 || col("doc_id") % 7 === 0)
       .select(col("doc_id"), col("text")).withColumn("text", revText)
     val root = java.nio.file.Files.createTempDirectory("graft_mhidx").toString + "/idx"
-    Dedup.writeNearDupIndex(spark, corpus0, "doc_id", "text", root, numBuckets = 16)
-    Dedup.writeMinHashIndex(spark, root, numHashes = 64, bands = 32, numBuckets = 16)
+    Store.build(spark, corpus0, "doc_id", "text", root, numBuckets = 16,
+      minhash = Some((64, 32)))
     def pset(df: org.apache.spark.sql.DataFrame) =
       df.select(col("a_id"), col("b_id"),
           org.apache.spark.sql.functions.floor(col("jaccard") * 1e6).cast("long"))
         .as[(Long, Long, Long)].collect().toSet
-    val got = pset(Dedup.minHashDeltaPairsIndexed(spark, root, delta,
+    val got = pset(Store.minhashPairsForDelta(spark, root, delta,
       "doc_id", "text", threshold = 0.5))
     val want = pset(Dedup.minHashDeltaPairs(delta, corpus0,
       Dedup.minHashBandIndex(corpus0, "doc_id", "text", n = 3, numHashes = 64, bands = 32),
       "doc_id", "text", n = 3, numHashes = 64, bands = 32, threshold = 0.5))
     assert(got.nonEmpty && got == want)
-    // absorb (band component BEFORE the sets — the old-revision band
-    // keys derive from the pre-append sets), then a second batch probes
-    // the advanced index == the delta path over the rebuilt corpus
-    Dedup.appendMinHashIndexDelta(spark, root, delta, "doc_id", "text")
-    Dedup.appendNearDupIndexDelta(spark, root, delta, "doc_id", "text")
+    // absorb (the old-revision band keys derive from the pre-append
+    // sets), then a second batch probes the advanced index == the delta
+    // path over the rebuilt corpus
+    Store.appendDelta(spark, root, delta, "doc_id", "text")
     val updated = d.select(col("doc_id"), col("text")).withColumn("text", revText)
     // band component content == a from-scratch banding of the corpus
     def bandsOf(p: String) = graft.sources.PrunedIndex.read(spark, p)
       .select(col("id"), col("band"), col("bkey"))
       .as[(Long, Int, Int)].collect().toSet
-    assert(bandsOf(graft.fs.Fs.child(root, "bands")) ==
+    assert(bandsOf(graft.fs.Fs.child(Store.currentPath(root).get, "bands")) ==
       Dedup.minHashBandIndex(updated, "doc_id", "text", n = 3, numHashes = 64, bands = 32)
         .select(col("id"), col("band"), col("bkey"))
         .as[(Long, Int, Int)].collect().toSet)
     val delta2 = d.filter(col("doc_id") % 11 === 3)
       .select((col("doc_id") + 800000).as("doc_id"), col("text"))
-    def secondProbe() = pset(Dedup.minHashDeltaPairsIndexed(spark, root, delta2,
+    def secondProbe() = pset(Store.minhashPairsForDelta(spark, root, delta2,
       "doc_id", "text", threshold = 0.5))
     val want2 = pset(Dedup.minHashDeltaPairs(delta2, updated,
       Dedup.minHashBandIndex(updated, "doc_id", "text", n = 3, numHashes = 64, bands = 32),
       "doc_id", "text", n = 3, numHashes = 64, bands = 32, threshold = 0.5))
     assert(secondProbe().nonEmpty && secondProbe() == want2)
-    // crash-replay idempotency: re-running the same appends (recovery)
+    // replay idempotency: re-running the same append (recovery)
     // changes nothing a probe can observe
-    Dedup.appendMinHashIndexDelta(spark, root, delta, "doc_id", "text")
-    Dedup.appendNearDupIndexDelta(spark, root, delta, "doc_id", "text")
+    Store.appendDelta(spark, root, delta, "doc_id", "text")
     assert(secondProbe() == want2)
-    Seq(delta, delta2).foreach(Dedup.releaseIndexedProbeCache(root, _, "doc_id", "text"))
+    Seq(delta, delta2).foreach(Store.releaseProbeCache(root, _, "doc_id", "text"))
     Seq(corpus0, updated).foreach(Dedup.releaseShingleSetCache(_, "doc_id", "text"))
     spark.catalog.clearCache()
   }
@@ -964,42 +892,43 @@ class DedupSpec extends AnyFunSuite {
   test("indexed fuzzy-key: probe == fuzzyKeyDeltaPairs incl. re-uploads; append == rebuild; replay idempotent") {
     val corpus = fuzzyDocs.filter($"doc_id" <= 3)
     val root = java.nio.file.Files.createTempDirectory("graft_fzidx").toString + "/idx"
-    Dedup.writeFuzzyKeyIndex(spark, corpus, "doc_id", "text", root,
-      keyLen = 64, maxDist = 3, numBuckets = 16)
+    Store.build(spark, corpus, "doc_id", "text", root, numBuckets = 16,
+      fuzzyKey = Some((64, 3)), jaccard = false)
     def pset(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long)].collect().toSet
     val delta = fuzzyDocs.filter($"doc_id" >= 4)
     val want = pset(Dedup.fuzzyKeyDeltaPairs(delta, "doc_id", "text",
       Dedup.fuzzyKeyIndex(corpus, "doc_id", "text", 64, 3), 64, 3))
-    val got = pset(Dedup.fuzzyKeyDeltaPairsIndexed(spark, root, delta,
+    val got = pset(Store.fuzzyPairsForDelta(spark, root, delta,
       "doc_id", "text"))
     assert(got.nonEmpty && got == want)
     assert(got.contains((0L, 4L, 0L)) && got.contains((5L, 6L, 1L)))
     // absorb; the re-upload batch (doc 4 rewritten + doc 9 matching 4's
     // OLD key) must displace the stale rows — the delta-frame form's
     // contract, over the store
-    Dedup.appendFuzzyKeyIndexDelta(spark, root, delta, "doc_id", "text")
+    Store.appendDelta(spark, root, delta, "doc_id", "text")
     val delta2 = Seq(
       (4L, "a completely rewritten document with nothing in common anymore"),
       (9L, "the quick brown fox jumps over the lazy dog near the river today")
     ).toDF("doc_id", "text")
     val want2 = pset(Dedup.fuzzyKeyDeltaPairs(delta2, "doc_id", "text",
       Dedup.fuzzyKeyIndex(fuzzyDocs, "doc_id", "text", 64, 3), 64, 3))
-    def probe2() = pset(Dedup.fuzzyKeyDeltaPairsIndexed(spark, root, delta2,
+    def probe2() = pset(Store.fuzzyPairsForDelta(spark, root, delta2,
       "doc_id", "text"))
     assert(probe2() == want2 && want2.contains((0L, 9L, 0L)))
     assert(!probe2().exists(p => p._1 == 4L || p._2 == 4L))
     // append delta2, probe unchanged (order independence), replay
     // idempotent, components == rebuild over the post-replace corpus
-    Dedup.appendFuzzyKeyIndexDelta(spark, root, delta2, "doc_id", "text")
+    Store.appendDelta(spark, root, delta2, "doc_id", "text")
     assert(probe2() == want2)
-    Dedup.appendFuzzyKeyIndexDelta(spark, root, delta2, "doc_id", "text")
+    Store.appendDelta(spark, root, delta2, "doc_id", "text")
     assert(probe2() == want2)
     val post = fuzzyDocs.filter($"doc_id" =!= 4L).unionByName(delta2)
     val rebuilt = Dedup.fuzzyKeyIndex(post, "doc_id", "text", 64, 3)
       .as[(Long, String, Int, String)].collect().toSet
     for (comp <- Seq("segs", "byid"))
-      assert(graft.sources.PrunedIndex.read(spark, graft.fs.Fs.child(root, comp))
+      assert(graft.sources.PrunedIndex.read(spark,
+          graft.fs.Fs.child(Store.currentPath(root).get, s"fuzzy/$comp"))
         .as[(Long, String, Int, String)].collect().toSet == rebuilt, comp)
   }
 

@@ -543,13 +543,19 @@ class StoreCrashPropertySpec extends Properties("graft.storecrash") {
     import graft.llm.NearDupIndexStore
     import spark.implicits._
     def text(i: Int): String = (0 until 12).map(j => s"s${i}z$j").mkString(" ")
+    // every text family, so each family's components ride every crash case
+    val components = Seq("prefix", "sets", "postings", "dfcensus", "bands",
+      "win/byid", "win/postings", "win/dfcensus", "fuzzy/segs", "fuzzy/byid")
     crashProperty(new Store(
       root => NearDupIndexStore.build(spark, (0 until 20).map(i => (i.toLong, text(i)))
-        .toDF("doc_id", "text"), "doc_id", "text", root, numBuckets = 4): Unit,
+        .toDF("doc_id", "text"), "doc_id", "text", root, numBuckets = 4,
+        withContainment = true, minhash = Some((16, 8)), winnowing = Some((12, 8)),
+        fuzzyKey = Some((64, 3))): Unit,
       root => NearDupIndexStore.appendDelta(spark, root,
         Seq((100L, text(7)), (101L, text(41)), (5L, text(5) + " revised"))
           .toDF("doc_id", "text"), "doc_id", "text"): Unit,
-      dir => rows(PrunedIndex.read(spark, Fs.child(dir, "sets"))),
+      dir => components.flatMap(c =>
+        rows(PrunedIndex.read(spark, Fs.child(dir, c))).map(r => s"$c $r")).toSet,
       NearDupIndexStore.vacuum(_): Unit))
   }
 

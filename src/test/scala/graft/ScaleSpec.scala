@@ -125,74 +125,32 @@ class ScaleSpec extends AnyFunSuite {
     assert(e.getMessage.contains("_PRUNE_META"))
   }
 
-  test("PrunedIndex.writeDelta: only touched buckets land new files; reads == full rewrite") {
-    import graft.sources.PrunedIndex
-    import graft.fs.Fs
-    val dir = java.nio.file.Files.createTempDirectory("graft_pidx_delta").toString
-    val p = s"$dir/idx"
-    val v1 = (0 until 500).map(i => (i.toLong, s"term${i % 37}", (i % 7 + 1).toLong))
-      .toDF("doc_id", "term", "tf")
-    PrunedIndex.write(v1, p, Seq("term"), numBuckets = 16)
-    def manifestEntries(path: String): Map[Int, Set[String]] =
-      Fs.readString(s"$path/_PRUNE_MANIFEST").split("\n").iterator.filter(_.nonEmpty)
-        .map { l => val i = l.indexOf('\t'); (l.substring(0, i).toInt, l.substring(i + 1)) }
-        .toSeq.groupMap(_._1)(_._2).map { case (k, v) => (k, v.toSet) }
-    val before = manifestEntries(p)
-    // replace term3's rows + add a brand-new term: REPLACE-by-key
-    val newRows = Seq((1000L, "term3", 99L), (1001L, "termNEW", 5L))
-      .toDF("doc_id", "term", "tf")
-    val probe = Seq("term3", "termNEW").toDF("term")
-    import org.apache.spark.sql.functions.{pmod, hash, lit}
-    val touched = probe.select(pmod(hash($"term"), lit(16)).as("b"))
-      .distinct().as[Int].collect().toSet
-    PrunedIndex.writeDelta(spark, p, newRows, probe)
-    val after = manifestEntries(p)
-    // untouched buckets: entry sets identical up to absolutization —
-    // the delta-bounded-write-I/O pin (the t132 listing-equality idiom)
-    val beforeResolved = before.map { case (b, fs) =>
-      (b, fs.map(e => if (e.startsWith("/")) e else s"$p/$e")) }
-    val afterResolved = after.map { case (b, fs) =>
-      (b, fs.map(e => if (e.startsWith("/")) e else s"$p/$e")) }
-    for (b <- before.keySet ++ after.keySet; if !touched(b))
-      assert(afterResolved.get(b) == beforeResolved.get(b), s"untouched bucket $b rewritten")
-    // touched buckets: every entry is NEW (under the delta subdir)
-    for (b <- touched; fs <- after.get(b); e <- fs)
-      assert(e.startsWith("delta-"), s"touched bucket $b kept old entry $e")
-    // logical content == a full rewrite of the merged corpus
-    val expect = v1.filter($"term" =!= "term3").unionByName(newRows)
-      .as[(Long, String, Long)].collect().toSet
-    assert(PrunedIndex.read(spark, p).as[(Long, String, Long)].collect().toSet == expect)
-    val pr = PrunedIndex.readPruned(spark, p, Seq("term3", "term5").toDF("term"))
-      .as[(Long, String, Long)].collect().toSet
-    assert(pr == expect.filter(r => r._2 == "term3" || r._2 == "term5") && pr.nonEmpty)
-    // a second delta chains (entries absolutize, no history walk)
-    PrunedIndex.writeDelta(spark, p,
-      Seq((2000L, "term5", 1L)).toDF("doc_id", "term", "tf"), Seq("term5").toDF("term"))
-    val expect2 = expect.filter(_._2 != "term5") + ((2000L, "term5", 1L))
-    assert(PrunedIndex.read(spark, p).as[(Long, String, Long)].collect().toSet == expect2)
-    // stray keys (not in probe) are rejected, not silently dropped
-    val e = intercept[IllegalArgumentException] {
-      PrunedIndex.writeDelta(spark, p,
-        Seq((1L, "termX", 1L)).toDF("doc_id", "term", "tf"), Seq("termY").toDF("term"))
-    }
-    assert(e.getMessage.contains("probe"))
-    // garbage collection: replaced files sweep once past grace; the view
-    // stays exact before and after
-    Thread.sleep(20)
-    val swept = PrunedIndex.sweepUnreferenced(p, graceMs = 10L)
-    assert(swept > 0L, "replaced files should have been swept")
-    assert(PrunedIndex.read(spark, p).as[(Long, String, Long)].collect().toSet == expect2)
-    assert(PrunedIndex.sweepUnreferenced(p, graceMs = 10L) == 0L)
-  }
-
   test("PrunedIndex.writeDelta cross-root: a new version dir stitches the base's untouched files") {
     import graft.sources.PrunedIndex
+    import graft.fs.Fs
+    import org.apache.spark.sql.functions.{pmod, hash, lit}
     val dir = java.nio.file.Files.createTempDirectory("graft_pidx_xroot").toString
     val v1 = (0 until 300).map(i => (i.toLong, s"k${i % 23}", i.toLong)).toDF("id", "k", "v")
     PrunedIndex.write(v1, s"$dir/v1", Seq("k"), numBuckets = 8)
-    val newRows = Seq((5000L, "k7", 7L)).toDF("id", "k", "v")
-    PrunedIndex.writeDelta(spark, s"$dir/v2", newRows, Seq("k7").toDF("k"),
-      basePath = Some(s"$dir/v1"))
+    // bucket -> entries resolved to absolute paths
+    def manifestEntries(path: String): Map[Int, Set[String]] =
+      Fs.readString(s"$path/_PRUNE_MANIFEST").split("\n").iterator.filter(_.nonEmpty)
+        .map { l => val i = l.indexOf('\t'); (l.substring(0, i).toInt, l.substring(i + 1)) }
+        .map { case (b, e) => (b, if (e.startsWith("/")) e else s"$path/$e") }
+        .toSeq.groupMap(_._1)(_._2).map { case (b, fs) => (b, fs.toSet) }
+    // replace k7's rows + add a brand-new key: REPLACE-by-key
+    val newRows = Seq((5000L, "k7", 7L), (5001L, "kNEW", 1L)).toDF("id", "k", "v")
+    val probe = Seq("k7", "kNEW").toDF("k")
+    val touched = probe.select(pmod(hash($"k"), lit(8)).as("b"))
+      .distinct().as[Int].collect().toSet
+    PrunedIndex.writeDelta(spark, s"$dir/v2", newRows, probe, basePath = s"$dir/v1")
+    // untouched buckets stitch v1's files verbatim; touched buckets hold
+    // only new files under v2's delta subdir (delta-bounded write I/O)
+    val (before, after) = (manifestEntries(s"$dir/v1"), manifestEntries(s"$dir/v2"))
+    for (b <- before.keySet ++ after.keySet; if !touched(b))
+      assert(after.get(b) == before.get(b), s"untouched bucket $b rewritten")
+    for (b <- touched; fs <- after.get(b); e <- fs)
+      assert(e.startsWith(s"$dir/v2/delta-"), s"touched bucket $b kept old entry $e")
     // v2 holds ONLY the delta's files locally; reads stitch v1's rest
     val expect = v1.filter($"k" =!= "k7").unionByName(newRows)
       .as[(Long, String, Long)].collect().toSet
@@ -211,10 +169,24 @@ class ScaleSpec extends AnyFunSuite {
       .map[String](_.toString).toArray.map(_.toString)
       .filterNot(f => f.contains("_PRUNE") || f.endsWith("_SUCCESS") || f.contains("/."))
     assert(local.nonEmpty && local.forall(_.contains("/delta-")), local.mkString(","))
+    // a second delta chains off v2 (entries absolutize, no history walk)
+    PrunedIndex.writeDelta(spark, s"$dir/v3",
+      Seq((6000L, "k5", 1L)).toDF("id", "k", "v"), Seq("k5").toDF("k"),
+      basePath = s"$dir/v2")
+    val expect2 = expect.filter(_._2 != "k5") + ((6000L, "k5", 1L))
+    assert(PrunedIndex.read(spark, s"$dir/v3").as[(Long, String, Long)].collect().toSet
+      == expect2)
+    // stray keys (not in probe) are rejected, not silently dropped
+    val e = intercept[IllegalArgumentException] {
+      PrunedIndex.writeDelta(spark, s"$dir/v4",
+        Seq((1L, "kX", 1L)).toDF("id", "k", "v"), Seq("kY").toDF("k"),
+        basePath = s"$dir/v3")
+    }
+    assert(e.getMessage.contains("probe"))
   }
 
   test("near-dup index: probe reads are bucket-bounded, append rewrites only touched shingle buckets") {
-    import graft.llm.Dedup
+    import graft.llm.{NearDupIndexStore => Store}
     val dir = java.nio.file.Files.createTempDirectory("graft_ndscale").toString
     val root = s"$dir/idx"
     // disjoint per-doc vocabularies → each doc's prefix shingles land in
@@ -222,13 +194,14 @@ class ScaleSpec extends AnyFunSuite {
     def text(i: Int): String =
       (0 until 12).map(j => s"w${i}x$j").mkString(" ")
     val docs = (0 until 60).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
-    Dedup.writeNearDupIndex(spark, docs, "doc_id", "text", root, numBuckets = 16)
+    Store.build(spark, docs, "doc_id", "text", root, numBuckets = 16)
+    val v1 = Store.currentPath(root).get
 
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val delta = Seq((1000L, text(7))).toDF("doc_id", "text")
-      val res = Dedup.jaccardDeltaPairsIndexed(spark, root, delta, "doc_id", "text")
+      val res = Store.pairsForDelta(spark, root, delta, "doc_id", "text")
       // collect res ITSELF so its executedPlan's metrics populate
       assert(res.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
         Set((7L, 1000L)))
@@ -240,7 +213,7 @@ class ScaleSpec extends AnyFunSuite {
               if s.relation.location.rootPaths.exists(_.toString.contains(frag)) =>
             s.metrics("numFiles").value
         }.sum
-      val setsTotal = graft.fs.Fs.list(s"$root/sets").count { f =>
+      val setsTotal = graft.fs.Fs.list(s"$v1/sets").count { f =>
         f.isDirectory && f.getPath.getName.startsWith(
           graft.sources.PrunedIndex.BucketCol + "=")
       }
@@ -256,10 +229,10 @@ class ScaleSpec extends AnyFunSuite {
       graft.fs.Fs.readString(s"$p/_PRUNE_MANIFEST").split("\n").filter(_.nonEmpty)
         .map { l => val Array(b, f) = l.split("\t", 2); (b.toInt, f) }
         .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
-    val before = manifest(s"$root/prefix")
-    Dedup.appendNearDupIndexDelta(spark, root,
+    val before = manifest(s"$v1/prefix")
+    Store.appendDelta(spark, root,
       Seq((2000L, text(31))).toDF("doc_id", "text"), "doc_id", "text")
-    val after = manifest(s"$root/prefix")
+    val after = manifest(s"${Store.currentPath(root).get}/prefix")
     val changed = after.keySet.filter(b => before.get(b).map(_.map(_.split("/").last))
       != Some(after(b).map(_.split("/").last)))
     assert(changed.nonEmpty && changed.size < before.size,
@@ -267,14 +240,14 @@ class ScaleSpec extends AnyFunSuite {
     assert(changed.forall(b => after(b).forall(_.contains("delta-"))),
       s"touched buckets' files not under delta-*/: ${changed.map(after)}")
     // and the appended doc is findable afterwards
-    val res2 = Dedup.jaccardDeltaPairsIndexed(spark,
+    val res2 = Store.pairsForDelta(spark,
       root, Seq((3000L, text(31))).toDF("doc_id", "text"), "doc_id", "text")
     assert(res2.select("a_id", "b_id").as[(Long, Long)].collect().toSet ==
       Set((2000L, 3000L), (31L, 3000L)))
   }
 
   test("winnowing index: probe reads are bucket-bounded, append rewrites only touched fp buckets") {
-    import graft.llm.Dedup
+    import graft.llm.{NearDupIndexStore => Store}
     val dir = java.nio.file.Files.createTempDirectory("graft_wscale").toString
     val root = s"$dir/idx"
     // disjoint per-doc vocabularies → each doc's fingerprints land in a
@@ -284,13 +257,15 @@ class ScaleSpec extends AnyFunSuite {
     val docs = (0 until 60).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
     // 64 buckets: a doc yields ~25 uniformly-hashed fingerprints, so
     // its bucket set is a strict subset only when buckets >> fps-per-doc
-    Dedup.writeWinnowingIndex(spark, docs, "doc_id", "text", root, numBuckets = 64)
+    Store.build(spark, docs, "doc_id", "text", root, numBuckets = 64,
+      winnowing = Some((12, 8)), jaccard = false)
+    def win = s"${Store.currentPath(root).get}/win"
 
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val delta = Seq((1000L, text(7))).toDF("doc_id", "text")
-      val res = Dedup.winnowingDeltaPairsIndexed(spark, root, delta,
+      val res = Store.winnowingPairsForDelta(spark, root, delta,
         "doc_id", "text", minShared = 2, maxDf = 50)
       // collect res ITSELF so its executedPlan's metrics populate
       assert(res.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
@@ -308,8 +283,8 @@ class ScaleSpec extends AnyFunSuite {
           graft.sources.PrunedIndex.BucketCol + "=")
       }
       val postRead = scanFiles("/postings")
-      assert(postRead > 0 && postRead < bucketDirs(s"$root/postings"),
-        s"probe read $postRead of >=${bucketDirs(s"$root/postings")} postings buckets — not probe-bounded")
+      assert(postRead > 0 && postRead < bucketDirs(s"$win/postings"),
+        s"probe read $postRead of >=${bucketDirs(s"$win/postings")} postings buckets — not probe-bounded")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
 
     // maintenance write I/O is delta-bounded: untouched fp buckets'
@@ -320,10 +295,10 @@ class ScaleSpec extends AnyFunSuite {
         .map { l => val Array(b, f) = l.split("\t", 2); (b.toInt, f) }
         .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
     for (comp <- Seq("postings", "dfcensus")) {
-      val before = manifest(s"$root/$comp")
-      Dedup.appendWinnowingIndexDelta(spark, root,
+      val before = manifest(s"$win/$comp")
+      Store.appendDelta(spark, root,
         Seq((2000L, text(31))).toDF("doc_id", "text"), "doc_id", "text")
-      val after = manifest(s"$root/$comp")
+      val after = manifest(s"$win/$comp")
       val changed = after.keySet.filter(b => before.get(b).map(_.map(_.split("/").last))
         != Some(after(b).map(_.split("/").last)))
       assert(changed.nonEmpty && changed.size < before.size,
@@ -332,7 +307,7 @@ class ScaleSpec extends AnyFunSuite {
         s"touched $comp buckets' files not under delta-*/")
     }
     // and the appended doc is findable afterwards
-    val res2 = Dedup.winnowingDeltaPairsIndexed(spark, root,
+    val res2 = Store.winnowingPairsForDelta(spark, root,
       Seq((3000L, text(31))).toDF("doc_id", "text"), "doc_id", "text",
       minShared = 2, maxDf = 50)
     assert(res2.select("a_id", "b_id").as[(Long, Long)].collect().toSet ==
@@ -340,21 +315,22 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("minhash band index: probe reads are bucket-bounded, append rewrites only touched band buckets") {
-    import graft.llm.Dedup
+    import graft.llm.{NearDupIndexStore => Store}
     val dir = java.nio.file.Files.createTempDirectory("graft_mhscale").toString
     val root = s"$dir/idx"
     def text(i: Int): String =
       (0 until 24).map(j => s"m${i}tok$j").mkString(" ")
     val docs = (0 until 60).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
     // 16 band keys per doc over 64 buckets → strict-subset bucket sets
-    Dedup.writeNearDupIndex(spark, docs, "doc_id", "text", root, numBuckets = 64)
-    Dedup.writeMinHashIndex(spark, root, numHashes = 64, bands = 16, numBuckets = 64)
+    Store.build(spark, docs, "doc_id", "text", root, numBuckets = 64,
+      minhash = Some((64, 16)))
+    val v1 = Store.currentPath(root).get
 
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       val delta = Seq((1000L, text(7))).toDF("doc_id", "text")
-      val res = Dedup.minHashDeltaPairsIndexed(spark, root, delta,
+      val res = Store.minhashPairsForDelta(spark, root, delta,
         "doc_id", "text", threshold = 0.5)
       // collect res ITSELF so its executedPlan's metrics populate
       assert(res.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
@@ -373,8 +349,8 @@ class ScaleSpec extends AnyFunSuite {
       // side lands behind an eager localCheckpoint, same as the jaccard
       // probe): strict subset
       val setsRead = scanFiles(res, "/sets")
-      assert(setsRead > 0 && setsRead < bucketDirs(s"$root/sets"),
-        s"verify read $setsRead of >=${bucketDirs(s"$root/sets")} sets buckets — not probe-bounded")
+      assert(setsRead > 0 && setsRead < bucketDirs(s"$v1/sets"),
+        s"verify read $setsRead of >=${bucketDirs(s"$v1/sets")} sets buckets — not probe-bounded")
       // the band read happens inside the checkpointed candidate stage;
       // gate it through the identical pruned-read path with the same
       // probe keys (one band-key row per (band, slice-hash) of the doc)
@@ -382,11 +358,11 @@ class ScaleSpec extends AnyFunSuite {
         .minHashBandIndex(delta, "doc_id", "text", n = 3, numHashes = 64, bands = 16)
         .select($"band", $"bkey")
       val pruned = graft.sources.PrunedIndex.readPruned(spark,
-        s"$root/bands", deltaBandKeys)
+        s"$v1/bands", deltaBandKeys)
       pruned.collect(): Unit
       val bandsRead = scanFiles(pruned, "/bands")
-      assert(bandsRead > 0 && bandsRead < bucketDirs(s"$root/bands"),
-        s"probe read $bandsRead of >=${bucketDirs(s"$root/bands")} band buckets — not probe-bounded")
+      assert(bandsRead > 0 && bandsRead < bucketDirs(s"$v1/bands"),
+        s"probe read $bandsRead of >=${bucketDirs(s"$v1/bands")} band buckets — not probe-bounded")
     } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
 
     // maintenance write I/O is delta-bounded on the band component
@@ -394,12 +370,10 @@ class ScaleSpec extends AnyFunSuite {
       graft.fs.Fs.readString(s"$p/_PRUNE_MANIFEST").split("\n").filter(_.nonEmpty)
         .map { l => val Array(b, f) = l.split("\t", 2); (b.toInt, f) }
         .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
-    val before = manifest(s"$root/bands")
-    Dedup.appendMinHashIndexDelta(spark, root,
+    val before = manifest(s"$v1/bands")
+    Store.appendDelta(spark, root,
       Seq((2000L, text(31))).toDF("doc_id", "text"), "doc_id", "text")
-    Dedup.appendNearDupIndexDelta(spark, root,
-      Seq((2000L, text(31))).toDF("doc_id", "text"), "doc_id", "text")
-    val after = manifest(s"$root/bands")
+    val after = manifest(s"${Store.currentPath(root).get}/bands")
     val changed = after.keySet.filter(b => before.get(b).map(_.map(_.split("/").last))
       != Some(after(b).map(_.split("/").last)))
     assert(changed.nonEmpty && changed.size < before.size,
@@ -407,49 +381,11 @@ class ScaleSpec extends AnyFunSuite {
     assert(changed.forall(b => after(b).forall(_.contains("delta-"))),
       s"touched band buckets' files not under delta-*/")
     // and the appended doc is findable afterwards
-    val res3 = Dedup.minHashDeltaPairsIndexed(spark, root,
+    val res3 = Store.minhashPairsForDelta(spark, root,
       Seq((3000L, text(31))).toDF("doc_id", "text"), "doc_id", "text",
       threshold = 0.5)
     assert(res3.select("a_id", "b_id").as[(Long, Long)].collect().toSet ==
       Set((2000L, 3000L), (31L, 3000L)))
-  }
-
-  test("near-dup index retention: refreeze + sweep leaves only live files, probes unchanged") {
-    import graft.llm.Dedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_ndgc").toString
-    val root = s"$dir/idx"
-    def text(i: Int): String = (0 until 12).map(j => s"v${i}y$j").mkString(" ")
-    val docs = (0 until 40).map(i => (i.toLong, text(i))).toDF("doc_id", "text")
-    Dedup.writeNearDupIndex(spark, docs, "doc_id", "text", root, numBuckets = 8)
-    // two appends accumulate delta-*/ files in the prefix layout
-    Dedup.appendNearDupIndexDelta(spark, root,
-      Seq((100L, text(3))).toDF("doc_id", "text"), "doc_id", "text")
-    Dedup.appendNearDupIndexDelta(spark, root,
-      Seq((101L, text(3))).toDF("doc_id", "text"), "doc_id", "text")
-    val probe = Seq((999L, text(3))).toDF("doc_id", "text")
-    def pairs(): Set[(Long, Long)] =
-      Dedup.jaccardDeltaPairsIndexed(spark, root, probe, "doc_id", "text")
-        .select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    val before = pairs()
-    assert(before == Set((3L, 999L), (100L, 999L), (101L, 999L)))
-    // refreeze compacts the prefix layout flat; the replaced delta files
-    // become unreferenced and a zero-grace sweep removes them
-    Dedup.refreezeNearDupIndex(spark, root)
-    val swept = graft.sources.PrunedIndex.sweepUnreferenced(s"$root/prefix", 0L) +
-      graft.sources.PrunedIndex.sweepUnreferenced(s"$root/sets", 0L)
-    assert(swept > 0, "expected the superseded delta files to be swept")
-    def dataFiles(p: String): Seq[String] =
-      java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map[String](_.toString).toArray.map(_.toString)
-        .filterNot(f => f.contains("_PRUNE") || f.endsWith("_SUCCESS") || f.contains("/."))
-        .toSeq
-    // every surviving prefix data file is referenced by the manifest
-    val manifest = graft.fs.Fs.readString(s"$root/prefix/_PRUNE_MANIFEST")
-    assert(dataFiles(s"$root/prefix").forall(f =>
-      manifest.contains(f.split("/").last)))
-    // and the probe answers are unchanged after compaction + sweep
-    assert(pairs() == before)
   }
 
   test("containment probe derives the post-delta order WITHOUT a census scan (untouched census buckets never opened)") {
@@ -793,7 +729,7 @@ class ScaleSpec extends AnyFunSuite {
       "doc_id", "text", "n_chars", "source")
     // the probe is order-independent with the append (documented on
     // mergeStateIndexed), so the post-append probe is the batch's pairs
-    val deltaPairs = Dedup.jaccardDeltaPairsIndexed(spark, s"$root/idx",
+    val deltaPairs = graft.llm.NearDupIndexStore.pairsForDelta(spark, s"$root/idx",
       delta, "doc_id", "text")
     // post quality, from the public stage pieces
     val survIds = Dedup.dedupByPairsKeepBest(merged.thin, "doc_id", "n_chars",
@@ -813,7 +749,7 @@ class ScaleSpec extends AnyFunSuite {
     // corpus-sized candidate set into the diff (the bands are narrow
     // when the batch barely moves N and the quotas)
     assert(n < corpus / 5, s"candidates $n of $corpus — not churn-bounded")
-    graft.llm.Dedup.releaseIndexedProbeCache(s"$root/idx", delta, "doc_id", "text")
+    graft.llm.NearDupIndexStore.releaseProbeCache(s"$root/idx", delta, "doc_id", "text")
     spark.catalog.clearCache()
   }
 

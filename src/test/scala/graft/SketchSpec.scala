@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.llm.Dedup
+import graft.llm.{Dedup, NearDupIndexStore}
 
 class SketchSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
@@ -40,7 +40,8 @@ class SketchSpec extends AnyFunSuite {
     val corpus = e.filter($"vec_id" % 5 =!= 0)
     val delta = e.filter($"vec_id" % 5 === 0)
     val base = java.nio.file.Files.createTempDirectory("graft_elshidx").toString
-    val root = s"$base/idx"
+    // each append lands the advanced index in a new dir: v1 -> v2 -> ...
+    val root = s"$base/v1"
     Dedup.writeEmbeddingLshIndex(spark, corpus, "vec_id", "embedding", root,
       numBits = 32, bandBits = 8, seed = 42L, numBuckets = 16)
     def pset(df: org.apache.spark.sql.DataFrame) =
@@ -57,34 +58,38 @@ class SketchSpec extends AnyFunSuite {
     // absorb the delta; then a RE-UPLOAD batch — ids 0..19 wearing the
     // vectors of 100..119: pairs must form under the new vectors only,
     // with the (i, i+100) identical-vector witness at cos ≈ 1
-    Dedup.appendEmbeddingLshIndexDelta(spark, root, delta, "vec_id", "embedding")
+    Dedup.appendEmbeddingLshIndexDelta(spark, root, s"$base/v2", delta,
+      "vec_id", "embedding")
     val delta2 = e.filter($"vec_id" >= 100 && $"vec_id" < 120)
       .select(($"vec_id" - 100L).as("vec_id"), $"embedding")
     val post = e.filter($"vec_id" >= 20).unionByName(delta2)
     val d2Ids = (0L until 20L).toSet
     val want2 = pset(Dedup.embeddingNearDupLsh(post, "vec_id", "embedding", 0.30))
       .filter(p => d2Ids(p._1) || d2Ids(p._2))
-    def probe2() = pset(Dedup.embeddingLshDeltaPairsIndexed(spark, root, delta2,
-      "vec_id", "embedding", threshold = 0.30))
-    assert(probe2().nonEmpty && probe2() == want2)
-    assert(probe2().exists(p => d2Ids(p._1) && p._2 == p._1 + 100L && p._3 >= 999999L))
+    def probe2(v: Int) = pset(Dedup.embeddingLshDeltaPairsIndexed(spark, s"$base/v$v",
+      delta2, "vec_id", "embedding", threshold = 0.30))
+    assert(probe2(2).nonEmpty && probe2(2) == want2)
+    assert(probe2(2).exists(p => d2Ids(p._1) && p._2 == p._1 + 100L && p._3 >= 999999L))
     Dedup.releaseEmbeddingLshCache(post, "vec_id", "embedding")
 
     // append delta2: probe unchanged (order independence), replay
     // idempotent, components == a fresh build over the post-replace corpus
-    Dedup.appendEmbeddingLshIndexDelta(spark, root, delta2, "vec_id", "embedding")
-    assert(probe2() == want2)
-    Dedup.appendEmbeddingLshIndexDelta(spark, root, delta2, "vec_id", "embedding")
-    assert(probe2() == want2)
+    Dedup.appendEmbeddingLshIndexDelta(spark, s"$base/v2", s"$base/v3", delta2,
+      "vec_id", "embedding")
+    assert(probe2(3) == want2)
+    Dedup.appendEmbeddingLshIndexDelta(spark, s"$base/v3", s"$base/v4", delta2,
+      "vec_id", "embedding")
+    assert(probe2(4) == want2)
+    val last = s"$base/v4"
     val root2 = s"$base/rebuild"
     Dedup.writeEmbeddingLshIndex(spark, post, "vec_id", "embedding", root2,
       numBits = 32, bandBits = 8, seed = 42L, numBuckets = 16)
     for (comp <- Seq("bands", "byid"))
-      assert(graft.sources.PrunedIndex.read(spark, graft.fs.Fs.child(root, comp))
+      assert(graft.sources.PrunedIndex.read(spark, graft.fs.Fs.child(last, comp))
           .as[(Long, Int, Long, Long)].collect().toSet ==
         graft.sources.PrunedIndex.read(spark, graft.fs.Fs.child(root2, comp))
           .as[(Long, Int, Long, Long)].collect().toSet, comp)
-    assert(graft.sources.PrunedIndex.read(spark, graft.fs.Fs.child(root, "byvec"))
+    assert(graft.sources.PrunedIndex.read(spark, graft.fs.Fs.child(last, "byvec"))
         .as[(Long, Seq[Float])].collect().toSet ==
       graft.sources.PrunedIndex.read(spark, graft.fs.Fs.child(root2, "byvec"))
         .as[(Long, Seq[Float])].collect().toSet)
@@ -158,46 +163,49 @@ class SketchSpec extends AnyFunSuite {
     val delta = docs.filter(col("doc_id") % 5 === 0 || col("doc_id") % 7 === 0)
       .withColumn("text", revText)
     val root = java.nio.file.Files.createTempDirectory("graft_widx").toString + "/idx"
-    Dedup.writeWinnowingIndex(spark, corpus, "doc_id", "text", root, numBuckets = 16)
+    NearDupIndexStore.build(spark, corpus, "doc_id", "text", root, numBuckets = 16,
+      winnowing = Some((12, 8)), jaccard = false)
+    def win(comp: String) =
+      graft.fs.Fs.child(NearDupIndexStore.currentPath(root).get, s"win/$comp")
     val corpusIndex = Dedup.winnowingIndex(corpus, "doc_id", "text", k = 12, w = 8)
     def pset(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long)].collect().toSet
     for (cap <- Seq(Int.MaxValue, 12)) {
       val want = pset(Dedup.winnowingDeltaPairs(delta, "doc_id", "text",
         corpusIndex, k = 12, w = 8, minShared = 2, maxDf = cap))
-      val got = pset(Dedup.winnowingDeltaPairsIndexed(spark, root, delta,
+      val got = pset(NearDupIndexStore.winnowingPairsForDelta(spark, root, delta,
         "doc_id", "text", minShared = 2, maxDf = cap))
       assert(got.nonEmpty && got == want, s"cap=$cap")
     }
     // absorb; a second batch probes the advanced index == the delta
     // path over the rebuilt post-replace corpus
-    Dedup.appendWinnowingIndexDelta(spark, root, delta, "doc_id", "text")
+    NearDupIndexStore.appendDelta(spark, root, delta, "doc_id", "text")
     val updated = docs.withColumn("text", revText)
     val updatedIndex = Dedup.winnowingIndex(updated, "doc_id", "text", k = 12, w = 8)
     // every component equals its from-scratch rebuild (content pin —
     // the derived census especially)
     def cset(p: String) = graft.sources.PrunedIndex.read(spark, p)
       .as[(Long, Long)].collect().toSet
-    assert(cset(graft.fs.Fs.child(root, "byid")) ==
+    assert(cset(win("byid")) ==
       updatedIndex.as[(Long, Long)].collect().toSet)
-    assert(cset(graft.fs.Fs.child(root, "dfcensus")) ==
+    assert(cset(win("dfcensus")) ==
       updatedIndex.groupBy(col("fp")).count()
         .as[(Long, Long)].collect().toSet)
     val delta2 = docs.filter(col("doc_id") % 11 === 3)
       .select((col("doc_id") + 700000).as("doc_id"), col("text"))
     for (cap <- Seq(Int.MaxValue, 12)) {
-      assert(pset(Dedup.winnowingDeltaPairsIndexed(spark, root, delta2,
+      assert(pset(NearDupIndexStore.winnowingPairsForDelta(spark, root, delta2,
           "doc_id", "text", minShared = 2, maxDf = cap)) ==
         pset(Dedup.winnowingDeltaPairs(delta2, "doc_id", "text", updatedIndex,
           k = 12, w = 8, minShared = 2, maxDf = cap)), s"cap=$cap (post-append)")
     }
-    // crash-replay idempotency: re-running the same append (the
-    // documented recovery) changes nothing a probe can observe
-    Dedup.appendWinnowingIndexDelta(spark, root, delta, "doc_id", "text")
-    assert(cset(graft.fs.Fs.child(root, "dfcensus")) ==
+    // replay idempotency: re-running the same append (the recovery
+    // action) changes nothing a probe can observe
+    NearDupIndexStore.appendDelta(spark, root, delta, "doc_id", "text")
+    assert(cset(win("dfcensus")) ==
       updatedIndex.groupBy(col("fp")).count()
         .as[(Long, Long)].collect().toSet)
-    assert(pset(Dedup.winnowingDeltaPairsIndexed(spark, root, delta2,
+    assert(pset(NearDupIndexStore.winnowingPairsForDelta(spark, root, delta2,
         "doc_id", "text", minShared = 2, maxDf = 12)) ==
       pset(Dedup.winnowingDeltaPairs(delta2, "doc_id", "text", updatedIndex,
         k = 12, w = 8, minShared = 2, maxDf = 12)))

@@ -70,7 +70,7 @@ class StreamingCurationSpec extends AnyFunSuite {
             val merged = Curation.mergeStateIndexed(spark, state, s"$root/idx",
               batch, "doc_id", "text", "n_chars", "source")
             state = roundTrip(merged, s"day${id + 1}")
-            graft.llm.Dedup.releaseIndexedProbeCache(s"$root/idx", batch,
+            graft.llm.NearDupIndexStore.releaseProbeCache(s"$root/idx", batch,
               "doc_id", "text")
           }
         }
@@ -94,13 +94,13 @@ class StreamingCurationSpec extends AnyFunSuite {
     val probe = d.filter($"doc_id" % 10 === 4)
     def pset(df: DataFrame) =
       df.select("a_id", "b_id").as[(Long, Long)].collect().toSet
-    assert(pset(graft.llm.Dedup.jaccardDeltaPairsIndexed(spark, s"$root/idx",
+    assert(pset(graft.llm.NearDupIndexStore.pairsForDelta(spark, s"$root/idx",
         probe, "doc_id", "text")) ==
-      pset(graft.llm.Dedup.jaccardDeltaPairsIndexed(spark, s"$root/idx_ref",
+      pset(graft.llm.NearDupIndexStore.pairsForDelta(spark, s"$root/idx_ref",
         probe, "doc_id", "text")))
     graft.llm.Dedup.releaseShingleSetCache(d, "doc_id", "text")
     Seq(s"$root/idx", s"$root/idx_ref").foreach(r =>
-      graft.llm.Dedup.releaseIndexedProbeCache(r, probe, "doc_id", "text"))
+      graft.llm.NearDupIndexStore.releaseProbeCache(r, probe, "doc_id", "text"))
     spark.catalog.clearCache()
   }
 }

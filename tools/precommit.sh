@@ -4,7 +4,8 @@
 # near-miss, r10 '\s' escape that voided the whole round's driver
 # signal). Run this before EVERY `git commit`:
 #
-#   tools/precommit.sh                         # compile + test:compile
+#   tools/precommit.sh                         # compile + test:compile,
+#                                              #   then print src/main lines
 #   SPARK_GRAFT_ONLY=t110_x tools/precommit.sh # + smoke named query(s)
 #                                              #   at sf0.001
 #
@@ -26,4 +27,7 @@ if [[ -n "${SPARK_GRAFT_ONLY:-}" ]]; then
     echo "precommit: smoke query FAILED" >&2; exit 1
   fi
 fi
+# the one src/main size figure to quote (CHANGES.md tracks it)
+shopt -s globstar
+echo "precommit: src/main lines: $(cat src/main/**/*.scala | wc -l)"
 echo "precommit: OK"
