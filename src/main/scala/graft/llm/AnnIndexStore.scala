@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.fs.Fs
-import graft.store.VersionedRoot
+import graft.store.{RecordedSchema, VersionedRoot}
 
 /** Versioned ANN index store — the durable, atomically-swappable home
   * of the embedding family's FULL index state, closing the drift loop
@@ -224,7 +224,7 @@ object AnnIndexStore {
   /** The current centroid matrix — k rows of dim doubles, driver-side
     * control state (same class as a BPE merge table). */
   def centroids(spark: SparkSession, root: String): Array[(Int, Array[Double])] =
-    Similarity.centroidsOf(spark.read.parquet(Fs.child(requireCurrent(root), "centroids")))
+    Similarity.centroidsOf(RecordedSchema.read(spark, Fs.child(requireCurrent(root), "centroids")))
 
   /** The current assignment frame (id, vec, cell) — the corpus as the
     * index stores it; full (unpruned) view. */
@@ -248,14 +248,13 @@ object AnnIndexStore {
     // the r20 job profile measured 7 sequential write jobs per build)
     val writes = Seq.newBuilder[() => Unit]
     writes += (() =>
-      cents.toSeq.map { case (c, a) => (c, a.toSeq) }.toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(Fs.child(dir, "centroids")))
+      RecordedSchema.writeParquet(cents.toSeq.map { case (c, a) => (c, a.toSeq) }
+        .toDF("cell", "centroid").coalesce(1), Fs.child(dir, "centroids")))
     subCents.foreach(sc => writes += (() =>
       HierarchicalRouting.writeSubCentroids(sc,
         Fs.child(dir, "subcents"), p.numBuckets)))
     pq.foreach { case (books, codeRows) =>
-      writes += (() => books.coalesce(1).write.mode("overwrite")
-        .parquet(Fs.child(dir, "pqbooks")))
+      writes += (() => RecordedSchema.writeParquet(books.coalesce(1), pqBooksPath(dir)))
       writes += (() => graft.sources.PrunedIndex.write(
         codeRows.select(col(idCol), col("codes"), col("cell")),
         Fs.child(dir, "codes"), Seq("cell"), p.numBuckets, p.maxRecordsPerFile))
@@ -534,8 +533,8 @@ object AnnIndexStore {
     // multi-component commit is unchanged
     val tasks = Seq.newBuilder[() => Unit]
     tasks += (() =>
-      cents.toSeq.map { case (c, a) => (c, a.toSeq) }.toDF("cell", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(Fs.child(dir, "centroids")))
+      RecordedSchema.writeParquet(cents.toSeq.map { case (c, a) => (c, a.toSeq) }
+        .toDF("cell", "centroid").coalesce(1), Fs.child(dir, "centroids")))
     if (Fs.exists(subCentsPath(cur))) tasks += { () =>
       // sub-centroids are FROZEN control state like the coarse matrix,
       // but live in a pruned layout — carry them into the new version
@@ -550,7 +549,7 @@ object AnnIndexStore {
       // codes advance like the assignment: the delta encodes under the
       // FROZEN codebooks, re-uploaded ids' stale rows displace, only
       // the touched cells' buckets land new files
-      val cbs = Similarity.codebooksOf3(spark.read.parquet(pqBooksPath(cur)))
+      val cbs = Similarity.codebooksOf3(RecordedSchema.read(spark, pqBooksPath(cur)))
       val keptCodes = graft.sources.PrunedIndex.readPruned(spark,
           codesPath(cur), touchedCells)
         .join(broadcast(deltaIds), Seq(idCol), "left_anti")
@@ -560,8 +559,8 @@ object AnnIndexStore {
         keptCodes.select(col(idCol), col("codes"), col("cell"))
           .unionByName(deltaCodeRows.select(col(idCol), col("codes"), col("cell"))),
         touchedCells, basePath = codesPath(cur), p.maxRecordsPerFile)
-      spark.read.parquet(pqBooksPath(cur)).coalesce(1)
-        .write.mode("overwrite").parquet(pqBooksPath(dir))
+      RecordedSchema.writeParquet(RecordedSchema.read(spark, pqBooksPath(cur)).coalesce(1),
+        pqBooksPath(dir))
     }
     if (Fs.exists(vecsByIdPath(cur))) tasks += { () =>
       // the id-keyed vector layout advances by key: the delta's id
@@ -644,7 +643,7 @@ object AnnIndexStore {
       else None
     val pq =
       if (Fs.exists(codesPath(cur)))
-        Some((spark.read.parquet(pqBooksPath(cur)),
+        Some((RecordedSchema.read(spark, pqBooksPath(cur)),
           graft.sources.PrunedIndex.read(spark, codesPath(cur))))
       else None
     val vecsById =
@@ -838,7 +837,7 @@ object AnnIndexStore {
     require(Fs.exists(codesPath(cur)),
       "store has no PQ codes component — build with Params(pqM > 0)")
     require(refine >= 1, s"refine must be >= 1, got $refine")
-    val cbs = Similarity.codebooksOf3(spark.read.parquet(pqBooksPath(cur)))
+    val cbs = Similarity.codebooksOf3(RecordedSchema.read(spark, pqBooksPath(cur)))
     val probes = (if (Fs.exists(subCentsPath(cur)))
       HierarchicalRouting.routeQueries(spark, subCentsPath(cur),
         centroids(spark, root), queries, idCol, vecCol, nprobeCoarse, nprobe)

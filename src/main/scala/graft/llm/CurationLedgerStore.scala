@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.fs.Fs
 import graft.sources.PrunedIndex
-import graft.store.VersionedRoot
+import graft.store.{RecordedSchema, VersionedRoot}
 
 /** Versioned curation-LEDGER store — the 100 TB deployment form of the
   * full curation pipeline ([[Curation.fullPipelineLedger]]'s five
@@ -102,6 +102,12 @@ import graft.store.VersionedRoot
   *   _META / _PARAMS / _SUCCESS;  root/_CURRENT
   *   root/grams/    — the frozen benchmark gram index (written once)
   * }}}
+  *
+  * Every component records its schema when it is written
+  * (`_PRUNE_SCHEMA` in the pruned layouts, `_SCHEMA` in `grams/` and
+  * `neardup/dfhead/` — [[graft.store.RecordedSchema]]), so a [[ledger]]
+  * read is one Spark job, the scan; a store written before the
+  * sidecars reads through footer inference.
   *
   * Determinism: every stage is the batch pipeline's own arithmetic
   * (integer counts, ppm floors with the contract's +1e-4 guard,
@@ -248,8 +254,8 @@ object CurationLedgerStore {
     val (idCol, textCol, scoreCol, sourceCol) =
       (p.idCol, p.textCol, p.scoreCol, p.sourceCol)
     val grams = Decontaminate.benchGramIndex(bench, benchTextCol, p.gramN)
-    grams.write.mode("overwrite").parquet(gramsPath(root))
-    val gramsStored = spark.read.parquet(gramsPath(root))
+    RecordedSchema.writeParquet(grams, gramsPath(root))
+    val gramsStored = RecordedSchema.read(spark, gramsPath(root))
     val v = nextVersion(root)
     val d = versionDir(root, v)
     // three independent corpus passes (near-dup index build, unigram
@@ -352,7 +358,7 @@ object CurationLedgerStore {
     //      checkpoint job before; within the near-dup task the probe
     //      materializes before the index advances into the new version ----
     val nd = neardupDir(cur)
-    val gramsStored = spark.read.parquet(gramsPath(root))
+    val gramsStored = RecordedSchema.read(spark, gramsPath(root))
     val parts = graft.util.Par.run(Seq[() => DataFrame](
       // pre-update point lookup (the PREV version's truth; the thin
       // component's delta rows come from the fused c3 read below —

@@ -531,14 +531,14 @@ object Dedup {
 
   private def readFrozenHead(spark: org.apache.spark.sql.SparkSession,
                              root: String): Map[String, Long] =
-    spark.read.parquet(graft.fs.Fs.child(root, "dfhead"))
+    graft.store.RecordedSchema.read(spark, graft.fs.Fs.child(root, "dfhead"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   private def writeFrozenHead(spark: org.apache.spark.sql.SparkSession,
                               root: String, head: Map[String, Long]): Unit = {
     import spark.implicits._
-    head.toSeq.toDF("shingle", "df").coalesce(1)
-      .write.mode("overwrite").parquet(graft.fs.Fs.child(root, "dfhead"))
+    graft.store.RecordedSchema.writeParquet(head.toSeq.toDF("shingle", "df").coalesce(1),
+      graft.fs.Fs.child(root, "dfhead"))
   }
 
   private[llm] def prefixRowsOf(sets: DataFrame, threshold: Double,
@@ -802,7 +802,7 @@ object Dedup {
 
   private def readCtHeadRows(spark: org.apache.spark.sql.SparkSession,
                              root: String): Seq[(String, Long)] =
-    spark.read.parquet(graft.fs.Fs.child(root, "cthead"))
+    graft.store.RecordedSchema.read(spark, graft.fs.Fs.child(root, "cthead"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
       .sortBy(ctHeadOrd)
 
@@ -810,8 +810,8 @@ object Dedup {
                           root: String, rows: Seq[(String, Long)],
                           headK: Int, complete: Boolean): Unit = {
     import spark.implicits._
-    rows.toDF("shingle", "df").coalesce(1)
-      .write.mode("overwrite").parquet(graft.fs.Fs.child(root, "cthead"))
+    graft.store.RecordedSchema.writeParquet(rows.toDF("shingle", "df").coalesce(1),
+      graft.fs.Fs.child(root, "cthead"))
     graft.fs.Fs.writeStringAtomic(ctHeadMetaPath(root),
       s"$headK\n${if (complete) 1 else 0}")
   }

@@ -2,13 +2,14 @@ package graft.sinks
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.types.StructType
 
 import graft.fs.Fs
 import graft.model.{Identifiers, JdbcConfig}
 import graft.operators.Relational
-import graft.store.VersionedRoot
+import graft.store.{RecordedSchema, VersionedRoot}
 
 /** Sinks: the curated-store writers (SURVEY.md §2.8).
   *
@@ -33,8 +34,12 @@ object ParquetMergeSink {
   def currentPath(warehouse: String, table: String): Option[String] =
     VersionedRoot.currentPath(Fs.child(warehouse, table))
 
+  /** The current version. Each version records its schema when it is
+    * written ([[RecordedSchema]]), so a read runs one Spark job, the
+    * scan; a version written without the sidecar infers it from a
+    * footer first. */
   def readCurrent(spark: SparkSession, warehouse: String, table: String): Option[DataFrame] =
-    currentPath(warehouse, table).map(spark.read.parquet(_))
+    currentPath(warehouse, table).map(RecordedSchema.read(spark, _))
 
   /** All COMMITTED retained versions of a table, ascending (time
     * travel). A version counts only once its `_SUCCESS` marker exists:
@@ -48,10 +53,11 @@ object ParquetMergeSink {
 
   /** Read a table as of a given version (the latest retained version
     * ≤ `asOf`) — every merge keeps its full snapshot dir, so any past
-    * state is one read away until `vacuum`. */
+    * state is one read away until `vacuum`. One Spark job, like
+    * [[readCurrent]]. */
   def readVersion(spark: SparkSession, warehouse: String, table: String, asOf: Long): Option[DataFrame] =
     versions(warehouse, table).filter(_ <= asOf).lastOption
-      .map(v => spark.read.parquet(VersionedRoot.versionDir(Fs.child(warehouse, table), v)))
+      .map(v => RecordedSchema.read(spark, VersionedRoot.versionDir(Fs.child(warehouse, table), v)))
 
   /** Drop all but the newest `keep` versions (never the current one) and
     * sweep stale crashed-writer debris — [[VersionedRoot.vacuum]]; a
@@ -133,7 +139,7 @@ object ParquetMergeSink {
       case Some(existing) => Relational.mergeUpsert(existing, incoming, keys, policy)
       case None           => incoming
     }
-    writeVersion(spark, warehouse, table, merged, version)
+    writeVersion(warehouse, table, merged, version)
   }
 
   /** MERGE with group-replace semantics
@@ -160,7 +166,7 @@ object ParquetMergeSink {
             Relational.mergeReplaceGroups(existing, incoming, groupKeys, replaceKeySet)
           case None => incoming
         }
-        writeVersion(spark, warehouse, table, merged, version)
+        writeVersion(warehouse, table, merged, version)
       }
     }
 
@@ -180,15 +186,22 @@ object ParquetMergeSink {
   private def alreadyApplied(spark: SparkSession, warehouse: String,
                              table: String, version: Long): Option[Long] =
     VersionedRoot.currentVersion(Fs.child(warehouse, table)).filter(_ >= version)
-      .map(v => spark.read.parquet(VersionedRoot.versionDir(Fs.child(warehouse, table), v)).count())
+      .map(v => RecordedSchema.read(spark, VersionedRoot.versionDir(Fs.child(warehouse, table), v)).count())
 
-  private def writeVersion(spark: SparkSession, warehouse: String, table: String,
+  /** Land `merged` as version `version` and commit it. The schema
+    * sidecar lands before the commit, so a torn write stays
+    * uncommitted; the returned row count is observed on the write
+    * itself instead of re-read from the new version. */
+  private def writeVersion(warehouse: String, table: String,
                            merged: DataFrame, version: Long): Long = {
     val root = Fs.child(warehouse, table)
     val target = VersionedRoot.versionDir(root, version)
-    merged.write.mode(SaveMode.Overwrite).parquet(target)
+    val rows = Observation("rows")
+    merged.observe(rows, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite).parquet(target)
+    RecordedSchema.write(target, merged.schema)
     VersionedRoot.commit(root, version)
-    spark.read.parquet(target).count()
+    rows.get("n").asInstanceOf[Long]
   }
 }
 

@@ -2,9 +2,10 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.fs.Fs
+import graft.store.RecordedSchema
 
 /** Hash-bucketed persisted-index layout: the 100×-scale answer to
   * "every online probe scans the whole index".
@@ -47,14 +48,22 @@ import graft.fs.Fs
   * `df.write.parquet(path)` overwrite): such a rewrite updates neither
   * sidecar, and readers keep serving the old file list — use [[write]]
   * for every rewrite, or delete the sidecars to force the listing
-  * fallback. */
+  * fallback.
+  *
+  * == Recorded schema ==
+  * Every layout records its data columns' schema in `_PRUNE_SCHEMA`
+  * ([[graft.store.RecordedSchema]]) when it is published, so a read
+  * runs no footer-inference job, and an empty layout or an empty
+  * bucket selection still knows its columns. A layout without the
+  * sidecar was written before it existed and falls back to Spark's
+  * footer inference. */
 object PrunedIndex {
 
   val BucketCol = "part_bucket"
 
   private def metaPath(path: String): String = Fs.child(path, "_PRUNE_META")
   private def manifestPath(path: String): String = Fs.child(path, "_PRUNE_MANIFEST")
-  private def schemaPath(path: String): String = Fs.child(path, "_PRUNE_SCHEMA")
+  private val SchemaFile = "_PRUNE_SCHEMA"
 
   /** Parsed `_PRUNE_MANIFEST` (bucket → relative file paths), cached
     * per (session, path) and validated against the `_PRUNE_META`
@@ -91,7 +100,7 @@ object PrunedIndex {
       (df.sparkSession eq spark) && !df.sparkSession.sparkContext.isStopped
     }
     cached.getOrElse {
-      val df = spark.read.parquet(path)
+      val df = RecordedSchema.reader(spark, path, SchemaFile).parquet(path)
       baseCache.put(key, df)
       df
     }
@@ -204,16 +213,17 @@ object PrunedIndex {
       }
   }
 
-  /** Land a layout's sidecars. The manifest lands before the meta: meta
-    * (the version/validation stamp) only ever points at a complete
-    * manifest; its third line is the monotonic version token readers
-    * compare BY VALUE (mtime granularity is filesystem-dependent — see
-    * manifestFor). A layout that holds no data file (every write so far
-    * was empty) also records its schema in `_PRUNE_SCHEMA`, since
-    * there is no parquet footer to infer it from. */
+  /** Land a layout's sidecars: the recorded schema (`_PRUNE_SCHEMA`,
+    * the data columns without the bucket column — every read passes it
+    * to Spark instead of inferring it from a footer, and it is the only
+    * source of the columns when no data file exists), then the
+    * manifest, then the meta: meta (the version/validation stamp) only
+    * ever points at a complete manifest; its third line is the
+    * monotonic version token readers compare BY VALUE (mtime
+    * granularity is filesystem-dependent — see manifestFor). */
   private def publish(path: String, lines: Seq[String], keyCols: Seq[String],
                       numBuckets: Int, token: String, schema: StructType): Unit = {
-    if (lines.isEmpty) Fs.writeStringAtomic(schemaPath(path), schema.json)
+    RecordedSchema.write(path, schema, SchemaFile)
     Fs.writeStringAtomic(manifestPath(path), lines.mkString("\n"))
     Fs.writeStringAtomic(metaPath(path), s"${keyCols.mkString(",")}\n$numBuckets\n$token")
     // drop every session's cached state for this path (same-JVM
@@ -221,15 +231,6 @@ object PrunedIndex {
     manifestCache.filterInPlace((k, _) => k._2 != path)
     baseCache.filterInPlace((k, _) => k._2 != path)
   }
-
-  /** The view of a layout whose manifest lists no file: an empty frame
-    * with the schema recorded at write time. Layouts from before the
-    * schema sidecar fall back to the directory listing. */
-  private def emptyView(spark: SparkSession, path: String): DataFrame =
-    if (Fs.exists(schemaPath(path)))
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        DataType.fromJson(Fs.readString(schemaPath(path))).asInstanceOf[StructType])
-    else listedBase(spark, path)
 
   /** (key columns, bucket count) recorded at write time. A pruned
     * probe cannot run without them (the hash domain would be a guess),
@@ -272,11 +273,35 @@ object PrunedIndex {
     * partition-column inference — the manifest already knows each
     * file's bucket, and the bucket column carries no data). */
   private def readEntries(spark: SparkSession, path: String,
-                          entries: Seq[String]): DataFrame =
+                          entries: Seq[String]): DataFrame = {
+    val reader = RecordedSchema.reader(spark, path, SchemaFile)
     if (!entries.exists(isAbsolute))
-      spark.read.option("basePath", path)
-        .parquet(entries.map(Fs.child(path, _)): _*)
-    else spark.read.parquet(entries.map(resolveEntry(path, _)): _*)
+      reader.option("basePath", path).parquet(entries.map(Fs.child(path, _)): _*)
+    else reader.parquet(entries.map(resolveEntry(path, _)): _*)
+  }
+
+  /** The layout's data columns (no bucket column). Recorded at
+    * [[publish]]; a layout written before the sidecar infers them from
+    * one data file that still EXISTS — an arbitrary pick could name a
+    * file retention (or a ScaleSpec mutilation proof) legitimately
+    * removed from an untouched bucket — or, holding none, from the
+    * directory listing. */
+  private def storedSchema(spark: SparkSession, path: String,
+                           m: Map[Int, Seq[String]]): StructType =
+    RecordedSchema.of(path, SchemaFile).getOrElse {
+      m.valuesIterator.flatten.find(e => Fs.exists(resolveEntry(path, e)))
+        .fold(listedBase(spark, path))(e => readEntries(spark, path, Seq(e)))
+        .drop(BucketCol).schema
+    }
+
+  /** `entries` of the layout whose manifest is `m`; no entries (an
+    * empty layout, or no probed bucket holds rows) is an empty frame
+    * with the stored schema. */
+  private def view(spark: SparkSession, path: String, m: Map[Int, Seq[String]],
+                   entries: Seq[String]): DataFrame =
+    if (entries.nonEmpty) readEntries(spark, path, entries)
+    else spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      storedSchema(spark, path, m))
 
   /** Full (unpruned) view — identical to the flat layout for readers
     * that genuinely need every row (rebuild comparisons, compaction).
@@ -284,9 +309,7 @@ object PrunedIndex {
     * contract above. */
   def read(spark: SparkSession, path: String): DataFrame =
     (manifestFor(spark, path) match {
-      case Some(m) if m.nonEmpty =>
-        readEntries(spark, path, m.valuesIterator.flatten.toSeq)
-      case Some(_) => emptyView(spark, path)
+      case Some(m) => view(spark, path, m, m.valuesIterator.flatten.toSeq)
       case None => listedBase(spark, path)
     }).drop(BucketCol)
 
@@ -310,23 +333,9 @@ object PrunedIndex {
       .select(pmod(hash(keyCols.map(col): _*), lit(numBuckets)).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
     val base = manifestFor(spark, path) match {
-      case Some(m) if m.nonEmpty =>
-        val sel = m.iterator.collect { case (b, fs) if buckets(b) => fs }
-          .flatten.toSeq
-        if (sel.nonEmpty) readEntries(spark, path, sel)
-        else {
-          // no probed bucket holds rows: an empty frame with the stored
-          // schema, read from one data file that still EXISTS — an
-          // arbitrary pick could name a file retention (or a ScaleSpec
-          // mutilation proof) legitimately removed from an untouched
-          // bucket, turning a rows-free probe into a read error
-          val one = m.valuesIterator.flatten
-            .find(e => graft.fs.Fs.exists(resolveEntry(path, e)))
-            .getOrElse(throw new IllegalStateException(
-              s"no readable data file under $path to derive the stored schema"))
-          readEntries(spark, path, Seq(one)).limit(0)
-        }
-      case Some(_) => emptyView(spark, path)
+      case Some(m) =>
+        view(spark, path, m,
+          m.iterator.collect { case (b, fs) if buckets(b) => fs }.flatten.toSeq)
       case None => listedBase(spark, path)
     }
     // using-column joins reorder output (key columns first); re-select
@@ -394,19 +403,10 @@ object PrunedIndex {
     val touchedEntries = old.iterator
       .collect { case (b, fs) if touched(b) => fs }
       .flatten.toSeq
-    // the stored column order is the layout's schema; resolve it from
-    // ONE manifest entry (a touched bucket's first, when any — those
-    // files are read below anyway) — constructing the full view here
-    // would enumerate and validate every index file per delta write:
-    // O(index files) driver work per batch, and a hard failure when
-    // untouched buckets' files are gone (retention, or the ScaleSpec
-    // mutilation proof)
-    val dataCols =
-      (touchedEntries.headOption.orElse(old.valuesIterator.flatten.take(1)
-          .toSeq.headOption) match {
-        case Some(one) => readEntries(spark, basePath, Seq(one))
-        case None      => read(spark, basePath)
-      }).columns.filterNot(_ == BucketCol).toSeq
+    // the stored column order is the layout's schema (never the full
+    // view: that would list and validate every index file per delta
+    // write, and fail once retention removed an untouched bucket's files)
+    val dataCols = storedSchema(spark, basePath, old).fieldNames.toSeq
     val strangers =
       if (touchedEntries.isEmpty) None
       else Some(readEntries(spark, basePath, touchedEntries)
@@ -453,13 +453,16 @@ object PrunedIndex {
       s"appendRows needs a _PRUNE_MANIFEST at $basePath — build the index with PrunedIndex.write"))
     require(!rows.columns.contains(BucketCol),
       s"input already carries a $BucketCol column")
+    // in the stored column order, like writeDelta's rows: the layout's
+    // old and new files then share the one recorded schema
+    val stored = rows.select(storedSchema(spark, basePath, old).fieldNames.map(col): _*)
     val token = newVersionToken()
     val deltaDirName = s"delta-$token"
-    val newLines = landBuckets(rows, Fs.child(path, deltaDirName), keyCols,
+    val newLines = landBuckets(stored, Fs.child(path, deltaDirName), keyCols,
       numBuckets, math.min(numBuckets, 32), maxRecordsPerFile, s"$deltaDirName/")
     val kept = old.iterator.flatMap { case (b, fs) =>
       fs.map(e => s"$b\t${resolveEntry(basePath, e)}")
     }.toSeq
-    publish(path, kept ++ newLines, keyCols, numBuckets, token, rows.schema)
+    publish(path, kept ++ newLines, keyCols, numBuckets, token, stored.schema)
   }
 }

@@ -11,8 +11,14 @@ import graft.sources.PrunedIndex
   * to it.
   *
   * {{{
-  *   root/v<N>/...        one version's components (store-defined)
+  *   root/v<N>/...        one version's components (store-defined); each
+  *                        records its schema — `_SCHEMA` in a plain
+  *                        parquet dir, `_PRUNE_SCHEMA` in a PrunedIndex
+  *                        layout ([[RecordedSchema]])
+  *   root/v<N>/_SCHEMA    the version's schema, when the version is itself
+  *                        one parquet dir (ParquetMergeSink)
   *   root/v<N>/_SUCCESS   commit marker — lands after every component
+  *                        and every schema sidecar
   *   root/v<N>/_PARAMS    optional key=value sidecar (see renderParams)
   *   root/_CURRENT        "v<N>", swapped atomically (Fs.writeStringAtomic)
   * }}}

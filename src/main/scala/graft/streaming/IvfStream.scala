@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.llm.Similarity
 import graft.sinks.ParquetMergeSink
+import graft.store.RecordedSchema
 
 /** Streaming IVF ANN index maintenance: the continuous-intake twin of
   * [[graft.llm.Similarity.ivfAssignedIndex]] / t112, completing the
@@ -36,7 +37,7 @@ object IvfStream {
             centroidsPath: String, warehouse: String, table: String,
             checkpoint: String): StreamingQuery = {
     val spark0 = embsStream.sparkSession
-    val centroids = Similarity.centroidsOf(spark0.read.parquet(centroidsPath))
+    val centroids = Similarity.centroidsOf(RecordedSchema.read(spark0, centroidsPath))
     embsStream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

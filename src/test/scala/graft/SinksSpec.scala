@@ -14,14 +14,29 @@ class SinksSpec extends AnyFunSuite {
 
   test("ParquetMergeSink: create, merge, atomic current pointer") {
     val wh = Files.createTempDirectory("graft_sink").toString
+    // the returned count is observed on the write; it must be the count
+    // a reader of the committed version sees
+    def readCount(): Long = ParquetMergeSink.readCurrent(spark, wh, "t").get.count()
     val v1 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
     assert(ParquetMergeSink.merge(spark, wh, "t", v1, Seq("id"), 1L) == 2L)
+    assert(readCount() == 2L)
     val v2 = Seq((2L, "B"), (3L, "C")).toDF("id", "s")
     assert(ParquetMergeSink.merge(spark, wh, "t", v2, Seq("id"), 2L) == 3L)
+    assert(readCount() == 3L)
     val cur = ParquetMergeSink.readCurrent(spark, wh, "t").get
       .as[(Long, String)].collect().sortBy(_._1)
     assert(cur.toSeq == Seq((1L, "a"), (2L, "B"), (3L, "C")))
     assert(ParquetMergeSink.currentPath(wh, "t").get.endsWith("v2"))
+    // an empty merge commits a version too, and counts it
+    assert(ParquetMergeSink.merge(spark, wh, "t", v2.limit(0), Seq("id"), 3L) == 3L)
+    assert(readCount() == 3L)
+    // a group-replace merge returns the observed count the same way
+    assert(ParquetMergeSink.mergeGroups(spark, wh, "t",
+      Seq((3L, "D"), (4L, "E")).toDF("id", "s"), Seq("id"), 4L) == 4L)
+    assert(readCount() == 4L)
+    // the first merge of an empty frame creates an empty table
+    assert(ParquetMergeSink.merge(spark, wh, "e", v1.limit(0), Seq("id"), 1L) == 0L)
+    assert(ParquetMergeSink.readCurrent(spark, wh, "e").get.count() == 0L)
   }
 
   test("concurrent merges on one table lose no versions (single-writer discipline)") {
@@ -41,9 +56,15 @@ class SinksSpec extends AnyFunSuite {
         ParquetMergeSink.mergeNext(spark, wh, "t", df, Seq("id"))
       }
     }
-    Await.result(Future.sequence(writers), 300.seconds)
+    val results = Await.result(Future.sequence(writers), 300.seconds)
     val cur = ParquetMergeSink.readCurrent(spark, wh, "t").get
     assert(cur.count() == 20L) // all four writers' keys survived
+    // each writer's returned count is its own version's row count, and
+    // the last one is the current count
+    results.foreach { case (v, n) =>
+      assert(ParquetMergeSink.readVersion(spark, wh, "t", v).get.count() == n)
+    }
+    assert(results.map(_._2).sorted == Seq(5L, 10L, 15L, 20L))
     assert(cur.select("s").distinct().count() == 4L)
   }
 
