@@ -74,21 +74,26 @@ object Fs {
     * observe the gap — seen as a transient FileNotFound under a
     * `_CURRENT`-pointer read racing a swap, VacuumReaderPropertySpec);
     * it remains the path for HDFS, where the overwrite-rename IS one
-    * atomic server-side op. */
+    * atomic server-side op. The local tmp file is written through NIO
+    * too: Hadoop's checksummed local filesystem would leave a
+    * `.<name>.tmp.crc` behind that the NIO move does not carry. */
   def writeStringAtomic(p: String, body: String): Unit = {
     val target = new Path(p)
     val tmp = new Path(target.getParent, target.getName + ".tmp")
-    val f = fs(p)
-    f.mkdirs(target.getParent)
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    val bytes = body.getBytes(StandardCharsets.UTF_8)
     (localPath(tmp.toString), localPath(p)) match {
       case (Some(src), Some(dst)) =>
+        java.nio.file.Files.createDirectories(dst.toAbsolutePath.getParent)
+        java.nio.file.Files.write(src, bytes)
         java.nio.file.Files.move(src, dst,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
       case _ =>
+        val f = fs(p)
+        f.mkdirs(target.getParent)
+        val out = f.create(tmp, true)
+        try out.write(bytes)
+        finally out.close()
         FileContext.getFileContext(target.toUri, conf)
           .rename(tmp, target, Options.Rename.OVERWRITE)
     }

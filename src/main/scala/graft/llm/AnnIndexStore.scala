@@ -965,7 +965,7 @@ object AnnIndexStore {
       if (!Fs.exists(subCentsPath(cur))) {
         val dA = Dedup.assignWithNorm(delta, idCol, vecCol, cents)
         // only the delta's cells' buckets are read; readPruned's exact
-        // semi-join drops same-bucket strangers from other cells
+        // key filter drops same-bucket strangers from other cells
         val members = graft.sources.PrunedIndex.readPruned(
           spark, Fs.child(cur, "assigned"), dA.select(col("cell")).distinct())
         // multiAssign stores hold ≥1 routing copies per id; the

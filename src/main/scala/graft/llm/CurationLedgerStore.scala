@@ -1,5 +1,7 @@
 package graft.llm
 
+import scala.jdk.CollectionConverters._
+
 import graft.util.Ckpt.RichCkpt
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -460,10 +462,11 @@ object CurationLedgerStore {
     //      reach, and every hop's pruned edge read are churn-bounded by
     //      the component invariant — the same contract that lets the
     //      rest of the absorb BROADCAST them. Holding frontier/visited
-    //      driver-side makes each hop ONE pruned-read job (collect)
-    //      instead of the r20 loop's read-checkpoint + fresh-checkpoint
-    //      + two isEmpty actions; the delta adjacency (checkpointed,
-    //      churn-bounded) collects once. A reach or edge set past
+    //      driver-side, each hop's probe a local relation (its key
+    //      collect runs no job), makes each hop ONE job (the pruned
+    //      scan's collect) instead of the r20 loop's read-checkpoint +
+    //      fresh-checkpoint + two isEmpty actions; the delta adjacency
+    //      (checkpointed, churn-bounded) collects once. A reach or edge set past
     //      `spark.graft.reach.maxDriverIds` (default 2M — broadcast
     //      order) falls back to the distributed loop, as does a
     //      non-long id column (the driver set must reproduce Spark's
@@ -475,8 +478,7 @@ object CurationLedgerStore {
       catch { case _: Throwable => 2000000L }
     def localLongDf(rows: Seq[org.apache.spark.sql.Row],
                     fields: (String, org.apache.spark.sql.types.DataType)*): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, math.max(1, rows.size / 500000)),
+      spark.createDataFrame(rows.asJava,
         org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
           org.apache.spark.sql.types.StructField(n, t, nullable = true) }))
     val longT = org.apache.spark.sql.types.LongType

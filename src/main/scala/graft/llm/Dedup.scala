@@ -929,7 +929,7 @@ object Dedup {
     // are a PREFIX of its shingle set, so every prefix shingle of a
     // delta doc is one of the delta's shingles), hence ONE bucket-
     // pruned postings read keyed by probe2 serves BOTH roles —
-    // readPruned's exact key semi-join makes `storedPost ⋉ probe1`
+    // readPruned's exact key filter makes `storedPost ⋉ probe1`
     // row-identical to a probe1-keyed read (guide §2.3: one pass over
     // the pruned buckets instead of two). The two probe-key cuts are
     // independent given `hot` — overlapped (guide §2.6).

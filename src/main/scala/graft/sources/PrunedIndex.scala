@@ -1,6 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -17,10 +19,11 @@ import graft.store.RecordedSchema
   * reads the full index no matter how few keys it wants; at 100× the
   * corpus that read dominates the probe. Stored hash-bucketed on the
   * probe key (`part_bucket = pmod(hash(key…), numBuckets)` as a
-  * PARTITION column), the probe computes its key set's buckets (a
-  * bounded, probe-sized job) and reads only those buckets' files —
-  * the fraction read falls as min(1, |probe buckets| / numBuckets),
-  * independent of corpus size.
+  * PARTITION column), the probe collects its key rows to the driver
+  * once (one probe-sized job, none for a local relation), hashes them
+  * into buckets there, reads only those buckets' files and filters them
+  * by the collected keys — the fraction read falls as
+  * min(1, |probe buckets| / numBuckets), independent of corpus size.
   *
   * This is the directory-layout dual of [[graft.operators.Scale.bucketizeForJoin]]
   * (which co-locates two corpus-sized sides via the metastore); here
@@ -313,14 +316,48 @@ object PrunedIndex {
       case None => listedBase(spark, path)
     }).drop(BucketCol)
 
+  /** A probe's distinct key rows, collected to the driver ONCE — one
+    * job for a checkpointed probe, none for a local relation — cast to
+    * the layout's stored key types, so the bucket hash (evaluated over a
+    * local relation of the rows, which Spark folds on the driver) is the
+    * writer's hash even for an `int` probe of a `long` key. A row that
+    * can match no stored row under equi-join semantics is dropped: a
+    * null key component, or a value the stored type cannot hold (a
+    * `long` probe past an `int` key's range). */
+  private final case class ProbeKeys(schema: StructType, rows: Seq[Row],
+                                     buckets: Set[Int]) {
+    /** Key-set membership: an IN filter on the one key column, else on
+      * the struct of the key columns. Optimized to an InSet, it carries
+      * the keys inside the plan — no broadcast job, no join. */
+    def member: Column =
+      if (schema.size == 1) col(schema.head.name).isin(rows.map(_.get(0)): _*)
+      else struct(schema.fieldNames.map(col): _*).isin(rows.map { r =>
+        struct(schema.fields.indices.map { i =>
+          lit(r.get(i)).cast(schema(i).dataType).as(schema(i).name)
+        }: _*)
+      }: _*)
+  }
+
+  private def probeKeys(spark: SparkSession, probe: DataFrame, keyCols: Seq[String],
+                        stored: StructType, numBuckets: Int): ProbeKeys = {
+    val cast = keyCols.map(k => k -> col(k).try_cast(stored(k).dataType))
+    val keys = probe.where(cast.map { case (k, c) => col(k) === c }.reduce(_ && _))
+      .select(cast.map { case (k, c) => c.as(k) }: _*)
+    val rows = keys.collect().distinct.toSeq
+    val buckets = spark.createDataFrame(rows.asJava, keys.schema)
+      .select(pmod(hash(keyCols.map(col): _*), lit(numBuckets)))
+      .collect().iterator.map(_.getInt(0)).toSet
+    ProbeKeys(keys.schema, rows, buckets)
+  }
+
   /** Pruned view for a probe: only the files of the buckets that
-    * `probe`'s key rows can hash into are read (straight from the
-    * manifest — no directory listing, even on the first probe of an
-    * index version), then an exact broadcast semi-join on the key
-    * columns drops same-bucket strangers. `probe` must carry the
-    * index's key columns (extra columns are ignored) and is assumed
-    * probe-sized — its bucket set is collected to the driver to become
-    * the file selection (bounded by numBuckets, no corpus data moves).
+    * `probe`'s key rows hash into are read (straight from the manifest —
+    * no directory listing, even on the first probe of an index
+    * version), and an exact key-set filter drops same-bucket strangers.
+    * `probe` must carry the index's key columns (extra columns are
+    * ignored) and is assumed probe-sized: its key rows are collected to
+    * the driver ([[probeKeys]]), so the read is the key collect plus the
+    * scan. An empty probe is an empty frame with the stored schema.
     *
     * Completeness: a key's rows all live in exactly one bucket, so the
     * pruned view contains EVERY index row whose key appears in the
@@ -328,29 +365,21 @@ object PrunedIndex {
     * it are exact, not per-bucket approximations. */
   def readPruned(spark: SparkSession, path: String, probe: DataFrame): DataFrame = {
     val (keyCols, numBuckets) = meta(path)
-    val probeKeys = probe.select(keyCols.map(col): _*).distinct()
-    val buckets = probeKeys
-      .select(pmod(hash(keyCols.map(col): _*), lit(numBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val base = manifestFor(spark, path) match {
+    val manifest = manifestFor(spark, path)
+    val stored = manifest.fold(listedBase(spark, path).drop(BucketCol).schema)(
+      storedSchema(spark, path, _))
+    val keys = probeKeys(spark, probe, keyCols, stored, numBuckets)
+    // manifest-selected reads carry no bucket column (the file
+    // selection IS the bucket filter); the listing fallback does
+    val base = manifest match {
       case Some(m) =>
         view(spark, path, m,
-          m.iterator.collect { case (b, fs) if buckets(b) => fs }.flatten.toSeq)
-      case None => listedBase(spark, path)
+          m.iterator.collect { case (b, fs) if keys.buckets(b) => fs }.flatten.toSeq)
+      case None => listedBase(spark, path).where(col(BucketCol).isin(keys.buckets.toSeq: _*))
     }
-    // using-column joins reorder output (key columns first); re-select
-    // the stored data-column order so the pruned view is schema-identical
-    // to [[read]]. Manifest-selected reads carry no bucket column (the
-    // file selection IS the bucket filter); the listing fallback does —
-    // filter it there.
-    val dataCols = base.columns.filterNot(_ == BucketCol)
-    val bucketFiltered =
-      if (base.columns.contains(BucketCol))
-        base.where(col(BucketCol).isin(buckets.toSeq: _*))
-      else base
-    bucketFiltered
-      .join(broadcast(probeKeys), keyCols, "left_semi")
-      .select(dataCols.map(col): _*)
+    // in the stored column order, without the bucket column, so the
+    // pruned view is schema-identical to [[read]]
+    base.where(keys.member).select(stored.fieldNames.map(col): _*)
   }
 
   /** Delta write with REPLACE-by-key semantics and DELTA-BOUNDED write
@@ -362,12 +391,16 @@ object PrunedIndex {
     * index maintenance from an O(index) rewrite into an O(delta
     * buckets) one.
     *
-    * `newKeyRows` must contain ONLY rows whose key is in `probe`
-    * (checked); `probe` is probe-sized (its bucket set is collected).
+    * `probe` is probe-sized: its key rows are collected once
+    * ([[probeKeys]]) and serve both the touched-bucket set and the key
+    * filter. `newKeyRows` must contain ONLY rows whose key is in
+    * `probe`: an `Observation` on the landing write counts the strays,
+    * and any stray fails the call before the layout is published.
     * Same-bucket strangers — stored rows of untouched keys sharing a
     * touched bucket — are read back (touched buckets only) and
     * re-landed with the new rows, since a bucket's file set is replaced
-    * wholesale.
+    * wholesale. So a delta write is the key collect plus its landing
+    * write.
     *
     * `basePath` is the previous version of the layout (e.g. the prior
     * store version's component dir) and is never modified; `path` is a
@@ -385,45 +418,48 @@ object PrunedIndex {
     val (keyCols, numBuckets) = meta(basePath)
     val old = manifestFor(spark, basePath).getOrElse(throw new IllegalStateException(
       s"writeDelta needs a _PRUNE_MANIFEST at $basePath — build the index with PrunedIndex.write"))
-    val probeKeys = probe.select(keyCols.map(col): _*).distinct()
-    val touched = probeKeys
-      .select(pmod(hash(keyCols.map(col): _*), lit(numBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
     require(!newKeyRows.columns.contains(BucketCol),
       s"input already carries a $BucketCol column")
-    // stray keys would silently vanish (their bucket's files are not
-    // rewritten) — fail loudly instead; newKeyRows is delta-bounded so
-    // this check is one cheap job
-    val strayNew = newKeyRows
-      .join(broadcast(probeKeys), keyCols, "left_anti").limit(1).count()
-    require(strayNew == 0L,
-      "writeDelta: newKeyRows contains rows whose key is not in probe")
-    // same-bucket strangers: untouched keys in touched buckets — their
-    // rows must re-land because the bucket's file set is replaced
-    val touchedEntries = old.iterator
-      .collect { case (b, fs) if touched(b) => fs }
-      .flatten.toSeq
     // the stored column order is the layout's schema (never the full
     // view: that would list and validate every index file per delta
     // write, and fail once retention removed an untouched bucket's files)
-    val dataCols = storedSchema(spark, basePath, old).fieldNames.toSeq
-    val strangers =
-      if (touchedEntries.isEmpty) None
-      else Some(readEntries(spark, basePath, touchedEntries)
-        .drop(BucketCol)
-        .join(broadcast(probeKeys), keyCols, "left_anti"))
-    val full = strangers
-      .map(_.select(dataCols.map(col): _*)
-        .unionByName(newKeyRows.select(dataCols.map(col): _*)))
-      .getOrElse(newKeyRows.select(dataCols.map(col): _*))
+    val stored = storedSchema(spark, basePath, old)
+    val dataCols = stored.fieldNames.toSeq.map(col)
+    val keys = probeKeys(spark, probe, keyCols, stored, numBuckets)
+    val inProbe = coalesce(keys.member, lit(false))
+    // stray keys would silently vanish (their bucket's files are not
+    // rewritten): counted on the landing write, rejected before publish.
+    // An observation reports only to the session of the frame it
+    // observes, so the landing write is rooted in `newRows` — a
+    // `newKeyRows` of another session (a streaming micro-batch's) would
+    // otherwise never report, and `strays.get` would block for good.
+    val strays = Observation()
+    val newRows = newKeyRows.select(dataCols: _*)
+      .observe(strays, count(when(!inProbe, 1)).as("n"))
+    // same-bucket strangers: untouched keys in touched buckets — their
+    // rows must re-land because the bucket's file set is replaced
+    val touchedEntries = old.iterator
+      .collect { case (b, fs) if keys.buckets(b) => fs }
+      .flatten.toSeq
+    val full =
+      if (touchedEntries.isEmpty) newRows
+      else newRows.unionByName(readEntries(spark, basePath, touchedEntries)
+        .where(!inProbe).select(dataCols: _*))
     val token = newVersionToken()
     val deltaDirName = s"delta-$token"
     val newLines = landBuckets(full, Fs.child(path, deltaDirName), keyCols,
-      numBuckets, math.max(touched.size, 1), maxRecordsPerFile, s"$deltaDirName/")
+      numBuckets, math.max(keys.buckets.size, 1), maxRecordsPerFile, s"$deltaDirName/")
+    // no metric: the optimizer proved the new rows empty and pruned the
+    // observation with them — no strays
+    if (strays.get.getOrElse("n", 0L).asInstanceOf[Long] > 0L) {
+      Fs.deleteRecursive(Fs.child(path, deltaDirName))
+      throw new IllegalArgumentException(
+        "writeDelta: newKeyRows contains rows whose key is not in probe")
+    }
     // untouched buckets: carry the old entries forward ABSOLUTIZED, so
     // chains of deltas collapse to direct pointers (entry resolution
     // never walks history)
-    val kept = old.iterator.collect { case (b, fs) if !touched(b) =>
+    val kept = old.iterator.collect { case (b, fs) if !keys.buckets(b) =>
       fs.map(e => s"$b\t${resolveEntry(basePath, e)}")
     }.flatten.toSeq
     publish(path, kept ++ newLines, keyCols, numBuckets, token, full.schema)

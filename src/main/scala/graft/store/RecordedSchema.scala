@@ -39,8 +39,16 @@ object RecordedSchema {
   def reader(spark: SparkSession, dir: String, file: String = File): DataFrameReader =
     of(dir, file).fold(spark.read)(spark.read.schema(_))
 
-  def read(spark: SparkSession, dir: String): DataFrame =
-    reader(spark, dir).parquet(dir)
+  def read(spark: SparkSession, dir: String): DataFrame = {
+    val df = reader(spark, dir).parquet(dir)
+    // Spark lists a directory that vanished mid-listing (a version a
+    // concurrent vacuum dropped) as empty, with only a warning; under a
+    // recorded schema that would read as an empty snapshot, so fail the
+    // read whole instead
+    if (!Fs.exists(dir))
+      throw new java.io.FileNotFoundException(s"$dir was removed while it was listed")
+    df
+  }
 
   /** Overwrite `dir` with `df` as plain parquet and record its schema —
     * the write side of every directory [[read]] serves. */

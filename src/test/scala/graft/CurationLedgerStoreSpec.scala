@@ -199,6 +199,19 @@ class CurationLedgerStoreSpec extends AnyFunSuite {
         s"removed ${(before -- outside).take(5)}")
     }
     CurationLedgerStore.compact(spark, root)
+    // no debris in any version or component: every dot-file is the
+    // checksum `.<name>.crc` that Hadoop's local filesystem keeps beside
+    // a file `<name>` Spark wrote; the atomic sidecar writes leave none
+    val orphanDots = {
+      val s = Files.walk(Paths.get(root))
+      try s.filter(Files.isRegularFile(_)).toArray.map(_.asInstanceOf[Path]).filter { f =>
+        val n = f.getFileName.toString
+        n.startsWith(".") && !(n.endsWith(".crc") &&
+          Files.exists(f.resolveSibling(n.stripPrefix(".").stripSuffix(".crc"))))
+      }.map(_.toString).toSeq
+      finally s.close()
+    }
+    assert(orphanDots.isEmpty, s"orphan dot-files: ${orphanDots.sorted.take(5).mkString(", ")}")
     CurationLedgerStore.vacuum(root)
     val cur = CurationLedgerStore.currentPath(root).get
     // data files: parquet parts, not sidecars (`_…`) or checksums (`.…`)

@@ -183,6 +183,10 @@ class ScaleSpec extends AnyFunSuite {
         basePath = s"$dir/v3")
     }
     assert(e.getMessage.contains("probe"))
+    // the rejected delta is never published, and its base reads the same
+    assert(!Fs.exists(s"$dir/v4/_PRUNE_META"))
+    assert(PrunedIndex.read(spark, s"$dir/v3").as[(Long, String, Long)].collect().toSet
+      == expect2)
   }
 
   test("near-dup index: probe reads are bucket-bounded, append rewrites only touched shingle buckets") {

@@ -8,13 +8,17 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.llm.CurationLedgerStore
 import graft.pipeline.DeltaLoadPipeline
 import graft.sinks.ParquetMergeSink
+import graft.sources.PrunedIndex
+import graft.util.Ckpt.RichCkpt
 
 /** Job counts of store reads and of a delta load — window-independent
   * counters, unlike wall time. Every store directory records its schema
   * when it is written, so a store read is one Spark job (the scan, with
   * no footer-inference job before it), and a load's merge commit neither
   * re-infers the current version's schema nor re-reads the version it
-  * just wrote. Suites share one SparkContext, so only jobs carrying this
+  * just wrote. A pruned index probe collects the probe's keys once and
+  * filters by them, so it runs no bucket-set, key-broadcast or
+  * stray-key job. Suites share one SparkContext, so only jobs carrying this
   * test thread's job group are counted. */
 class StoreReadJobsSpec extends AnyFunSuite {
   lazy val spark = GraftSpark.spark
@@ -93,5 +97,42 @@ class StoreReadJobsSpec extends AnyFunSuite {
     // 17 before every store directory recorded its schema and the merge
     // commit observed its row count on the write
     assert(jobs <= 13, s"a delta load ran $jobs Spark jobs")
+  }
+
+  test("PrunedIndex.readPruned: the probe's key collect and the scan, nothing else") {
+    val dir = Files.createTempDirectory("graft_readjobs_pruned").toString
+    val rows = (0L until 200L).map(i => (i, s"k${i % 37}", i % 5))
+    PrunedIndex.write(rows.toDF("id", "k", "b"), s"$dir/one", Seq("k"), numBuckets = 16)
+    PrunedIndex.write(rows.toDF("id", "k", "b"), s"$dir/two", Seq("k", "b"), numBuckets = 16)
+    val keys = Seq("k1", "k5", "k9")
+    val expect = rows.count(r => keys.contains(r._2))
+    var n = 0
+    // a checkpointed probe: one job collects its keys, one job scans
+    val ckptProbe = keys.toDF("k").ckpt()
+    assert(jobsOf { n = PrunedIndex.readPruned(spark, s"$dir/one", ckptProbe).collect().length } == 2)
+    assert(n == expect)
+    // a local relation's keys are on the driver already: the scan only
+    assert(jobsOf {
+      n = PrunedIndex.readPruned(spark, s"$dir/one", keys.toDF("k")).collect().length } == 1)
+    assert(n == expect)
+    val pairs = Seq(("k1", 1L), ("k5", 0L), ("k9", 4L))
+    assert(jobsOf {
+      n = PrunedIndex.readPruned(spark, s"$dir/two", pairs.toDF("k", "b")).collect().length } == 1)
+    assert(n == rows.count(r => pairs.contains((r._2, r._3))))
+  }
+
+  test("PrunedIndex.writeDelta: the probe's key collect and the landing write, no count job") {
+    val dir = Files.createTempDirectory("graft_readjobs_delta").toString
+    val rows = (0L until 200L).map(i => (i, s"k${i % 37}"))
+    PrunedIndex.write(rows.toDF("id", "k"), s"$dir/v1", Seq("k"), numBuckets = 16)
+    val probe = Seq("k1", "k5", "k9").toDF("k").ckpt()
+    val fresh = Seq((1000L, "k1"), (1001L, "k9")).toDF("id", "k")
+    val jobs = jobsOf {
+      PrunedIndex.writeDelta(spark, s"$dir/v2", fresh, probe, basePath = s"$dir/v1") }
+    // 1 key collect + the landing write's 2 (its bucket shuffle, then
+    // the parquet write)
+    assert(jobs == 3, s"writeDelta ran $jobs Spark jobs")
+    assert(PrunedIndex.read(spark, s"$dir/v2").count() ==
+      rows.count(r => !Set("k1", "k5", "k9").contains(r._2)) + 2L)
   }
 }
