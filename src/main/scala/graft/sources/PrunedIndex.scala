@@ -94,6 +94,16 @@ object PrunedIndex {
   private val baseCache =
     scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
 
+  /** Full views ([[read]]), one per (session, path) and manifest
+    * version token. A version's files never change under its token, so
+    * its view is resolved and planned once and every later read of it
+    * runs only the scan (for a small layout, file resolution and
+    * planning are most of a fresh read's wall). Same staleness contract
+    * as the manifest. */
+  private final case class View(version: String, df: DataFrame)
+  private val viewCache =
+    scala.collection.concurrent.TrieMap.empty[(Int, String), View]
+
   private def sessionKey(spark: SparkSession): Int = System.identityHashCode(spark)
 
   private def listedBase(spark: SparkSession, path: String): DataFrame = {
@@ -135,7 +145,10 @@ object PrunedIndex {
     Some((lines(0).split(",").toSeq, lines(1).trim.toInt, token))
   }
 
-  private def manifestFor(spark: SparkSession, path: String): Option[Map[Int, Seq[String]]] = {
+  private def manifestFor(spark: SparkSession, path: String): Option[Map[Int, Seq[String]]] =
+    manifestOf(spark, path).map(_.files)
+
+  private def manifestOf(spark: SparkSession, path: String): Option[Manifest] = {
     if (!Fs.exists(manifestPath(path))) return None
     // manifest exists but meta is missing: a write crashed between the
     // two sidecar lands (manifest-first, meta-last) or a reader raced a
@@ -156,7 +169,7 @@ object PrunedIndex {
       val m = Manifest(token, files)
       manifestCache.put(key, m)
       m
-    }.files)
+    })
   }
 
   /** Write `df` partitioned by `pmod(hash(keyCols…), numBuckets)`.
@@ -308,13 +321,23 @@ object PrunedIndex {
 
   /** Full (unpruned) view — identical to the flat layout for readers
     * that genuinely need every row (rebuild comparisons, compaction).
-    * Listing-free when the manifest sidecar exists; see the staleness
-    * contract above. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    (manifestFor(spark, path) match {
-      case Some(m) => view(spark, path, m, m.valuesIterator.flatten.toSeq)
-      case None => listedBase(spark, path)
-    }).drop(BucketCol)
+    * Listing-free when the manifest sidecar exists, and then planned
+    * once per version (repeat reads return the same planned frame); see
+    * the staleness contract above. */
+  def read(spark: SparkSession, path: String): DataFrame = manifestOf(spark, path) match {
+    case Some(m) =>
+      if (viewCache.size > 64) viewCache.clear()
+      val key = (sessionKey(spark), path)
+      val cached = viewCache.get(key).filter { v =>
+        v.version == m.version && (v.df.sparkSession eq spark) && !spark.sparkContext.isStopped
+      }
+      cached.map(_.df).getOrElse {
+        val df = view(spark, path, m.files, m.files.valuesIterator.flatten.toSeq).drop(BucketCol)
+        viewCache.put(key, View(m.version, df))
+        df
+      }
+    case None => listedBase(spark, path).drop(BucketCol)
+  }
 
   /** A probe's distinct key rows, collected to the driver ONCE — one
     * job for a checkpointed probe, none for a local relation — cast to

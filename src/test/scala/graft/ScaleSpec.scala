@@ -107,6 +107,26 @@ class ScaleSpec extends AnyFunSuite {
     assert(meta.length == 3 && meta(2).trim.nonEmpty, meta.mkString("|"))
   }
 
+  test("PrunedIndex.read: one planned view per version; a rebuild or another session reads afresh") {
+    import graft.sources.PrunedIndex
+    val dir = java.nio.file.Files.createTempDirectory("graft_pidx_view").toString
+    val p = s"$dir/idx"
+    PrunedIndex.write(Seq((1L, "a"), (2L, "b")).toDF("doc_id", "term"), p, Seq("term"), numBuckets = 4)
+    val first = PrunedIndex.read(spark, p)
+    assert(first.collect().length == 2)
+    // a repeat read of the same version is served the planned view
+    assert(PrunedIndex.read(spark, p).queryExecution eq first.queryExecution)
+    // another session plans its own
+    val other = spark.newSession()
+    val inOther = PrunedIndex.read(other, p)
+    assert((inOther.sparkSession eq other) && inOther.collect().length == 2)
+    // a rebuild is a new version token: its rows, never the old view's
+    PrunedIndex.write(Seq((10L, "x")).toDF("doc_id", "term"), p, Seq("term"), numBuckets = 4)
+    val second = PrunedIndex.read(spark, p)
+    assert(!(second.queryExecution eq first.queryExecution))
+    assert(second.as[(Long, String)].collect().toSeq == Seq((10L, "x")))
+  }
+
   test("PrunedIndex: manifest without meta (crashed write) degrades to listing, not an error") {
     import graft.sources.PrunedIndex
     val dir = java.nio.file.Files.createTempDirectory("graft_pidx_crash").toString
