@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query timed at
   * SPARK_GRAFT_SF_DIR; prints ONE JSON line.
   *
@@ -12,7 +10,12 @@ import org.apache.spark.sql.SparkSession
   * tell a host-contention window (elevated loadavg spanning the reps)
   * from a genuine regression without re-running anything — r13's
   * phantom t98/t99 3-5x "regressions" needed a manual solo re-run to
-  * adjudicate precisely because the artifact carried no host state. */
+  * adjudicate precisely because the artifact carried no host state.
+  *
+  * Usage: `runMain graft.Bench`
+  * env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_BENCH_REPS
+  * (default 3), SPARK_GRAFT_BENCH_OUT, SPARK_GRAFT_ONLY (subset),
+  * SPARK_GRAFT_SCALE_PROFILE, SPARK_GRAFT_CPUS ([[GraftSession]]). */
 object Bench {
   private val SuspectFactor = 2.5
   private val SuspectMinDeltaSec = 0.4
@@ -63,46 +66,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Let AQE coalesce by SIZE, not down to defaultParallelism (guide
-      // §2.2 "let AQE coalesce small partitions"): with parallelismFirst
-      // (Spark's default true) every small shuffle keeps ~#cores
-      // partitions, so per-task overhead GROWS with the core count —
-      // measured here as a band of queries running slower on 32 cores
-      // than 8 (PERF_r20 scaling 0.48–0.85). Size-first coalescing is
-      // scale-neutral: partitions above the 64 MB advisory never
-      // coalesce, so a 100 TB shuffle is untouched; only the
-      // tiny-partition overhead regime changes. Parameterised (env),
-      // default size-first.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      // With size-first coalescing the advisory size IS the per-task
-      // grain. 64 MB (Spark's default) suits I/O-bound ETL; this
-      // engine's hot stages are compute-dense on thin rows (shingle
-      // verification, pair cosines, window ranks), where 64 MB
-      // serializes a stage that still has minutes of CPU in it —
-      // measured as a 2× t153 regression. 4 MB keeps overhead-bound
-      // tiny shuffles at 1 task while compute-dense stages keep their
-      // parallelism. Parameterised (env) like the flag above.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "4m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle/spill files on tmpfs: the VM's backing disk stalls
-      // intermittently, which shows up as multi-second spikes on
-      // shuffle-heavy queries; RAM-backed local dirs remove that noise
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.util.Logs.quietLocalCheckpointWarns()
+    val spark = GraftSession.build("graft-bench")
 
-    // Session warm-up outside the timed region: scheduler, codegen and
-    // parquet-footer paths; keeps the first timed query comparable.
-    spark.range(1000000L).selectExpr("sum(id)").collect()
+    // parquet-footer warm-up outside the timed region (the session
+    // warmed its scheduler and codegen paths); keeps the first timed
+    // query comparable.
     spark.read.parquet(s"$sfDir/region.parquet").count()
 
     // Median-of-N per query: NOTES_r1.md documents host stalls spiking
@@ -118,8 +86,7 @@ object Bench {
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // Dev loop: SPARK_GRAFT_ONLY=t76_containment,... times a subset solo
     // (the driver never sets it, so the contract run is unchanged).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = GraftSession.only
     // Scaled profile (sf1+ / SlopeGate-style runs): exclude the tagged
     // oracle-only O(n²) baselines — their cost is quadratic by contract.
     // The driver never sets this env, so the sf0.1 contract run times
@@ -164,8 +131,7 @@ object Bench {
       // storage for the whole 138-query session. Reps of ONE query keep
       // their warm-cache carryover (released only after all reps), so
       // queries_min stays comparable across rounds.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      GraftSession.release(spark)
       (name, runs.map(_._1).sorted.apply(reps / 2), runs)
     }
     val qs = results.map { case (k, med, _) => "\"" + k + "\":" + med }

@@ -1,22 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev tool: dump the formatted physical plan of named SparkEntry
   * queries (for cross-commit plan diffs when a bench number moves).
-  * Usage: runMain graft.PlanDump <sfDir> <name>[,<name>...] */
+  * Usage: `runMain graft.PlanDump <sfDir> <name>[,<name>...]` */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build("graft-plandump")
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"===== $name =====")

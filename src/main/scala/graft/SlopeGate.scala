@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.util.Json.{str => q}
 
 /** Automated slope-regression gate: times EVERY declared SparkEntry
   * query at base scale and at `factor`× (a complete [[ScaledSfDir]]
@@ -27,8 +29,14 @@ import org.apache.spark.sql.SparkSession
   * by construction, as is uncapped winnowing (production path =
   * t120_winnowing_capped, which IS gated).
   *
+  * A query that throws at either scale is recorded as status `error`
+  * (with its message) and the run moves on to the next query: every
+  * query that breaks at scale is reported in one run, and any error
+  * fails the gate like a breached budget.
+  *
   * Usage: `runMain graft.SlopeGate [baseSfDir] [workDir] [factor] [out]`
-  * env: SPARK_GRAFT_SLOPE_REPS (default 2), SPARK_GRAFT_ONLY (subset).
+  * env: SPARK_GRAFT_SLOPE_REPS (default 2), SPARK_GRAFT_ONLY (subset),
+  * SPARK_GRAFT_CPUS ([[GraftSession]]).
   */
 object SlopeGate {
 
@@ -49,7 +57,7 @@ object SlopeGate {
   val SubFloorSec = 5.0
 
   /** Queries timed against the KEY-DECORRELATED documents layout
-    * ([[ScaleBench.scaledFuzzyDocsDf]], factor-bounded per its lcm-130
+    * ([[ScaledSfDir.scaledFuzzyDocsDf]], factor-bounded per its lcm-130
     * note) at BOTH scales instead of the shared layout. The shared
     * corpus appends its junk at the END of each copy's text, so all 10
     * copies of a doc keep an identical 64-char prefix key — the
@@ -100,7 +108,7 @@ object SlopeGate {
       "t97's workload over the bucketed layout; the corpus-derived probe " +
         "(~all buckets hit) is the layout's documented degenerate case - " +
         "same bytes as flat plus the exact semi-join. The pruning WIN case " +
-        "is measured by PrunedProbeBench (NOTES_r13: selective 100-term " +
+        "is measured by StoreProbe pruned (NOTES_r13: selective 100-term " +
         "probe, pruned wall ~flat in corpus size, 0.49x flat at x50) and " +
         "gated by ScaleSpec's strict-subset file assertion"),
     "t65_incremental_minhash" -> Budget(20.0,
@@ -275,20 +283,8 @@ object SlopeGate {
     val factor = if (args.length > 2) args(2).toInt else 10
     val outFile = if (args.length > 3) args(3) else "SLOPES_latest.json"
     val reps = sys.env.getOrElse("SPARK_GRAFT_SLOPE_REPS", "2").toInt.max(1)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark-local")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1000000L).selectExpr("sum(id)").collect() // warm-up
+    val only = GraftSession.only
+    val spark = GraftSession.build("graft-slopegate")
 
     val scaledDir = ScaledSfDir.build(spark, baseDir, s"$workDir/sf_x$factor", factor)
 
@@ -301,19 +297,17 @@ object SlopeGate {
     lazy val fuzzyScaled =
       ScaledSfDir.buildFuzzy(spark, baseDir, s"$workDir/fuzzy_x$factor", factor)
 
-    def minWall(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                dir: String): Double = {
-      val m = (1 to reps).map { _ =>
+    def minWall(fn: (SparkSession, String) => DataFrame, dir: String): Double =
+      try (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, dir).count()
         (System.nanoTime() - t0) / 1e9
       }.min
-      // release persisted state between timed queries (reps above keep
-      // their warm-cache carryover; accumulation across the suite ends)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      m
-    }
+      finally {
+        // release persisted state between timed queries (reps above keep
+        // their warm-cache carryover; accumulation across the suite ends)
+        GraftSession.release(spark)
+      }
 
     val entries = names.map { name =>
       val rule = rules.get(name)
@@ -334,20 +328,25 @@ object SlopeGate {
           val (bDir, sDir) =
             if (fuzzy) (fuzzyBase, fuzzyScaled) else (baseDir, scaledDir)
           val fn = SparkEntry.queries(name)
-          val base = minWall(fn, bDir)
-          val scaled = minWall(fn, sDir)
-          val ratio = if (base > 0) scaled / base else 0.0
-          val status =
-            if (scaled < SubFloorSec) "subfloor"
-            else if (ratio <= budget) "pass"
-            else "fail"
-          println(f"[slope] $name%-28s base=$base%7.2fs x$factor=$scaled%8.2fs " +
-            f"ratio=$ratio%6.2f budget=$budget%5.1f $status")
-          Entry(name, status, base, scaled, ratio, budget, why)
+          try {
+            val base = minWall(fn, bDir)
+            val scaled = minWall(fn, sDir)
+            val ratio = if (base > 0) scaled / base else 0.0
+            val status =
+              if (scaled < SubFloorSec) "subfloor"
+              else if (ratio <= budget) "pass"
+              else "fail"
+            println(f"[slope] $name%-28s base=$base%7.2fs x$factor=$scaled%8.2fs " +
+              f"ratio=$ratio%6.2f budget=$budget%5.1f $status")
+            Entry(name, status, base, scaled, ratio, budget, why)
+          } catch { case e: Throwable =>
+            val msg = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+            println(s"[slope] $name error: $msg")
+            Entry(name, "error", 0, 0, 0, budget, msg)
+          }
       }
     }
 
-    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val body = entries.map { e =>
       val fields = Seq(
         s"${q("status")}: ${q(e.status)}",
@@ -359,18 +358,20 @@ object SlopeGate {
       s"  ${q(e.name)}: {${fields.mkString(", ")}}"
     }
     val nFail = entries.count(_.status == "fail")
+    val nError = entries.count(_.status == "error")
     val summary = s"""  "_summary": {"factor": $factor, "reps": $reps, """ +
       s""""default_budget": $DefaultBudget, "subfloor_sec": $SubFloorSec, """ +
       s""""n": ${entries.size}, "pass": ${entries.count(_.status == "pass")}, """ +
       s""""subfloor": ${entries.count(_.status == "subfloor")}, """ +
-      s""""skipped": ${entries.count(_.status == "skipped")}, "fail": $nFail}"""
+      s""""skipped": ${entries.count(_.status == "skipped")}, "fail": $nFail, """ +
+      s""""error": $nError}"""
     // summary and body joined on ONE non-empty sequence: with an empty
     // entry set (SPARK_GRAFT_ONLY filtering everything out) a naive
     // s"$summary,\n$body" would emit a dangling comma — invalid JSON
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
       (Seq(summary) ++ body).mkString("{\n", ",\n", "\n}\n"))
-    println(s"[slope] wrote $outFile; failures: $nFail")
+    println(s"[slope] wrote $outFile; failures: $nFail; errors: $nError")
     spark.stop()
-    if (nFail > 0) sys.exit(2)
+    if (nFail + nError > 0) sys.exit(2)
   }
 }

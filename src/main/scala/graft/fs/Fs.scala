@@ -111,6 +111,28 @@ object Fs {
   def rename(src: String, dst: String): Boolean =
     fs(src).rename(new Path(src), new Path(dst))
 
+  /** Replace local dir `dst` with a file-by-file copy of local dir `src`
+    * (a store restored from a pristine snapshot). NIO copy, NOT
+    * FileUtil.copy: the checksummed LocalFileSystem would mint a `.crc`
+    * sidecar for `_CURRENT` that the store's NIO-atomic pointer swap
+    * later invalidates (checksum error on the next Hadoop read). */
+  def replaceLocalTree(src: String, dst: String): Unit = {
+    if (exists(dst)) deleteRecursive(dst)
+    val from = java.nio.file.Paths.get(src)
+    val to = java.nio.file.Paths.get(dst)
+    val walk = java.nio.file.Files.walk(from)
+    try walk.forEach { p =>
+      val t = to.resolve(from.relativize(p))
+      if (java.nio.file.Files.isDirectory(p))
+        java.nio.file.Files.createDirectories(t)
+      else {
+        java.nio.file.Files.createDirectories(t.getParent)
+        java.nio.file.Files.copy(p, t,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
+      }
+    } finally walk.close()
+  }
+
   /** Local-filesystem view of a path, when it has one (`file:` scheme or
     * no scheme) — used for OS-level file locks, which only exist there. */
   def localPath(p: String): Option[java.nio.file.Path] = {

@@ -974,7 +974,7 @@ object AnnIndexStore {
         // store recorded its own argmin at write time. (Re-deriving it
         // against every centroid costs O(members·nCells·dim) per
         // probe, growing with the corpus through nCells — measured 55×
-        // at ×50 in AnnStoreProbeBench; the legacy fallback below
+        // at ×50 in StoreProbe ann; the legacy fallback below
         // keeps rank-less stores answering, at that cost.) An id whose
         // primary cell is outside the delta's cells drops (correct: it
         // clusters elsewhere); one whose primary IS a delta cell

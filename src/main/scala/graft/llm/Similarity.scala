@@ -161,7 +161,7 @@ object Similarity {
     * instead of re-deriving the argmin against EVERY centroid — an
     * O(members·nCells·dim) per-probe step that grows with the corpus
     * (nCells ∝ n under auto-sizing) and measured 55× at ×50 corpus in
-    * AnnStoreProbeBench before the rank column existed. */
+    * the ANN store probe (StoreProbe ann) before the rank column existed. */
   def ivfAssignedIndexMultiRanked(corpus: DataFrame, idCol: String,
                                   vecCol: String,
                                   centroids: Array[(Int, Array[Double])],

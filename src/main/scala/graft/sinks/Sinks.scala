@@ -188,19 +188,31 @@ object ParquetMergeSink {
     VersionedRoot.currentVersion(Fs.child(warehouse, table)).filter(_ >= version)
       .map(v => RecordedSchema.read(spark, VersionedRoot.versionDir(Fs.child(warehouse, table), v)).count())
 
-  /** Land `merged` as version `version` and commit it. The schema
-    * sidecar lands before the commit, so a torn write stays
-    * uncommitted; the returned row count is observed on the write
-    * itself instead of re-read from the new version. */
+  /** Land `merged` as version `version` and commit it. The returned row
+    * count is observed on the write itself instead of re-read from the
+    * new version. */
   private def writeVersion(warehouse: String, table: String,
                            merged: DataFrame, version: Long): Long = {
-    val root = Fs.child(warehouse, table)
-    val target = VersionedRoot.versionDir(root, version)
+    val rows = landVersion(warehouse, table, merged, version)
+    VersionedRoot.commit(Fs.child(warehouse, table), version)
+    rows
+  }
+
+  /** Land `merged`'s files and schema sidecar in version `version`'s dir
+    * WITHOUT committing it; returns the observed row count. Spark's file
+    * committer is told not to drop its `_SUCCESS` file there: that name
+    * is [[VersionedRoot]]'s commit marker, so a merge torn after this
+    * step would otherwise already be listed by [[versions]] and served
+    * by [[readVersion]]. */
+  private[graft] def landVersion(warehouse: String, table: String,
+                                 merged: DataFrame, version: Long): Long = {
+    val target = VersionedRoot.versionDir(Fs.child(warehouse, table), version)
     val rows = Observation("rows")
     merged.observe(rows, count(lit(1)).as("n"))
-      .write.mode(SaveMode.Overwrite).parquet(target)
+      .write.mode(SaveMode.Overwrite)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(target)
     RecordedSchema.write(target, merged.schema)
-    VersionedRoot.commit(root, version)
     rows.get("n").asInstanceOf[Long]
   }
 }

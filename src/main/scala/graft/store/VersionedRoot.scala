@@ -29,7 +29,16 @@ import graft.sources.PrunedIndex
   * anywhere before the pointer swap leaves readers on the previous
   * version; the next write allocates past both the last committed
   * version and the pointer ([[nextVersion]]), so it never rewrites a
-  * committed dir in place.
+  * committed dir in place. No Spark writer may drop a `_SUCCESS` in a
+  * version dir ([[graft.sinks.ParquetMergeSink.landVersion]] turns the
+  * file committer's marker off).
+  *
+  * Sink versions torn before that rule carry Spark's `_SUCCESS` without
+  * a commit, and read as committed: [[versions]] lists them and time
+  * travel serves them. Such a dir stays until its version's retry
+  * re-lands it (the overwrite clears the stale marker) or [[vacuum]]
+  * drops it past retention; the layout keeps no pointer history to tell
+  * it from a committed version.
   *
   * Single-writer discipline per root, as the reference's FIFO groups
   * enforce per table: concurrent writers must be serialized by the

@@ -104,6 +104,22 @@ class SinksSpec extends AnyFunSuite {
     assert(ParquetMergeSink.readCurrent(spark, wh, "t").get.count() == 2)
   }
 
+  test("a merge landed but not committed is invisible: no version, no time travel, no current") {
+    val wh = Files.createTempDirectory("graft_torn").toString
+    ParquetMergeSink.merge(spark, wh, "t", Seq((1L, "a")).toDF("id", "s"), Seq("id"), 1L)
+    // a merge torn after its data and schema landed, before the commit
+    assert(ParquetMergeSink.landVersion(wh, "t",
+      Seq((1L, "a"), (2L, "b")).toDF("id", "s"), 2L) == 2L)
+    assert(ParquetMergeSink.versions(wh, "t") == Seq(1L))
+    assert(ParquetMergeSink.readVersion(spark, wh, "t", 2L).get.count() == 1L)
+    assert(ParquetMergeSink.readCurrent(spark, wh, "t").get.count() == 1L)
+    // the retry re-lands the version and commits it
+    assert(ParquetMergeSink.merge(spark, wh, "t", Seq((2L, "b")).toDF("id", "s"),
+      Seq("id"), 2L) == 2L)
+    assert(ParquetMergeSink.versions(wh, "t") == Seq(1L, 2L))
+    assert(ParquetMergeSink.readVersion(spark, wh, "t", 2L).get.count() == 2L)
+  }
+
   test("vacuum sweeps crashed-writer debris past the grace period, spares fresh dirs") {
     val wh = Files.createTempDirectory("graft_debris").toString
     ParquetMergeSink.merge(spark, wh, "t", Seq((1L, "a")).toDF("id", "s"), Seq("id"), 1L)
